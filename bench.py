@@ -94,6 +94,8 @@ REF_PROBES = {"scan": 0.22, "shuffle": 0.47, "cpu": 0.18, "sustain": 0.93}
 _V2_DRIFT_PROBES = ("scan", "shuffle", "cpu")
 
 PROBE_EVERY = 10  # queries between calibration stations
+#: byte cap on the FINAL stdout line; 69 queries serialize to under 3 KB
+FINAL_LINE_MAX = 4096
 
 # Headline set: one per operator family; each must be representative of the
 # shuffle/join/window/text/vector cost envelope, not a microbenchmark.
@@ -510,33 +512,39 @@ def main() -> None:
     except OSError:
         pass  # detail file is best-effort; the stdout lines are the contract
     # FINAL line: compact, bounded size — always fits the driver tail buffer.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total",
-                "value": total,
-                "unit": "sec",
-                # The driver contract's one-line JSON carries the
-                # per-query map INLINE: PERF_r15's per_query came up
-                # empty because the driver tails only this final line
-                # and the map used to ride the earlier detail line
-                # alone. 69 queries ≈ 2.5 KB — still a bounded line.
-                "queries": timings,
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "normalized_total": norm_total,
-                "normalized_total_v2": norm_total_v2,
-                "norm_version": 3,
-                "weighted_queries": len(
-                    [n for n in HEADLINE if n in weights]
-                ),
-                "double_run_delta": delta_summary,
-                "calibration": calibration,
-                "drift": drift_summary,
-                "detail": "BENCH_DETAIL.json",
-            }
-        )
+    final = json.dumps(
+        {
+            "metric": "headline_total",
+            "value": total,
+            "unit": "sec",
+            # The driver contract's one-line JSON carries the
+            # per-query map INLINE: PERF_r15's per_query came up
+            # empty because the driver tails only this final line
+            # and the map used to ride the earlier detail line
+            # alone. 69 queries ≈ 2.5 KB — still a bounded line.
+            "queries": timings,
+            "sf": sf_val,
+            "n_queries": len(timings),
+            "normalized_total": norm_total,
+            "normalized_total_v2": norm_total_v2,
+            "norm_version": 3,
+            "weighted_queries": len(
+                [n for n in HEADLINE if n in weights]
+            ),
+            "double_run_delta": delta_summary,
+            "calibration": calibration,
+            "drift": drift_summary,
+            "detail": "BENCH_DETAIL.json",
+        }
     )
+    # Fail loudly when suite growth outgrows the bound, instead of
+    # printing a line that a bounded tail capture would cut mid-object.
+    if len(final) > FINAL_LINE_MAX:
+        raise SystemExit(
+            f"FINAL line is {len(final)} bytes, over {FINAL_LINE_MAX}: "
+            "move per-query fields to the detail line"
+        )
+    print(final)
     spark.stop()
 
 

@@ -54,7 +54,11 @@ def char_ngrams(col: Column, n: int) -> Column:
     Texts shorter than ``n`` return an EMPTY array (r16, ADVICE r15):
     ``sequence(1, 0)`` is the DESCENDING [1, 0], so the unguarded form
     emitted two bogus duplicate n-grams for short texts — silent wrong
-    output that would diverge from a GENERATE_SERIES-based oracle."""
+    output that would diverge from a GENERATE_SERIES-based oracle.
+
+    NULL input also returns an EMPTY array, not NULL: the length guard is
+    NULL, so the ``otherwise`` arm answers. Callers explode or size the
+    result, where ``[]`` and "no n-grams" mean the same thing."""
 
     def body(s: Column) -> Column:
         return F.when(
@@ -83,7 +87,11 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     r15): ``sequence(1, greatest(size-k+1, 0))`` yields the DESCENDING
     [1, 0] for short docs and ``slice(ws, 0, k)`` then throws
     INVALID_PARAMETER_VALUE.START — the same trap the r15 diff guarded in
-    text_boilerplate_segments, now guarded at the source."""
+    text_boilerplate_segments, now guarded at the source.
+
+    NULL input also returns an EMPTY array, not NULL: the size guard is
+    NULL, so the ``otherwise`` arm answers — the same contract as
+    :func:`char_ngrams`."""
 
     def body(ws: Column) -> Column:
         return F.when(

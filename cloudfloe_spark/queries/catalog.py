@@ -15,10 +15,17 @@ Parity rules every entry follows (FIXTURES.md §4):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import fcntl
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cloudfloe_spark.sources.fsio import file_identity
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -53,6 +60,43 @@ def register(
         return fn
 
     return deco
+
+
+def build_once(
+    tag: str, inputs: Sequence[str], builder: Callable[[str], None]
+) -> str:
+    """The directory of a derived fixture, built on first use.
+
+    The directory is ``<tempdir>/cloudfloe_<tag>/<key>``; ``key`` hashes
+    ``tag`` and the :func:`~cloudfloe_spark.sources.fsio.file_identity`
+    of every input, so a regenerated input (new inode, size or mtime)
+    gets a fresh build instead of a stale table. ``builder(dir)`` fills
+    the empty directory. The build holds an exclusive ``flock`` on the
+    sibling ``<key>.lock`` while it re-checks the ``_BUILT`` marker,
+    clears the directory, runs the builder and writes the marker last:
+    concurrent callers (threads or processes) build once and never see a
+    half-built table, and a builder that raises leaves no marker, so the
+    next call rebuilds. The build runs in place, not in a temporary
+    directory renamed into place, because Iceberg tables record absolute
+    file URIs in manifests and metadata — a renamed table would point at
+    the temporary directory."""
+    ident = [file_identity(p) for p in inputs]
+    key = hashlib.md5(repr((tag, ident)).encode()).hexdigest()[:12]
+    parent = os.path.join(tempfile.gettempdir(), f"cloudfloe_{tag}")
+    out = os.path.join(parent, key)
+    marker = os.path.join(out, "_BUILT")
+    if os.path.exists(marker):
+        return out
+    os.makedirs(parent, exist_ok=True)
+    with open(out + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        if not os.path.exists(marker):
+            shutil.rmtree(out, ignore_errors=True)
+            os.makedirs(out)
+            builder(out)
+            with open(marker, "w") as f:
+                f.write("ok")
+    return out
 
 
 def all_queries() -> dict[str, CatalogQuery]:

@@ -4,12 +4,13 @@ surface (round 8, VERDICT r07 stretch item).
 The CDC view itself (``service/iceberg_local._cdc_view``) is pytest-proven
 against a DuckDB snapshot-diff oracle; these catalog entries put a
 DRIVER-green row over the same surface. Each builds a small deterministic
-Iceberg table from the ``documents`` fixture (build-once per scale-factor
-dir, cached under ``/tmp``), applies a fixed DML script through the
-engine's own ``delete_where`` / ``update_where``, and then reads the
-changelog — so the oracle can reproduce the expected changes with plain
-SQL over the ORIGINAL ``documents`` table, exactly the cross-engine
-contract every other catalog entry follows.
+Iceberg table from the ``documents`` fixture (built once per input state
+by :func:`catalog.build_once`, cached under the temp dir), applies a
+fixed DML script through the engine's own ``delete_where`` /
+``update_where``, and then reads the changelog — so the oracle can
+reproduce the expected changes with plain SQL over the ORIGINAL
+``documents`` table, exactly the cross-engine contract every other
+catalog entry follows.
 
 The fixture build is test scaffolding (driver-side pyarrow read of the
 small documents fixture), not the query path: the registered queries
@@ -22,15 +23,13 @@ delete-referenced files — see SCALING.md `cdc_after_point_delete`).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from cloudfloe_spark.queries.catalog import register
+from cloudfloe_spark.queries.catalog import build_once, register
 
 #: bump to invalidate previously built fixture tables when the DML script
 #: or schema below changes
@@ -45,6 +44,31 @@ _UPDATE_COND = "n_chars % 7 = 1"
 _UPDATE_BUMP = 1000
 
 
+def _build(tag: str, sf_dir: str, build, table: str = "documents") -> str:
+    """:func:`build_once` keyed on one ``sf_dir`` table — a regenerated
+    testdata file gets a fresh fixture, never a stale one whose rows no
+    longer match the oracle's. ``_FIXTURE_VERSION`` rides in the tag."""
+    return build_once(
+        f"{tag}_v{_FIXTURE_VERSION}",
+        [os.path.join(sf_dir, f"{table}.parquet")],
+        build,
+    )
+
+
+def _docs(sf_dir: str, columns: list[str]):
+    """The ``documents`` fixture's ``columns`` as a pyarrow table sorted by
+    ``doc_id`` — the seed rows of most tables below."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(
+        os.path.join(sf_dir, "documents.parquet"), columns=columns
+    ).sort_by("doc_id")
+
+
+def _under(parent: str, *names: str) -> list[str]:
+    return [os.path.join(parent, n) for n in names]
+
+
 def _fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     """Build-once Iceberg table derived from ``documents`` (doc_id, lang,
     n_chars) with the fixed DML script applied; returns (root, from_id,
@@ -53,25 +77,9 @@ def _fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    # Key on the SOURCE file's identity too: if the driver regenerates
-    # the testdata between rounds, a path-only key would serve a stale
-    # cached fixture whose rows no longer match the oracle's documents.
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_changelog", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, _DELETE_COND, timestamp_ms=_T0 + 1000)
@@ -82,8 +90,8 @@ def _fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
             {"n_chars": f"n_chars + {_UPDATE_BUMP}"},
             timestamp_ms=_T0 + 2000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("changelog", sf_dir, build), "t")
     snaps = im.snapshots(root)
     return root, snaps[0]["snapshot-id"], snaps[-1]["snapshot-id"]
 
@@ -321,18 +329,10 @@ def _replica_fixture(spark: SparkSession, sf_dir: str) -> str:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import apply_changelog
 
-    root, s_from, s_to = _fixture(spark, sf_dir)
-    parent = os.path.dirname(root)
-    replica = os.path.join(parent, "replica")
-    done = os.path.join(parent, "_REPLICA_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(replica, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, s_from, s_to = _fixture(spark, sf_dir)
+        replica = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(replica, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         changes = _resolved(
@@ -343,9 +343,8 @@ def _replica_fixture(spark: SparkSession, sf_dir: str) -> str:
         apply_changelog(
             spark, replica, changes, "doc_id", timestamp_ms=_T0 + 5000
         )
-        with open(done, "w") as f:
-            f.write("ok")
-    return replica
+
+    return os.path.join(_build("replica", sf_dir, build), "t")
 
 
 @register(
@@ -538,16 +537,11 @@ def cdc_stream_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         replicate_iceberg_table,
     )
 
-    root, _, _ = _fixture(spark, sf_dir)
-    parent = os.path.dirname(root)
-    replica = os.path.join(parent, "stream_replica")
-    done = os.path.join(parent, "_STREAM_REPLICA_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
 
-        shutil.rmtree(replica, ignore_errors=True)
-        ck = os.path.join(parent, "stream_replica_ck")
-        shutil.rmtree(ck, ignore_errors=True)
+        root, _, _ = _fixture(spark, sf_dir)
+        replica, ck = _under(parent, "t", "ck")
         schema = pa.schema(
             [
                 ("doc_id", pa.int64()),
@@ -576,8 +570,8 @@ def cdc_stream_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             ck,
             base_timestamp_ms=_T0 + 9000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    replica = os.path.join(_build("stream_replica", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, lang, n_chars FROM iceberg_scan('{replica}')",
@@ -613,26 +607,12 @@ def iceberg_partitioned_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-lang aggregate is a map-side-combinable groupBy on the
     partition key over a pruned scan.
     """
-    from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"pdml{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_partdml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(
             root, tbl.schema, partition_by=[("lang", "identity")]
         )
@@ -645,8 +625,8 @@ def iceberg_partitioned_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"n_chars": f"n_chars + {_UPDATE_BUMP}"},
             timestamp_ms=_T0 + 2000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("partdml", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -685,22 +665,9 @@ def iceberg_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import compact_iceberg_table
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"zord{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_zorder", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         live = sum(
@@ -714,8 +681,8 @@ def iceberg_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_file_bytes=max(1, live // 10),
             zorder_by=["doc_id", "n_chars"],
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("zorder", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars FROM iceberg_scan('{root}') "
@@ -755,22 +722,9 @@ def iceberg_cow_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"cow{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_cowdml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(
             root, tbl.schema, partition_by=[("lang", "identity")]
         )
@@ -787,8 +741,8 @@ def iceberg_cow_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             timestamp_ms=_T0 + 2000,
             mode="copy-on-write",
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("cowdml", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -825,22 +779,9 @@ def cdc_cow_commit_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"cowcdc{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_cowcdc", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         update_where(
@@ -851,8 +792,8 @@ def cdc_cow_commit_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             timestamp_ms=_T0 + 1000,
             mode="copy-on-write",
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("cowcdc", sf_dir, build), "t")
     snaps = im.snapshots(root)
     s0, s1 = snaps[0]["snapshot-id"], snaps[-1]["snapshot-id"]
     return _resolved(
@@ -895,23 +836,11 @@ def iceberg_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"sev{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_schemaevo", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         odd = pc.equal(pc.bit_wise_and(tbl["doc_id"], 1), 1)
         gen1 = tbl.filter(pc.invert(odd))
         gen2 = tbl.filter(odd)
@@ -940,8 +869,8 @@ def iceberg_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
             }
         )
         t.append_snapshot([wide], timestamp_ms=_T0 + 60)
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("schemaevo", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT language, count(*) AS n_docs, "
@@ -981,24 +910,12 @@ def stream_upsert_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_stream_to_iceberg,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"ups{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_upsert", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import numpy as np
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         # the correction stream, written as a parquet source dir
@@ -1021,8 +938,8 @@ def stream_upsert_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(parent, "ck"),
             timestamp_ms=_T0 + 1000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("upsert", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, lang, n_chars FROM iceberg_scan('{root}') "
@@ -1059,18 +976,10 @@ def merge_full_table_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import merge_into
 
-    root, _, _ = _fixture(spark, sf_dir)
-    parent = os.path.dirname(root)
-    replica = os.path.join(parent, "merge_replica")
-    done = os.path.join(parent, "_MERGE_REPLICA_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(replica, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, _, _ = _fixture(spark, sf_dir)
+        replica = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(replica, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         src = _resolved(
@@ -1086,8 +995,8 @@ def merge_full_table_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_not_matched_by_source="delete",
             timestamp_ms=_T0 + 5000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    replica = os.path.join(_build("merge_replica", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, lang, n_chars FROM iceberg_scan('{replica}')",
@@ -1130,22 +1039,9 @@ def iceberg_manifest_rewrite_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mrw{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_manifestrw", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, _DELETE_COND, timestamp_ms=_T0 + 1000)
@@ -1165,8 +1061,8 @@ def iceberg_manifest_rewrite_scan(spark: SparkSession, sf_dir: str) -> DataFrame
             im.live_data_paths(root, im.resolve_snapshot(root))
         )
         assert files_after == files_before  # zero data movement
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("manifestrw", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -1215,23 +1111,12 @@ def iceberg_table_service_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"tsvc{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_tablesvc", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, _DELETE_COND, timestamp_ms=_T0 + 1000)
@@ -1283,8 +1168,8 @@ def iceberg_table_service_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             im.position_delete_paths(root, im.resolve_snapshot(root))
         )
         assert n_del <= 1, (n_del, res)
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("tablesvc", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -1322,23 +1207,9 @@ def iceberg_view_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         replace_iceberg_view,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"view{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_views", key)
-    root = os.path.join(parent, "t")
-    vroot = os.path.join(parent, "v")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, vroot = _under(parent, "t", "v")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         create_iceberg_view(
@@ -1353,8 +1224,8 @@ def iceberg_view_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "WHERE lang IS NOT NULL AND n_chars >= 200",
             timestamp_ms=_T0 + 2000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    vroot = os.path.join(_build("views", sf_dir, build), "v")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -1401,25 +1272,11 @@ def iceberg_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvinc{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_inc", key)
-    root = os.path.join(parent, "t")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root, vroot, troot = _under(parent, "t", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         # NULL group keys can't be key-retracted; the engine would fall
         # back to full (sound) — keep the fixture NULL-free so this row
         # PINS the incremental path
@@ -1447,8 +1304,8 @@ def iceberg_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, vroot, troot, timestamp_ms=_T0 + 5000
         )
         assert res["path"] == "incremental-agg", res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_inc", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT lang, n_docs, sum_chars FROM iceberg_scan('{troot}')",
@@ -1494,24 +1351,9 @@ def iceberg_matview_row_incremental(
     )
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvrow{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_row", key)
-    root = os.path.join(parent, "t")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, vroot, troot = _under(parent, "t", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         create_iceberg_view(
@@ -1536,8 +1378,8 @@ def iceberg_matview_row_incremental(
             spark, vroot, troot, timestamp_ms=_T0 + 5000
         )
         assert res["path"] == "incremental-row", res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_row", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars FROM iceberg_scan('{troot}')",
@@ -1581,27 +1423,12 @@ def iceberg_matview_join_incremental(
     )
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvjoin{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_join", key)
-    fact = os.path.join(parent, "fact")
-    dim = os.path.join(parent, "dim")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        fact, dim, vroot, troot = _under(parent, "fact", "dim", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         tf = LocalIcebergTable(fact, tbl.schema)
         tf.append_snapshot([tbl], timestamp_ms=_T0)
         langs = (
@@ -1641,8 +1468,8 @@ def iceberg_matview_join_incremental(
             spark, vroot, troot, timestamp_ms=_T0 + 5000
         )
         assert res["path"] == "incremental-join", res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_join", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars, lang_code FROM iceberg_scan('{troot}')",
@@ -1680,24 +1507,9 @@ def iceberg_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cloudfloe_spark.sources.maintenance import delete_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mv{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview", key)
-    root = os.path.join(parent, "t")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, vroot, troot = _under(parent, "t", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         create_iceberg_view(
@@ -1715,8 +1527,8 @@ def iceberg_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, vroot, troot, timestamp_ms=_T0 + 4000
         )
         assert res.get("skipped") is None  # stale → must have refreshed
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT lang, n_docs FROM iceberg_scan('{troot}')",
@@ -1763,22 +1575,11 @@ def iceberg_concurrent_writers_scan(
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import delete_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"ccw{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_concurrent", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
 
@@ -1812,8 +1613,8 @@ def iceberg_concurrent_writers_scan(
         finally:
             fx.commit_delete_snapshot = real_commit
         assert state["n"] >= 2 and res["snapshot_id"] is not None, res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("concurrent", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -1859,27 +1660,12 @@ def iceberg_matview_join_both_moved(
     )
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvboth{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_both", key)
-    fact = os.path.join(parent, "fact")
-    dim = os.path.join(parent, "dim")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        fact, dim, vroot, troot = _under(parent, "fact", "dim", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         tf = LocalIcebergTable(fact, tbl.schema)
         tf.append_snapshot([tbl], timestamp_ms=_T0)
         langs = (
@@ -1924,8 +1710,8 @@ def iceberg_matview_join_both_moved(
             spark, vroot, troot, timestamp_ms=_T0 + 6000
         )
         assert res["path"] == "incremental-join-both", res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_both", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars, lang_code FROM iceberg_scan('{troot}')",
@@ -1971,25 +1757,9 @@ def iceberg_matview_stream_follow(
         follow_materialized_view,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvfollow{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_follow", key)
-    base = os.path.join(parent, "base")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    ck = os.path.join(parent, "ck")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        base, vroot, troot, ck = _under(parent, "base", "v", "mv", "ck")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(base, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         create_iceberg_view(
@@ -2021,8 +1791,8 @@ def iceberg_matview_stream_follow(
             timestamp_ms=_T0 + 6000,
         )
         assert stats2["batches"] == 0, stats2
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_follow", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars, lang_up FROM iceberg_scan('{troot}')",
@@ -2061,22 +1831,11 @@ def iceberg_v3_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit_deletion_vector_snapshot,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v3dv{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3dv", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         # deleted positions per data file, straight from the written
@@ -2093,8 +1852,8 @@ def iceberg_v3_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             root, dvs, timestamp_ms=_T0 + 1000
         )
         assert im.load_metadata(root)["format-version"] == 3
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3dv", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -2137,22 +1896,9 @@ def iceberg_v3_migrate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v3mig{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3mig", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, _DELETE_COND, timestamp_ms=_T0 + 1000)
@@ -2171,8 +1917,8 @@ def iceberg_v3_migrate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert not im.position_delete_paths(
             root, im.resolve_snapshot(root)
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3mig", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars "
@@ -2220,27 +1966,12 @@ def iceberg_matview_left_join_incremental(
     )
     from cloudfloe_spark.sources.maintenance import delete_where, update_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvljoin{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_matview_ljoin", key)
-    fact = os.path.join(parent, "fact")
-    dim = os.path.join(parent, "dim")
-    vroot = os.path.join(parent, "v")
-    troot = os.path.join(parent, "mv")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        fact, dim, vroot, troot = _under(parent, "fact", "dim", "v", "mv")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         tf = LocalIcebergTable(fact, tbl.schema)
         tf.append_snapshot([tbl], timestamp_ms=_T0)
         langs = (
@@ -2284,8 +2015,8 @@ def iceberg_matview_left_join_incremental(
             spark, vroot, troot, timestamp_ms=_T0 + 5000
         )
         assert res["path"] == "incremental-join", res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("matview_ljoin", sf_dir, build), "mv")
     return _resolved(
         spark,
         f"SELECT doc_id, n_chars, lang_code FROM iceberg_scan('{troot}')",
@@ -2328,22 +2059,9 @@ def iceberg_v3_defaults_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import delete_where
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v3def{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3def", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         ids = tbl["doc_id"].to_numpy(zero_copy_only=False)
         pre_mask = (ids % 3) == 0
         pre = tbl.filter(pa.array(pre_mask))
@@ -2367,8 +2085,8 @@ def iceberg_v3_defaults_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert res.get("deletion_vectors"), res  # defaults table is v3
         assert im.load_metadata(root)["format-version"] == 3
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3def", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT lang, quality_tier, count(*) AS n_docs, "
@@ -2418,25 +2136,9 @@ def iceberg_matview_stream_follow_agg(
         follow_materialized_view,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"mvfollowagg{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_mvfollowagg", key)
-    base = os.path.join(parent, "base")
-    vroot = os.path.join(parent, "view")
-    troot = os.path.join(parent, "target")
-    ck = os.path.join(parent, "ck")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        base, vroot, troot, ck = _under(parent, "base", "view", "target", "ck")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(base, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         create_iceberg_view(
@@ -2470,8 +2172,8 @@ def iceberg_matview_stream_follow_agg(
             timestamp_ms=_T0 + 6000,
         )
         assert stats2["batches"] == 0, stats2
-        with open(done, "w") as f:
-            f.write("ok")
+
+    troot = os.path.join(_build("mvfollowagg", sf_dir, build), "target")
     return _resolved(
         spark,
         f"SELECT lang, n_docs, sum_chars FROM iceberg_scan('{troot}')",
@@ -2520,23 +2222,9 @@ def iceberg_cdc_lineage_compaction(
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"rlcdc{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_rlcdc", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    sid_file = os.path.join(parent, "_S0")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root, sid_file = _under(parent, "t", "_S0")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema, row_lineage=True)
         s0 = t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, _DELETE_COND, timestamp_ms=_T0 + 1000)
@@ -2552,8 +2240,9 @@ def iceberg_cdc_lineage_compaction(
         assert im.load_metadata(root)["next-row-id"] > 0
         with open(sid_file, "w") as f:
             f.write(str(s0))
-        with open(done, "w") as f:
-            f.write("ok")
+
+    parent = _build("rlcdc", sf_dir, build)
+    root, sid_file = _under(parent, "t", "_S0")
     with open(sid_file) as f:
         s0 = int(f.read().strip())
     cur = im.resolve_snapshot(root)["snapshot-id"]
@@ -2609,22 +2298,9 @@ def iceberg_row_lineage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"rlseq{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_rlscan", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema, row_lineage=True)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         res = delete_where(
@@ -2638,8 +2314,8 @@ def iceberg_row_lineage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         res2 = compact_iceberg_table(spark, root, timestamp_ms=_T0 + 3000)
         assert res2["snapshot_id"], res2
         assert im.load_metadata(root)["next-row-id"] >= tbl.num_rows
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("rlscan", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, lang, n_chars, _row_id, "
@@ -2696,23 +2372,11 @@ def iceberg_v3_variant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v3var{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3variant", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "source", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "source", "n_chars"])
         rows = tbl.to_pylist()
         enc = []
         for r in rows:
@@ -2738,8 +2402,8 @@ def iceberg_v3_variant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = LocalIcebergTable(root, out.schema, variant_cols=("payload",))
         t.append_snapshot([out], timestamp_ms=_T0)
         assert im.load_metadata(root)["format-version"] == 3
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3variant", sf_dir, build), "t")
     return _resolved(
         spark,
         "SELECT variant_get(parse_json(payload), '$.lang', 'string') "
@@ -2782,20 +2446,12 @@ def iceberg_v3_timestamp_ns_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(
-        f"v3ns{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3ns", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
+        root = os.path.join(parent, "t")
         tbl = pq.read_table(
             os.path.join(sf_dir, "events.parquet"),
             columns=["event_id", "ts", "event_type"],
@@ -2824,8 +2480,8 @@ def iceberg_v3_timestamp_ns_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f["type"] == "timestamp_ns"
             for f in meta["schemas"][0]["fields"]
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3ns", sf_dir, build, table="events"), "t")
     return _resolved(
         spark,
         "SELECT event_type, date_trunc('hour', ts) AS hr, "
@@ -2876,22 +2532,9 @@ def iceberg_analyze_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"thstats{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_thstats", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "source", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "source", "n_chars"])
         t = LocalIcebergTable(root, tbl.schema)
         t.append_snapshot([tbl], timestamp_ms=_T0)
         delete_where(spark, root, "n_chars % 9 = 0", timestamp_ms=_T0 + 1000)
@@ -2901,8 +2544,8 @@ def iceberg_analyze_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert res["statistics_path"].endswith(".stats"), res
         assert im.load_metadata(root)["statistics"], res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("thstats", sf_dir, build), "t")
     return _resolved(
         spark,
         "SELECT column, ndv, null_count, row_count "
@@ -2949,23 +2592,11 @@ def iceberg_v3_variant_shredded_scan(
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v3shred{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_v3shred", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         objs = []
         for r in tbl.to_pylist():
             if r["doc_id"] % 13 == 0:
@@ -2995,8 +2626,8 @@ def iceberg_v3_variant_shredded_scan(
         t = LocalIcebergTable(root, out.schema, variant_cols=("payload",))
         t.append_snapshot([out], timestamp_ms=_T0)
         assert im.load_metadata(root)["format-version"] == 3
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("v3shred", sf_dir, build), "t")
     return _resolved(
         spark,
         "SELECT variant_get(parse_json(payload), '$.lang', 'string') "
@@ -3039,22 +2670,9 @@ def iceberg_partition_stats_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"pstats{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_pstats", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        import pyarrow.parquet as pq
-
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         t = LocalIcebergTable(
             root, tbl.schema, partition_by=[("lang", "identity")]
         )
@@ -3063,8 +2681,8 @@ def iceberg_partition_stats_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = compute_partition_stats(root, timestamp_ms=_T0 + 2000)
         assert res["statistics_path"].endswith(".parquet"), res
         assert im.load_metadata(root)["partition-statistics"], res
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("pstats", sf_dir, build), "t")
     return _resolved(
         spark,
         "SELECT lang, data_record_count, data_file_count "
@@ -3100,24 +2718,11 @@ def iceberg_cdc_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"cdcvar{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_cdcvar", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    sid_file = os.path.join(parent, "_S0")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root, sid_file = _under(parent, "t", "_S0")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         vt = pa.struct([("metadata", pa.binary()), ("value", pa.binary())])
 
@@ -3165,8 +2770,9 @@ def iceberg_cdc_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.position_delete_snapshot(dels, timestamp_ms=_T0 + 2000)
         with open(sid_file, "w") as f:
             f.write(str(s0))
-        with open(done, "w") as f:
-            f.write("ok")
+
+    parent = _build("cdcvar", sf_dir, build)
+    root, sid_file = _under(parent, "t", "_S0")
     with open(sid_file) as f:
         s0 = int(f.read().strip())
     cur = im.resolve_snapshot(root)["snapshot-id"]
@@ -3223,23 +2829,11 @@ def iceberg_variant_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"vardml{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_vardml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         vt = pa.struct([("metadata", pa.binary()), ("value", pa.binary())])
         col = pa.array(
@@ -3289,8 +2883,8 @@ def iceberg_variant_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"doc_id": "doc_id + 1000000"},
             timestamp_ms=_T0 + 3000, mode="copy-on-write",
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("vardml", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, payload FROM iceberg_scan('{root}')",
@@ -3342,20 +2936,12 @@ def iceberg_ns_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(
-        f"nsdml{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_nsdml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
+        root = os.path.join(parent, "t")
         tbl = pq.read_table(
             os.path.join(sf_dir, "events.parquet"),
             columns=["event_id", "ts", "event_type"],
@@ -3387,8 +2973,8 @@ def iceberg_ns_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"event_id": "event_id + 10000000"},
             timestamp_ms=_T0 + 2000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("nsdml", sf_dir, build, table="events"), "t")
     return _resolved(
         spark,
         "SELECT event_type, date_trunc('hour', ts) AS hr, "
@@ -3430,23 +3016,11 @@ def iceberg_variant_typed_pushdown(
     from cloudfloe_spark.functions.variant import shred_rows
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"vtyped{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_vtyped", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         shred = {
             "kind": "object",
@@ -3473,8 +3047,8 @@ def iceberg_variant_typed_pushdown(
         )
         t = LocalIcebergTable(root, data.schema, variant_cols=("payload",))
         t.append_snapshot([data], timestamp_ms=_T0)
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("vtyped", sf_dir, build), "t")
     return _resolved(
         spark,
         "SELECT variant_get(parse_json(payload), '$.lang', 'string') "
@@ -3524,20 +3098,9 @@ def iceberg_shredded_compaction_scan(
         compact_iceberg_table,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"shcmp{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_shcmp", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         even = [r for r in rows if r["doc_id"] % 2 == 0]
         odd = [r for r in rows if r["doc_id"] % 2 == 1]
@@ -3606,9 +3169,7 @@ def iceberg_shredded_compaction_scan(
         snap0 = im.resolve_snapshot(root)
         dels = []
         for p in im.live_data_paths(root, snap0):
-            ids = pq.read_table(
-                p.removeprefix("file://"), columns=["doc_id"]
-            )["doc_id"].to_pylist()
+            ids = pq.read_table(p, columns=["doc_id"])["doc_id"].to_pylist()
             rows_in = even if ids and ids[0] % 2 == 0 else odd
             dels += [
                 (p, pos)
@@ -3620,12 +3181,12 @@ def iceberg_shredded_compaction_scan(
         compact_iceberg_table(spark, root, timestamp_ms=_T0 + 3000)
         snap = im.resolve_snapshot(root)
         for p in im.live_data_paths(root, snap):
-            sch = pq.read_schema(p.removeprefix("file://"))
+            sch = pq.read_schema(p)
             pt = sch.field("payload").type
             subs = {pt.field(i).name for i in range(pt.num_fields)}
             assert subs == {"metadata", "value"}, subs
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("shcmp", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, payload FROM iceberg_scan('{root}')",
@@ -3669,7 +3230,6 @@ def iceberg_v3_branch_dml_scan(
     ``commit_deletion_vector_snapshot(parent_ref=...)`` /
     ``publish_ref``)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from cloudfloe_spark.functions.variant import encode_variant
     from cloudfloe_spark.sources import iceberg_meta as im
@@ -3683,20 +3243,9 @@ def iceberg_v3_branch_dml_scan(
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"wapdml{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_wapdml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         vt = pa.struct([("metadata", pa.binary()), ("value", pa.binary())])
         col = pa.array(
@@ -3756,8 +3305,8 @@ def iceberg_v3_branch_dml_scan(
             im.resolve_snapshot(root)["snapshot-id"] == s0
         ), "staged branch update moved main"
         publish_ref(root, "wap", timestamp_ms=_T0 + 3000)
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("wapdml", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, payload FROM iceberg_scan('{root}')",
@@ -3803,7 +3352,6 @@ def iceberg_shredded_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sources/maintenance.py` ``_dml_raw_scan`` / ``_shred_group_scan``).
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from cloudfloe_spark.functions.variant import encode_variant, shred_rows
     from cloudfloe_spark.sources import iceberg_meta as im
@@ -3813,20 +3361,9 @@ def iceberg_shredded_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"shdml{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_shdml", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         even = [r for r in rows if r["doc_id"] % 2 == 0]
         odd = [r for r in rows if r["doc_id"] % 2 == 1]
@@ -3915,8 +3452,8 @@ def iceberg_shredded_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             timestamp_ms=_T0 + 3000,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("shdml", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT doc_id, payload FROM iceberg_scan('{root}')",
@@ -3963,25 +3500,13 @@ def iceberg_shredded_renamed_scan(
     metadata-only there too.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from cloudfloe_spark.functions.variant import encode_variant, shred_rows
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"shren{_FIXTURE_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_shren", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
-        shutil.rmtree(parent, ignore_errors=True)
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"),
-            columns=["doc_id", "lang", "n_chars"],
-        ).sort_by("doc_id")
+    def build(parent: str) -> None:
+        root = os.path.join(parent, "t")
+        tbl = _docs(sf_dir, ["doc_id", "lang", "n_chars"])
         rows = tbl.to_pylist()
         even = [r for r in rows if r["doc_id"] % 2 == 0]
         odd = [r for r in rows if r["doc_id"] % 2 == 1]
@@ -4047,8 +3572,8 @@ def iceberg_shredded_renamed_scan(
         t.add_column(
             "quality", pa.int64(), timestamp_ms=_T0 + 4000, default=7
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = os.path.join(_build("shren", sf_dir, build), "t")
     return _resolved(
         spark,
         f"SELECT document_id, quality, meta FROM iceberg_scan('{root}')",

@@ -22,7 +22,7 @@ from cloudfloe_spark.functions.multimodal import (
     sample_frames,
     with_fake_media,
 )
-from cloudfloe_spark.queries.catalog import register
+from cloudfloe_spark.queries.catalog import build_once, register
 from cloudfloe_spark.sources.tables import load_table, spread
 
 # SQL twins of functions.multimodal.fake_decode_dims / with_fake_media —
@@ -233,9 +233,7 @@ def _geo_fixture(sf_dir: str) -> str:
     WKB POINT per document, coordinates synthesized from doc_id /
     n_chars as exact dyadic doubles, column declared
     ``geometry(srid:4326)``."""
-    import hashlib
     import os
-    import shutil
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
     from cloudfloe_spark.sources import iceberg_meta as im
@@ -244,19 +242,11 @@ def _geo_fixture(sf_dir: str) -> str:
         write_next_metadata_version,
     )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"geobbox1|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_geobbox", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
+        root = os.path.join(parent, "t")
         tbl = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "lang", "n_chars"],
@@ -287,9 +277,9 @@ def _geo_fixture(sf_dir: str) -> str:
                     f["type"] = "geometry(srid:4326)"
         meta["format-version"] = 3
         write_next_metadata_version(root, meta)
-        with open(done, "w") as f:
-            f.write("ok")
-    return root
+
+    docs = os.path.join(sf_dir, "documents.parquet")
+    return os.path.join(build_once("geobbox_v1", [docs], build), "t")
 
 
 @register(
@@ -484,59 +474,25 @@ def geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("tile").agg(F.count("*").alias("n"))
 
 
-@register(
-    "iceberg_geo_scan_pushdown",
-    oracle="""
-        SELECT lang, count(*) AS n
-        FROM documents
-        WHERE (CAST(doc_id % 360 AS DOUBLE) - 180.0 + 0.25)
-                  BETWEEN -50.0 AND -10.0
-        GROUP BY lang
-    """,
-    tags=("geo", "v3", "geometry", "pushdown", "iceberg"),
-)
-def iceberg_geo_scan_pushdown(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Geometry bbox FILE SKIPPING driver-checked (r14, VERDICT r13 #6
-    optional leg): the fixture writes the corpus as four spatially
-    DISJOINT files (x bands of 90°), ``compute_geo_bounds`` stamps each
-    file's envelope into the manifest bounds via a manifest rewrite,
-    and ``iceberg_geo_scan(root, col, x0, y0, x1, y1)`` prunes to the
-    one band intersecting the query window before applying the exact
-    row-level envelope intersect — the fixture asserts exactly one
-    file survives at execution. Oracle: the same interval arithmetic.
-
-    Scale shape: the skip is manifest-metadata work (no parquet
-    opened for pruned bands); the survivors pay one Arrow decode +
-    JVM filter, blobs never shuffle."""
-    import hashlib
+def _geo_skip_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Deterministic v3 geometry table for the bbox file-skip entry: the
+    corpus as four spatially DISJOINT files (x bands of 90°) whose
+    envelopes ``compute_geo_bounds`` stamps into the manifest bounds."""
     import os
-    import shutil
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
-    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import (
         LocalIcebergTable,
         write_next_metadata_version,
     )
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
-    from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"geoskip1|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_geoskip", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
+        root = os.path.join(parent, "t")
         tbl = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "lang", "n_chars"],
@@ -582,8 +538,41 @@ def iceberg_geo_scan_pushdown(
             spark, root, timestamp_ms=1700000001000
         )
         assert rep["files_stamped"] == len(tables), rep
-        with open(done, "w") as f:
-            f.write("ok")
+
+    docs = os.path.join(sf_dir, "documents.parquet")
+    return os.path.join(build_once("geoskip_v1", [docs], build), "t")
+
+
+@register(
+    "iceberg_geo_scan_pushdown",
+    oracle="""
+        SELECT lang, count(*) AS n
+        FROM documents
+        WHERE (CAST(doc_id % 360 AS DOUBLE) - 180.0 + 0.25)
+                  BETWEEN -50.0 AND -10.0
+        GROUP BY lang
+    """,
+    tags=("geo", "v3", "geometry", "pushdown", "iceberg"),
+)
+def iceberg_geo_scan_pushdown(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Geometry bbox FILE SKIPPING driver-checked (r14, VERDICT r13 #6
+    optional leg): the fixture writes the corpus as four spatially
+    DISJOINT files (x bands of 90°), ``compute_geo_bounds`` stamps each
+    file's envelope into the manifest bounds via a manifest rewrite,
+    and ``iceberg_geo_scan(root, col, x0, y0, x1, y1)`` prunes to the
+    one band intersecting the query window before applying the exact
+    row-level envelope intersect — the fixture asserts exactly one
+    file survives at execution. Oracle: the same interval arithmetic.
+
+    Scale shape: the skip is manifest-metadata work (no parquet
+    opened for pruned bands); the survivors pay one Arrow decode +
+    JVM filter, blobs never shuffle."""
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+    from cloudfloe_spark.sources.tables import ensure_runtime_conf
+
+    root = _geo_skip_fixture(spark, sf_dir)
     # Resolve in the CALLER's session (r16): a per-invocation newSession
     # had an empty temp-view namespace, so the resolver re-built the scan
     # view — parquet schema inference included — on every call. The shared
@@ -612,14 +601,9 @@ def _geog_fixture(spark: SparkSession, sf_dir: str) -> str:
     hug BOTH sides of the antimeridian (its stamped interval WRAPS:
     lower.x > upper.x, the v3 convention); ``compute_geo_bounds``
     stamps all three."""
-    import hashlib
     import os
-    import shutil
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
-    from cloudfloe_spark.service.iceberg_local import (
-        resolve_iceberg_reads,
-    )
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import (
         LocalIcebergTable,
@@ -627,19 +611,11 @@ def _geog_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"geogwrap1|{os.path.abspath(sf_dir)}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    parent = os.path.join("/tmp", "cloudfloe_geogwrap", key)
-    root = os.path.join(parent, "t")
-    done = os.path.join(parent, "_BUILT")
-    if not os.path.exists(done):
+    def build(parent: str) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        shutil.rmtree(parent, ignore_errors=True)
+        root = os.path.join(parent, "t")
         tbl = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "lang", "n_chars"],
@@ -705,9 +681,9 @@ def _geog_fixture(spark: SparkSession, sf_dir: str) -> str:
             hi = float((s["upper"] or {})["geo"].split()[0])
             wraps += int(lo > hi)
         assert wraps == 1, f"expected one wrapped file interval: {wraps}"
-        with open(done, "w") as f:
-            f.write("ok")
-    return root
+
+    docs = os.path.join(sf_dir, "documents.parquet")
+    return os.path.join(build_once("geogwrap_v1", [docs], build), "t")
 
 
 @register(

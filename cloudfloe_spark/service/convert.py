@@ -39,6 +39,7 @@ import re
 from typing import Optional
 
 from cloudfloe_spark.service.config import ConnectionConfig
+from cloudfloe_spark.sources.fsio import local_path
 
 CATALOG_NAME = "iceberg_catalog"  # reference's attach name (backend/main.py:340)
 
@@ -104,18 +105,10 @@ def _strip_glob(path: str) -> str:
     return "/".join(parts)
 
 
-def _local_dir(path: str) -> Optional[str]:
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if path.startswith("/"):
-        return path
-    return None
-
-
 def _iceberg_data_dir(root: str) -> Optional[str]:
     """``<root>/data`` if ``root`` is locally checkable and laid out as an
     Iceberg table; None when undecidable (remote paths)."""
-    local = _local_dir(root)
+    local = local_path(root)
     if local is not None and os.path.isdir(os.path.join(local, "data")):
         return f"{root}/data"
     return None

@@ -45,6 +45,7 @@ from cloudfloe_spark.service.convert import (
     transpile_duckdb,
 )
 from cloudfloe_spark.service.errors import CloudfloeError, bad_request
+from cloudfloe_spark.sources.fsio import local_path
 from cloudfloe_spark.sources.tables import ensure_runtime_conf
 from cloudfloe_spark.service.validation import (
     assert_plan_is_query,
@@ -263,14 +264,6 @@ def request_session(spark, config: Optional[ConnectionConfig]):
 # --- A10: table probe ----------------------------------------------------------
 
 
-def _local_path(table_path: str) -> Optional[str]:
-    if table_path.startswith("file://"):
-        return table_path[len("file://"):]
-    if table_path.startswith("/"):
-        return table_path
-    return None
-
-
 def probe_table(spark, table_path: str) -> TableInfo:
     """Probe a table root and return :class:`TableInfo`
     (`backend/main.py:452-526`).
@@ -287,7 +280,7 @@ def probe_table(spark, table_path: str) -> TableInfo:
 
     ≥1 sub-probe must succeed, mirroring `backend/main.py:521-524`.
     """
-    local = _local_path(table_path)
+    local = local_path(table_path)
     if local is None:
         scheme = table_path.split("://", 1)[0]
         if not filesystem_available(spark, scheme):
@@ -554,10 +547,8 @@ def _bytes_scanned(df) -> int:
     total = 0
     try:
         for uri in set(df.inputFiles()):
-            if uri.startswith("file:"):
-                p = uri[5:]
-                while p.startswith("//"):
-                    p = p[1:]
+            p = local_path(uri)
+            if p is not None:
                 try:
                     total += os.path.getsize(p)
                 except OSError:
@@ -706,7 +697,7 @@ def run_maintenance_compact(
             "Maintenance API is disabled. Set CLOUDFLOE_ENABLE_MAINTENANCE=1 "
             "to allow table-rewriting operations.",
         )
-    local = _local_path(config.tablePath)
+    local = local_path(config.tablePath)
     if local is None:
         raise bad_request(
             "Maintenance supports local table roots only; compact remote "

@@ -22,6 +22,7 @@ import re
 
 from cloudfloe_spark.service.convert import _sub_outside_literals
 from cloudfloe_spark.service.errors import bad_request
+from cloudfloe_spark.sources.fsio import local_path
 
 _READ_CSV_RE = re.compile(
     r"read_csv(?:_auto)?\(\s*['\"]([^'\"]+)['\"]\s*\)", re.IGNORECASE
@@ -29,14 +30,6 @@ _READ_CSV_RE = re.compile(
 _READ_JSON_RE = re.compile(
     r"read_json(?:_auto)?\(\s*['\"]([^'\"]+)['\"]\s*\)", re.IGNORECASE
 )
-
-
-def _local(path: str) -> str | None:
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if path.startswith("/"):
-        return path
-    return None
 
 
 def _view_name(kind: str, path: str) -> str:
@@ -52,7 +45,7 @@ def resolve_file_reads(sess, sql: str) -> str:
     temp-view references backed by the matching Spark reader."""
 
     def _csv(m: re.Match) -> str:
-        path = _local(m.group(1))
+        path = local_path(m.group(1))
         if path is None:
             return m.group(0)
         if not os.path.exists(path):
@@ -67,7 +60,7 @@ def resolve_file_reads(sess, sql: str) -> str:
         return name
 
     def _json(m: re.Match) -> str:
-        path = _local(m.group(1))
+        path = local_path(m.group(1))
         if path is None:
             return m.group(0)
         if not os.path.exists(path):

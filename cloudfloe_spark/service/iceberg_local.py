@@ -53,12 +53,12 @@ from __future__ import annotations
 
 import datetime
 import hashlib
-import os
 import re
 import weakref
 
 from cloudfloe_spark.service.convert import CATALOG_NAME, _sub_outside_literals
 from cloudfloe_spark.service.errors import bad_request
+from cloudfloe_spark.sources import fsio
 from cloudfloe_spark.sources import iceberg_meta as im
 
 _SCAN_TT_RE = re.compile(
@@ -146,14 +146,6 @@ _PARTITION_STATS_RE = re.compile(
 )
 
 
-def _local_root(path: str) -> str | None:
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if path.startswith("/"):
-        return path
-    return None
-
-
 def _readable_root(sess, path: str) -> str | None:
     """Root the jarless reader can serve: a local path, or a
     scheme-qualified URI whose scheme the shared JVM's Hadoop FileSystem
@@ -161,12 +153,10 @@ def _readable_root(sess, path: str) -> str | None:
     schemes — e.g. the ViewFs-served ``s3://`` test seam — otherwise).
     Metadata JSON / Avro manifests stream through :mod:`sources.fsio`;
     data parquet reads resolve the scheme natively in ``sess.read``."""
-    local = _local_root(path)
+    local = fsio.local_path(path)
     if local is not None:
         return local
     if "://" in path:
-        from cloudfloe_spark.sources import fsio
-
         scheme = path.split("://", 1)[0]
         if fsio.scheme_served(sess, scheme):
             return path
@@ -221,19 +211,19 @@ def _view_registry(sess) -> dict:
 
 
 def _meta_signature(metadata_path) -> tuple:
-    """Identity of the resolved metadata file: (path, mtime_ns, size) for
-    local files — a fixture rebuilt at the same path must miss the view
-    registry — and path-only for remote schemes (Iceberg version files
-    are immutable; commits write new ones)."""
+    """Identity of the resolved metadata file: the path plus
+    :func:`fsio.file_identity` for local files — a fixture rebuilt at the
+    same path must miss the view registry even when size and mtime
+    match — and path-only for remote schemes (Iceberg version files are
+    immutable; commits write new ones)."""
     p = str(metadata_path)
-    lp = p[len("file://"):] if p.startswith("file://") else p
-    if lp.startswith("/"):
-        try:
-            st = os.stat(lp)
-            return (p, st.st_mtime_ns, st.st_size)
-        except OSError:
-            return (p, None, None)
-    return (p,)
+    lp = fsio.local_path(p)
+    if lp is None:
+        return (p,)
+    try:
+        return (p, *fsio.file_identity(lp))
+    except OSError:
+        return (p, None)
 
 
 def _snapshot_view(
@@ -773,8 +763,7 @@ def _ndv_stats(root: str, metadata_path, snapshot_id) -> "dict | None":
         if rec.get("snapshot-id") != snapshot_id:
             continue
         p = str(rec.get("statistics-path") or "")
-        if p.startswith("file://"):
-            p = p[7:]
+        p = fsio.local_path(p) or p
         if any(
             b.get("type") == "apache-datasketches-theta-v1"
             for b in rec.get("blob-metadata") or []
@@ -2880,7 +2869,7 @@ def _column_stats_view(sess, root: str) -> str:
         )
     entry = entries[-1]
     path = entry.get("statistics-path", "")
-    local = path[7:] if path.startswith("file://") else path
+    local = fsio.local_path(path) or path
     cur = meta.get("current-snapshot-id")
     blob_meta = entry.get("blob-metadata") or []
     if any(
@@ -2940,7 +2929,7 @@ def _partition_stats_view(sess, root: str) -> str:
         )
     entry = entries[-1]
     path = entry.get("statistics-path", "")
-    local = path[7:] if path.startswith("file://") else path
+    local = fsio.local_path(path) or path
     try:
         tbl = _pq.read_table(local)
     except OSError as e:
@@ -3141,9 +3130,7 @@ def _scan_plan_view(sess, root: str, predicate: str | None) -> str:
             import os as _os
 
             try:
-                return _os.path.getsize(
-                    p[7:] if p.startswith("file://") else p
-                )
+                return _os.path.getsize(fsio.local_path(p) or p)
             except OSError:
                 return 0
 

@@ -21,6 +21,7 @@ boundary, and always as one whole-file byte array — no per-byte calls.
 
 from __future__ import annotations
 
+import os
 import posixpath
 
 from pyspark.sql import SparkSession
@@ -36,6 +37,37 @@ def is_remote(path: str) -> bool:
     if "://" not in path:
         return False
     return not path.startswith("file://")
+
+
+def local_path(uri: str) -> str | None:
+    """The absolute local path ``uri`` names, or None when it names none.
+
+    ``/x``, ``file:///x`` and ``file:/x`` (the single-slash form Spark's
+    ``inputFiles()`` returns) all map to ``/x``. Remote URIs (``s3://…``)
+    and relative paths map to None; callers that pass relative paths
+    through unchanged write ``local_path(p) or p``. The one place that
+    decides whether a path is a local file."""
+    if uri.startswith("file:"):
+        uri = "/" + uri[len("file:"):].lstrip("/")
+    return uri if uri.startswith("/") else None
+
+
+def file_identity(path: str) -> tuple:
+    """``(realpath, st_dev, st_ino, st_size, st_mtime_ns)`` of a local
+    file: the one key for caches of work derived from a file's content.
+
+    A file rewritten in place changes size or mtime; a file REPLACED at
+    the same path (rebuilt fixture, rename-over) changes inode even when
+    size and mtime match. Raises OSError when the file cannot be stat'ed
+    — a missing file has no identity to cache under."""
+    st = os.stat(path)
+    return (
+        os.path.realpath(path),
+        st.st_dev,
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+    )
 
 
 def _spark_context():
@@ -124,6 +156,17 @@ def read_bytes(uri: str) -> bytes:
 
 def read_text(uri: str) -> str:
     return read_bytes(uri).decode("utf-8")
+
+
+def arrow_source(uri: str):
+    """What pyarrow should open for ``uri``: the local path, or a buffer of
+    a remote file's whole bytes (footer-scale reads only — data files go
+    through ``sess.read``). Relative paths pass through unchanged."""
+    if is_remote(uri):
+        import pyarrow as pa
+
+        return pa.BufferReader(read_bytes(uri))
+    return local_path(uri) or uri
 
 
 def exists(uri: str) -> bool:

@@ -1653,9 +1653,10 @@ def rename_column_on_disk(
     metadata-only, no snapshot, already-written files keep their old
     parquet column names. Partition specs are untouched: they reference
     source FIELD IDS, which a rename never changes."""
-    from cloudfloe_spark.sources import iceberg_meta as im
+    from cloudfloe_spark.sources import fsio, iceberg_meta as im
 
-    meta_path = im.latest_metadata_path(root).removeprefix("file://")
+    meta_path = im.latest_metadata_path(root)
+    meta_path = fsio.local_path(meta_path) or meta_path
     with open(meta_path) as f:
         meta = json.load(f)
     schemas = meta.get("schemas") or (
@@ -1956,13 +1957,12 @@ def commit_row_delta_snapshot(
         if df_.get("content", 0) == 0:
             continue
         if removed_entries and df_.get("content", 0) == 1:
+            from cloudfloe_spark.sources import fsio
             from cloudfloe_spark.sources.iceberg_meta import (
                 position_delete_targets_cached,
             )
 
-            local = df_["file_path"]
-            if local.startswith("file://"):
-                local = local[7:]
+            local = fsio.local_path(df_["file_path"]) or df_["file_path"]
             try:
                 tgts = position_delete_targets_cached(local)
             except Exception:

@@ -38,16 +38,10 @@ class IcebergMetadataError(ValueError):
     """Unreadable/unsupported table layout, or an unknown snapshot."""
 
 
-def _local_path(uri: str) -> str:
-    if uri.startswith("file://"):
-        return uri[len("file://"):]
-    return uri
-
-
 def _norm_root(root: str) -> str:
     """Table root in the form reads should use: a plain local path, or the
     scheme-qualified URI when it's served by a Hadoop FileSystem."""
-    return root if fsio.is_remote(root) else _local_path(root)
+    return fsio.local_path(root) or root
 
 
 def data_file_suffix(p: str) -> str:
@@ -60,21 +54,20 @@ def data_file_suffix(p: str) -> str:
     from urllib.parse import unquote
 
     s = unquote(str(p))
-    if s.startswith("file://"):
-        s = s[len("file://"):]
+    s = fsio.local_path(s) or s
     return s.rsplit("/data/", 1)[-1]
 
 
 def _exists(path: str) -> bool:
     if fsio.is_remote(path):
         return fsio.exists(path)
-    return os.path.exists(_local_path(path))
+    return os.path.exists(fsio.local_path(path) or path)
 
 
 def _read_text(path: str) -> str:
     if fsio.is_remote(path):
         return fsio.read_text(path)
-    with open(_local_path(path)) as f:
+    with open(fsio.local_path(path) or path) as f:
         return f.read()
 
 
@@ -91,7 +84,7 @@ def _read_manifest(path: str) -> list[dict]:
         # from several projections (live paths, delete files, sequence
         # numbers), which must not mean several network fetches each.
         return list(_read_remote_manifest_cached(path))
-    return read_avro(_local_path(path))
+    return read_avro(fsio.local_path(path) or path)
 
 
 def _join(root: str, *parts: str) -> str:
@@ -108,7 +101,7 @@ def _relocate(uri: str, root: str) -> str:
     keeps its layout, so re-anchor at the last ``/metadata/`` or ``/data/``
     component when the recorded path doesn't exist. ``root`` may be a local
     path or a served-scheme URI — candidates stay in the root's scheme."""
-    p = uri if fsio.is_remote(uri) else _local_path(uri)
+    p = fsio.local_path(uri) or uri
     if _exists(p):
         return p
     for anchor in ("/metadata/", "/data/"):
@@ -178,7 +171,7 @@ def load_metadata(root: str, metadata_path: Optional[str] = None) -> dict:
             # listing / version-hint) stays uncached above.
             raw = _read_remote_bytes_cached(path)
         else:
-            with open(_local_path(path), "rb") as fh:
+            with open(fsio.local_path(path) or path, "rb") as fh:
                 raw = fh.read()
         # gzip-compressed metadata (r12): tables written with
         # write.metadata.compression-codec=gzip name their files
@@ -518,12 +511,7 @@ def variant_shred_groups(
         if sch is None:
             import pyarrow.parquet as pq
 
-            from cloudfloe_spark.sources import fsio
-
-            if fsio.is_remote(p):
-                sch = pq.read_schema(pa.BufferReader(fsio.read_bytes(p)))
-            else:
-                sch = pq.read_schema(p.removeprefix("file://"))
+            sch = pq.read_schema(fsio.arrow_source(p))
             _FOOTER_SCHEMA_CACHE[p] = sch
         suffix = p.rsplit("/data/", 1)[-1]
         descs: dict = {}
@@ -698,10 +686,7 @@ def ns_precision_errors(
     for p in paths:
         sch = _FOOTER_SCHEMA_CACHE.get(p)
         if sch is None:
-            if fsio.is_remote(p):
-                sch = pq.read_schema(pa.BufferReader(fsio.read_bytes(p)))
-            else:
-                sch = pq.read_schema(p.removeprefix("file://"))
+            sch = pq.read_schema(fsio.arrow_source(p))
             _FOOTER_SCHEMA_CACHE[p] = sch
         suffix = p.rsplit("/data/", 1)[-1]
         for c, cand in names_for.items():
@@ -844,16 +829,9 @@ def position_delete_targets(paths: list[str]) -> set[str]:
     ``referenced_data_file`` / per-column bounds when present."""
     import pyarrow.parquet as pq
 
-    from cloudfloe_spark.sources import fsio
-
     out: set[str] = set()
     for p in paths:
-        if fsio.is_remote(p):
-            import pyarrow as pa
-
-            pf = pq.ParquetFile(pa.BufferReader(fsio.read_bytes(p)))
-        else:
-            pf = pq.ParquetFile(p.removeprefix("file://"))
+        pf = pq.ParquetFile(fsio.arrow_source(p))
         col_idx = pf.schema_arrow.get_field_index("file_path")
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(col_idx).statistics
@@ -1256,18 +1234,12 @@ def parquet_column_names(path: str) -> list[str]:
     path (Iceberg data files are immutable). Local paths read the footer
     directly; served remote schemes go through fsio (the whole object at
     fixture scale — a production reader range-reads the footer)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from cloudfloe_spark.sources import fsio
 
     cached = _FOOTER_NAME_CACHE.get(path)
     if cached is not None:
         return cached
-    if fsio.is_remote(path):
-        names = pq.read_schema(pa.BufferReader(fsio.read_bytes(path))).names
-    else:
-        names = pq.read_schema(path.removeprefix("file://")).names
+    names = pq.read_schema(fsio.arrow_source(path)).names
     _FOOTER_NAME_CACHE[path] = names
     return names
 

@@ -22,6 +22,8 @@ import uuid as _uuid
 
 from pyspark.sql import SparkSession
 
+from cloudfloe_spark.sources import fsio
+
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-sized default
 
 
@@ -890,10 +892,8 @@ def expire_snapshots(
         ]
         for e in dropped:
             p = e.get("statistics-path", "")
-            if p.startswith("file://"):
-                p = p[7:]
             try:
-                os.remove(p)
+                os.remove(fsio.local_path(p) or p)
             except OSError:
                 pass
     meta["snapshots"] = kept
@@ -933,7 +933,7 @@ def remove_orphan_files(
 
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    if "://" in root and not root.startswith("file://"):
+    if fsio.is_remote(root):
         raise ValueError("remove_orphan_files supports local roots only")
     root_n = im._norm_root(root)
 
@@ -988,8 +988,7 @@ def remove_orphan_files(
         _meta_now.get("partition-statistics") or []
     ):
         p = e.get("statistics-path", "")
-        if p.startswith("file://"):
-            p = p[7:]
+        p = fsio.local_path(p) or p
         if p:
             referenced.add(os.path.realpath(im._relocate(p, root_n)))
     removed = []
@@ -4872,8 +4871,7 @@ def _incremental_stats(sess, root, metadata_path, snap, columns):
     ) != sorted(map(repr, im.equality_delete_records(root, snap))):
         return None
     p = str(entry.get("statistics-path") or "")
-    if p.startswith("file://"):
-        p = p[7:]
+    p = fsio.local_path(p) or p
     try:
         footer = pf.read_puffin_footer(p)
     except (OSError, pf.PuffinError):

@@ -527,7 +527,9 @@ _BINDINGS: dict[str, tuple["RestCatalogClient", str, str]] = {}
 def _norm_root(root: str) -> str:
     import os
 
-    return os.path.realpath(root.removeprefix("file://"))
+    from cloudfloe_spark.sources import fsio
+
+    return os.path.realpath(fsio.local_path(root) or root)
 
 
 def bind_rest_table(
@@ -555,7 +557,7 @@ def commit_table_metadata(binding, root: str, after_meta: dict) -> str:
     local path when file-served). A 409 surfaces as
     ``iceberg_fixture.CommitConflictError`` so the optimistic retry loop
     treats catalog conflicts exactly like local CAS conflicts."""
-    from cloudfloe_spark.sources import iceberg_meta as im
+    from cloudfloe_spark.sources import fsio, iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import CommitConflictError
 
     client, namespace, table = binding
@@ -575,4 +577,4 @@ def commit_table_metadata(binding, root: str, after_meta: dict) -> str:
             f"{namespace}.{table}: commit response has no "
             "metadata-location"
         )
-    return str(new_loc).removeprefix("file://")
+    return fsio.local_path(str(new_loc)) or str(new_loc)

@@ -136,6 +136,8 @@ class CommitSlice(InputPartition):
     """One (kind, data file) slice of a microbatch — the unit of
     executor parallelism. Self-contained and picklable: local file
     paths plus the per-file rename map; workers need pyarrow only.
+    Paths come from the metadata reader's relocation, which already
+    resolved ``file:`` URIs to plain paths on the driver.
 
     kind='insert': emit the data file's rows minus positions named by
     ``exclude_deletes`` (same-commit net). kind='delete': emit the rows
@@ -172,10 +174,6 @@ class CommitSlice(InputPartition):
         # columns this data file predates — read() materializes the
         # default instead of nulls, matching the batch scan
         self.default_fills = default_fills
-
-
-def _local(p: str) -> str:
-    return p.removeprefix("file://")
 
 
 def _suffix(p: str) -> str:
@@ -247,7 +245,7 @@ def _delete_positions(paths: tuple, data_suffix: str) -> set:
 
     out: set = set()
     for p in paths:
-        pf = pq.ParquetFile(_local(p))
+        pf = pq.ParquetFile(p)
         idx = pf.schema_arrow.get_field_index("file_path")
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(idx).statistics
@@ -551,7 +549,7 @@ class IcebergCommitsStreamReader(DataSourceStreamReader):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        t = pq.read_table(_local(partition.data_file))
+        t = pq.read_table(partition.data_file)
         sfx = _suffix(partition.data_file)
         excl = _delete_positions(partition.exclude_deletes, sfx)
         if partition.kind == "insert" or partition.whole_file:

@@ -23,20 +23,21 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudfloe_spark.sources.fsio import file_identity
 from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
 # Per-session schema cache for the stream source (r16 — guide §1.2 step 3,
 # driver-side overhead: the batch-reader schema probe cost 0.10-0.27 s of
 # the ~1.4 s streaming twin, every invocation, for an immutable fixture).
-# Keyed on file identity (path, size, mtime_ns) so an overwritten fixture
-# re-infers; values are schemas (metadata), never data or results.
+# Keyed on fsio.file_identity (realpath, device, inode, size, mtime_ns) so
+# an overwritten or replaced fixture re-infers; values are schemas
+# (metadata), never data or results.
 _SCHEMA_CACHE: dict[tuple, "object"] = {}
 
 
 def _source_schema(spark: SparkSession, path: str):
     try:
-        st = os.stat(path)
-        key = (os.path.realpath(path), st.st_size, st.st_mtime_ns)
+        key = file_identity(path)
     except OSError:
         key = None
     if key is not None and key in _SCHEMA_CACHE:

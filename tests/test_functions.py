@@ -57,7 +57,7 @@ def test_word_shingles_short_doc_empty(spark):
 
     rows = spark.createDataFrame(
         [("two words",), ("one",), ("",), ("exactly three words",),
-         ("now four words here",)],
+         ("now four words here",), (None,)],
         "text string",
     ).select(word_shingles(F.col("text"), 3).alias("sh")).collect()
     assert [r["sh"] for r in rows] == [
@@ -66,6 +66,7 @@ def test_word_shingles_short_doc_empty(spark):
         [],
         ["exactly three words"],
         ["now four words", "four words here"],
+        [],  # NULL input: empty array, not NULL (docstring contract)
     ]
 
 
@@ -75,11 +76,12 @@ def test_char_ngrams_short_text_empty(spark):
     from cloudfloe_spark.functions.text import char_ngrams
 
     rows = spark.createDataFrame(
-        [("a b",), ("",), ("abcde",), ("abcdef",)], "text string"
+        [("a b",), ("",), ("abcde",), ("abcdef",), (None,)], "text string"
     ).select(char_ngrams(F.col("text"), 5).alias("ng")).collect()
     assert [r["ng"] for r in rows] == [
         [],
         [],
         ["abcde"],
         ["abcde", "bcdef"],
+        [],  # NULL input: empty array, not NULL (docstring contract)
     ]

@@ -1203,22 +1203,15 @@ def test_geo_scan_pushdown_opens_one_file(spark, sf_dir):
     scan opens at most one of the four band files."""
     from pyspark.sql import functions as F
 
-    from cloudfloe_spark.queries.multimodal import iceberg_geo_scan_pushdown
+    from cloudfloe_spark.queries.multimodal import _geo_skip_fixture
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
-    # build the fixture through the entry itself, then re-resolve its scan
-    iceberg_geo_scan_pushdown(spark, sf_dir).collect()
-    import glob as _glob
-    import os as _os
-
-    roots = sorted(
-        _glob.glob("/tmp/cloudfloe_geoskip/*/t"), key=_os.path.getmtime
-    )
-    assert roots, "fixture missing"
+    # the entry's own fixture, then re-resolve its scan
+    root = _geo_skip_fixture(spark, sf_dir)
     ensure_runtime_conf(spark)
     sql = (
-        f"SELECT lang, geo FROM iceberg_geo_scan('{roots[-1]}', 'geo', "
+        f"SELECT lang, geo FROM iceberg_geo_scan('{root}', 'geo', "
         "-50.0, -90.0, -10.0, 90.0)"
     )
     df = spark.sql(resolve_iceberg_reads(spark, sql))

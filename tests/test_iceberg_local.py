@@ -216,6 +216,44 @@ def test_empty_snapshot_returns_schema_only(spark, tmp_path):
     assert resp.columns == ["id"] and resp.rows == []
 
 
+def test_view_registry_misses_on_replaced_metadata_same_size_and_mtime(
+    spark, tmp_path
+):
+    """A table rebuilt in place writes a metadata file at the SAME path
+    that can match the old one's size and mtime_ns byte for byte (this
+    fixture's metadata is deterministic); only the inode tells them
+    apart. The view registry must miss and serve the new rows."""
+    import shutil
+
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+
+    root = str(tmp_path / "tbl")
+    schema = pa.schema([("id", pa.int64())])
+    sess = spark.newSession()  # one session: the registry is per session
+
+    def ids():
+        sql = f"SELECT id FROM iceberg_scan('{root}')"
+        rows = sess.sql(resolve_iceberg_reads(sess, sql)).collect()
+        return sorted(r[0] for r in rows)
+
+    def build(values):
+        t = LocalIcebergTable(root, schema)
+        t.append_snapshot([pa.table({"id": values})], timestamp_ms=T1)
+        return im.latest_metadata_path(root)
+
+    meta = build([1, 2])
+    assert ids() == [1, 2]
+    old = os.stat(meta)
+    os.link(meta, str(tmp_path / "pin"))  # keep the old inode allocated
+    shutil.rmtree(root)
+    assert build([8, 9]) == meta
+    os.utime(meta, ns=(old.st_atime_ns, old.st_mtime_ns))
+    new = os.stat(meta)
+    assert (new.st_size, new.st_mtime_ns) == (old.st_size, old.st_mtime_ns)
+    assert new.st_ino != old.st_ino
+    assert ids() == [8, 9]
+
+
 def test_avrolite_reads_deflate_codec(tmp_path):
     """Real Iceberg writers emit deflate-compressed manifests by default;
     the reader must decode them (writer stays null-codec by design)."""
