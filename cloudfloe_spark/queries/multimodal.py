@@ -320,12 +320,10 @@ def iceberg_geometry_bbox_scan(
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     root = _geo_fixture(sf_dir)
-    # Resolve in the CALLER's session (r16): a per-invocation newSession
-    # had an empty temp-view namespace, so the resolver re-built the scan
-    # view — parquet schema inference included — on every call. The shared
-    # session lets the per-session view registry serve repeat resolutions
-    # of the same immutable snapshot; view names are content-hashed
-    # (cf_ice_*), so no caller view can collide.
+    # Resolve in the CALLER's session (r16): view names are content-hashed
+    # (cf_ice_*), so no caller view can collide, and the resolver's
+    # process-wide plan cache serves repeat resolutions of the same
+    # immutable snapshot.
     sess = spark
     ensure_runtime_conf(sess)
     df = sess.sql(
@@ -374,12 +372,10 @@ def geo_point_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     root = _geo_fixture(sf_dir)
-    # Resolve in the CALLER's session (r16): a per-invocation newSession
-    # had an empty temp-view namespace, so the resolver re-built the scan
-    # view — parquet schema inference included — on every call. The shared
-    # session lets the per-session view registry serve repeat resolutions
-    # of the same immutable snapshot; view names are content-hashed
-    # (cf_ice_*), so no caller view can collide.
+    # Resolve in the CALLER's session (r16): view names are content-hashed
+    # (cf_ice_*), so no caller view can collide, and the resolver's
+    # process-wide plan cache serves repeat resolutions of the same
+    # immutable snapshot.
     sess = spark
     ensure_runtime_conf(sess)
     df = sess.sql(
@@ -440,12 +436,10 @@ def geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     root = _geo_fixture(sf_dir)
-    # Resolve in the CALLER's session (r16): a per-invocation newSession
-    # had an empty temp-view namespace, so the resolver re-built the scan
-    # view — parquet schema inference included — on every call. The shared
-    # session lets the per-session view registry serve repeat resolutions
-    # of the same immutable snapshot; view names are content-hashed
-    # (cf_ice_*), so no caller view can collide.
+    # Resolve in the CALLER's session (r16): view names are content-hashed
+    # (cf_ice_*), so no caller view can collide, and the resolver's
+    # process-wide plan cache serves repeat resolutions of the same
+    # immutable snapshot.
     sess = spark
     ensure_runtime_conf(sess)
     df = sess.sql(
@@ -573,12 +567,10 @@ def iceberg_geo_scan_pushdown(
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     root = _geo_skip_fixture(spark, sf_dir)
-    # Resolve in the CALLER's session (r16): a per-invocation newSession
-    # had an empty temp-view namespace, so the resolver re-built the scan
-    # view — parquet schema inference included — on every call. The shared
-    # session lets the per-session view registry serve repeat resolutions
-    # of the same immutable snapshot; view names are content-hashed
-    # (cf_ice_*), so no caller view can collide.
+    # Resolve in the CALLER's session (r16): view names are content-hashed
+    # (cf_ice_*), so no caller view can collide, and the resolver's
+    # process-wide plan cache serves repeat resolutions of the same
+    # immutable snapshot.
     sess = spark
     ensure_runtime_conf(sess)
     sql = (
@@ -730,12 +722,10 @@ def geo_geography_wrap_scan(
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     root = _geog_fixture(spark, sf_dir)
-    # Resolve in the CALLER's session (r16): a per-invocation newSession
-    # had an empty temp-view namespace, so the resolver re-built the scan
-    # view — parquet schema inference included — on every call. The shared
-    # session lets the per-session view registry serve repeat resolutions
-    # of the same immutable snapshot; view names are content-hashed
-    # (cf_ice_*), so no caller view can collide.
+    # Resolve in the CALLER's session (r16): view names are content-hashed
+    # (cf_ice_*), so no caller view can collide, and the resolver's
+    # process-wide plan cache serves repeat resolutions of the same
+    # immutable snapshot.
     sess = spark
     ensure_runtime_conf(sess)
     sql = (

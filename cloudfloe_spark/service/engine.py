@@ -92,13 +92,7 @@ DEMO_TABLE = os.environ.get(
 
 def iceberg_runtime_available(spark) -> bool:
     """True iff the Iceberg Spark runtime is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
+    return _class_available(spark, "org.apache.iceberg.spark.SparkCatalog")
 
 
 # --- A4/A5: per-request session + storage conf --------------------------------
@@ -208,9 +202,25 @@ def _install_s3a_options(spark, opts: dict[str, str], bucket: Optional[str]) -> 
         _INSTALLED_S3A[scope] = fp
 
 
+#: (JVM view, class name) → loadable. The classpath cannot change once the
+#: JVM has started, and a failing probe costs a py4j round trip plus a
+#: Java exception (~9 ms) — ``run_query`` asks several times per request.
+_CLASS_PROBES: dict = {}
+
+
 def _class_available(spark, name: str) -> bool:
+    """True iff ``name`` loads in the shared JVM; probed once per JVM."""
+    key = (spark._jvm, name)
+    found = _CLASS_PROBES.get(key)
+    if found is None:
+        found = _load_class(spark._jvm, name)
+        _CLASS_PROBES[key] = found
+    return found
+
+
+def _load_class(jvm, name: str) -> bool:
     try:
-        spark._jvm.java.lang.Class.forName(name)
+        jvm.java.lang.Class.forName(name)
         return True
     except Exception:
         return False

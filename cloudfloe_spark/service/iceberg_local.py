@@ -54,7 +54,6 @@ from __future__ import annotations
 import datetime
 import hashlib
 import re
-import weakref
 
 from cloudfloe_spark.service.convert import CATALOG_NAME, _sub_outside_literals
 from cloudfloe_spark.service.errors import bad_request
@@ -184,36 +183,44 @@ def _view_name(kind: str, root: str, extra: object = None) -> str:
     return f"cf_ice_{kind}_{digest}"
 
 
-#: Per-session registry of the CONTENT KEY each resolver view name is
-#: currently registered under (r16, VERDICT r15 #2). Re-resolving the
-#: same immutable snapshot re-built the whole view every invocation —
-#: re-reading parquet footers through ``sess.read`` (the dominant
-#: driver-side cost: ~0.15 s of schema inference per reader call),
-#: re-decoding deletion vectors, and re-registering an identical temp
-#: view. The registry skips the rebuild when the resolved state is
-#: byte-identical: keys pin the resolved metadata file (path + local
-#: mtime/size — a rebuilt fixture at the same path misses), the snapshot
-#: id, and every content-shaping argument. This caches LOGICAL PLANS
-#: within one session only — no data, nothing across runs; a new commit
-#: resolves to a new metadata file and therefore a new key.
-_VIEW_REGISTRY: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+#: Process-wide cache of resolved Iceberg views: content key → the view's
+#: ANALYZED logical plan. The service opens a new session per request, so
+#: the cache spans sessions.
+#: Building a view re-reads manifests, re-infers parquet schemas through
+#: ``sess.read`` (a Spark job each) and re-decodes deletion vectors; a hit
+#: skips all of it and re-homes the plan into the requesting session.
+#: Keys pin everything that shapes the view's rows and schema — the
+#: resolved metadata file's identity (a new commit writes a new file), the
+#: snapshot, the surviving data files — plus the requesting session's
+#: SparkContext and SQL conf, which the plan's file scans read under. It
+#: holds plans only: no data, nothing across processes.
+_PLAN_CACHE_MAX = 64
+_PLAN_CACHE = fsio.LRUCache(_PLAN_CACHE_MAX)
 
 
-def _view_registry(sess) -> dict:
-    try:
-        reg = _VIEW_REGISTRY.get(sess)
-        if reg is None:
-            reg = {}
-            _VIEW_REGISTRY[sess] = reg
-        return reg
-    except TypeError:  # exotic session object that cannot be weakly referenced
-        return {}
+def _cached_view(sess, name: str, key: tuple, build) -> str:
+    """Register ``name`` in ``sess`` as the view whose content ``key``
+    pins, and return ``name``. A hit re-homes the cached plan into
+    ``sess``; a miss runs ``build()`` (→ DataFrame) and caches its plan.
+    The view is registered on every call, hit or miss: each request
+    session starts empty, and a caller may have dropped the view."""
+    jsess = sess._jsparkSession
+    conf = jsess.sessionState().conf().getAllConfs().toString()
+    key = (key, sess.sparkContext, conf)
+    plan = _PLAN_CACHE.get(key)
+    if plan is None:
+        jdf = build()._jdf
+        _PLAN_CACHE.put(key, jdf.queryExecution().analyzed())
+    else:
+        jdf = sess._jvm.org.apache.spark.sql.classic.Dataset.ofRows(jsess, plan)
+    jdf.createOrReplaceTempView(name)
+    return name
 
 
 def _meta_signature(metadata_path) -> tuple:
     """Identity of the resolved metadata file: the path plus
     :func:`fsio.file_identity` for local files — a fixture rebuilt at the
-    same path must miss the view registry even when size and mtime
+    same path must miss the plan cache even when size and mtime
     match — and path-only for remote schemes (Iceberg version files are
     immutable; commits write new ones)."""
     p = str(metadata_path)
@@ -262,28 +269,6 @@ def _snapshot_view(
             timestamp_ms=_parse_ts_ms(ts_text) if ts_text else None,
             metadata_path=metadata_path,
         )
-        # Registry fast path (r16): the view for this exact resolved state
-        # is already registered in this session — return it without
-        # re-reading manifests, re-inferring parquet schemas, or
-        # re-registering an identical plan. Everything that shapes the
-        # view's content is in the key.
-        reg = _view_registry(sess)
-        reg_name = view_name or _view_name(
-            "scan", root, (snap.get("snapshot-id"), geo_prune)
-        )
-        reg_key = (
-            "scan",
-            root,
-            _meta_signature(metadata_path),
-            snap.get("snapshot-id"),
-            str(version),
-            str(ts_text),
-            repr(prune_conjuncts),
-            repr(sorted(typed_paths.items())) if typed_paths else None,
-            repr(geo_prune),
-        )
-        if reg.get(reg_name) == reg_key:
-            return reg_name
         if im.unreadable_equality_deletes(root, snap, metadata_path):
             # Equality deletes whose field ids don't resolve (or v1-era
             # files with no equality_ids at all) cannot be applied —
@@ -385,6 +370,49 @@ def _snapshot_view(
                 return not (x1 < qx0 or qx1 < x0)
 
             paths = [p for p in paths if _geo_survives(stats.get(p))]
+    except im.IcebergMetadataError as e:
+        raise bad_request(f"Iceberg read failed: {e}") from None
+    # Keyed AFTER pruning: reads whose WHERE conjuncts prune to the same
+    # files share one plan. Time travel picks the snapshot's schema id.
+    time_travel = bool(version or ts_text)
+    key = (
+        "scan",
+        root,
+        _meta_signature(metadata_path),
+        snap.get("snapshot-id"),
+        time_travel,
+        tuple(paths),
+        repr(sorted(typed_paths.items())) if typed_paths else None,
+        repr(geo_prune),
+    )
+    name = view_name or _view_name(
+        "scan", root, (snap.get("snapshot-id"), geo_prune)
+    )
+    return _cached_view(
+        sess,
+        name,
+        key,
+        lambda: _scan_frame(
+            sess, root, snap, metadata_path, paths, time_travel,
+            typed_paths, geo_prune,
+        ),
+    )
+
+
+def _scan_frame(
+    sess,
+    root: str,
+    snap: dict,
+    metadata_path,
+    paths: "list[str]",
+    time_travel: bool,
+    typed_paths: "dict[str, tuple] | None",
+    geo_prune: "tuple | None",
+):
+    """The DataFrame of one pruned snapshot read: merge-on-read deletes,
+    schema evolution, v3 variant and ns columns, partition stamping and
+    the geo row window, over exactly ``paths``."""
+    try:
         pos_deletes = im.position_delete_paths(root, snap)
         if pos_deletes and paths:
             # Delete-file pruning (r8): a pruned scan applies only the
@@ -418,9 +446,7 @@ def _snapshot_view(
         # rename with no subsequent snapshot must still show the new
         # name — Iceberg scans are current-schema; only time travel is
         # write-time-schema).
-        snap_sid = (
-            snap.get("schema-id") if (version or ts_text) else None
-        )
+        snap_sid = snap.get("schema-id") if time_travel else None
         field_names = (
             im.schema_field_names(root, metadata_path, schema_id=snap_sid)
             if eq_deletes
@@ -512,9 +538,6 @@ def _snapshot_view(
         )
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
-    name = view_name or _view_name(
-        "scan", root, (snap.get("snapshot-id"), geo_prune)
-    )
     if paths:
         from pyspark.sql import functions as F
 
@@ -728,9 +751,65 @@ def _snapshot_view(
         for _h, (_fn, _vc, _pp, _st) in (typed_paths or {}).items():
             ddl += f", `{_h}` {_vget_spark_type(_st)}"
         df = sess.createDataFrame([], ddl)
-    df.createOrReplaceTempView(name)
-    reg[name] = reg_key
-    return name
+    if geo_prune:
+        df = _geo_row_filter(df, geo_prune)
+    return df
+
+
+def _geo_row_filter(df, geo_prune: tuple):
+    """Exact row window of ``iceberg_geo_scan`` over the file-skipped
+    scan; ``geo_prune`` is ``(column, (x0, y0, x1, y1), geography)``."""
+    from pyspark.sql import functions as F
+
+    gcol, box, geography = geo_prune
+    if geography:
+        # GEOGRAPHY (r15; r15 late — line features): x is CIRCULAR
+        # — the stored file bounds, each FEATURE's envelope, and
+        # the query window may all wrap the antimeridian (x0 > x1
+        # covers [x0, 180] ∪ [-180, x1], the v3 convention). The
+        # row predicate is a wrapped ENVELOPE intersect: the
+        # feature's exact spherical-edge envelope (longitude takes
+        # the shorter arc per edge; latitude includes the Clairaut
+        # vertex where the arc contains it) against the window.
+        # Point/line/multipoint features are exact; POLYGON rings
+        # that separate or touch a pole take the full-sphere
+        # envelope (sound under any interior convention), and
+        # winding-0 pole-free rings their exact boundary envelope
+        # (r15 late — see functions/geo.py for the one documented
+        # convention). geometry windows stay planar and never
+        # wrap.
+        from cloudfloe_spark.functions.geo import wkb_geography_envelope_udf
+
+        qx0, qy0, qx1, qy1 = box
+        env = wkb_geography_envelope_udf(strict=True)(F.col(gcol))
+        lo, hi = env["xlo"], env["xhi"]
+        # circular interval intersect: window start inside the
+        # feature interval, or feature start inside the window
+        m1 = (
+            F.when(lo <= hi, (F.lit(qx0) >= lo) & (F.lit(qx0) <= hi))
+            .otherwise((F.lit(qx0) >= lo) | (F.lit(qx0) <= hi))
+        )
+        if qx0 <= qx1:
+            m2 = (lo >= qx0) & (lo <= qx1)
+        else:
+            m2 = (lo >= qx0) | (lo <= qx1)
+        return df.filter(
+            F.col(gcol).isNotNull()
+            & lo.isNotNull()  # EMPTY features never intersect
+            & (m1 | m2)
+            & (env["ymax"] >= qy0)
+            & (env["ymin"] <= qy1)
+        )
+    from cloudfloe_spark.functions.geo import bbox_intersects, wkb_envelope_udf
+
+    window = F.struct(
+        F.lit(box[0]).alias("xmin"),
+        F.lit(box[1]).alias("ymin"),
+        F.lit(box[2]).alias("xmax"),
+        F.lit(box[3]).alias("ymax"),
+    )
+    env = wkb_envelope_udf()(F.col(gcol))
+    return df.filter(F.col(gcol).isNotNull() & bbox_intersects(env, window))
 
 
 def _vget_spark_type(sql_type: str) -> str:
@@ -868,6 +947,12 @@ def _stats_broadcast_hint(sess, df, root, snap, metadata_path):
     return df
 
 
+#: The Iceberg spec's fixed position-delete schema (field ids 2147483546
+#: and 2147483545). Reading under it skips footer schema inference, which
+#: is a Spark job per read; the optional ``row`` column is not needed.
+_POSITION_DELETE_DDL = "file_path STRING, pos BIGINT"
+
+
 def _apply_position_deletes(
     sess, data, delete_paths: list[str], ctx: dict | None = None
 ):
@@ -896,7 +981,8 @@ def _apply_position_deletes(
         dels = ctx["pos_frame"]
     else:
         dels = (
-            sess.read.parquet(*delete_paths)
+            sess.read.schema(_POSITION_DELETE_DDL)
+            .parquet(*delete_paths)
             .select(
                 suffix(F.col("file_path")).alias("__cf_del_file"),
                 F.col("pos").alias("__cf_del_pos"),
@@ -1314,19 +1400,26 @@ def _changes_view(sess, root: str, from_id: str, to_id: str) -> str:
         metadata_path = im.latest_metadata_path(root)
         s_from = _resolve_range_endpoint(root, from_id, metadata_path)
         s_to = _resolve_range_endpoint(root, to_id, metadata_path)
-        # Registry fast path (r16): same session, same metadata file, same
-        # resolved range — the registered view is already this content.
-        reg = _view_registry(sess)
-        reg_name = _view_name("changes", root, (from_id, to_id))
-        reg_key = (
-            "changes",
-            root,
-            _meta_signature(metadata_path),
-            s_from.get("snapshot-id"),
-            s_to.get("snapshot-id"),
-        )
-        if reg.get(reg_name) == reg_key:
-            return reg_name
+    except im.IcebergMetadataError as e:
+        raise bad_request(f"Iceberg read failed: {e}") from None
+    key = (
+        "changes",
+        root,
+        _meta_signature(metadata_path),
+        s_from.get("snapshot-id"),
+        s_to.get("snapshot-id"),
+    )
+    return _cached_view(
+        sess,
+        _view_name("changes", root, (from_id, to_id)),
+        key,
+        lambda: _changes_frame(sess, root, metadata_path, s_from, s_to),
+    )
+
+
+def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
+    """DataFrame of :func:`_changes_view` for two resolved snapshots."""
+    try:
         seq_from = s_from.get("sequence-number", 0)
         seq_to = s_to.get("sequence-number", 0)
         if seq_to < seq_from:
@@ -1422,7 +1515,6 @@ def _changes_view(sess, root: str, from_id: str, to_id: str) -> str:
             ]
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
-    name = _view_name("changes", root, (from_id, to_id))
     if added:
         from pyspark.sql import functions as F
 
@@ -1502,9 +1594,7 @@ def _changes_view(sess, root: str, from_id: str, to_id: str) -> str:
         df = _surface_ns(df, ns_cols)
     else:  # no files appended in the range — zero rows, right columns
         df = sess.createDataFrame([], schema_ddl)
-    df.createOrReplaceTempView(name)
-    reg[name] = reg_key
-    return name
+    return df
 
 
 def _cdc_frame(
@@ -1878,7 +1968,8 @@ def _cdc_frame(
 
     def pos_frame(paths):
         return (
-            sess.read.parquet(*paths)
+            sess.read.schema(_POSITION_DELETE_DDL)
+            .parquet(*paths)
             .select(
                 suffix(F.col("file_path")).alias("__cdc_dfile"),
                 F.col("pos").alias("__cdc_dpos"),
@@ -2407,29 +2498,18 @@ def _pair_update_images(df, keys: list):
 def _cdc_view(
     sess, root: str, from_id: str, to_id: str, key_cols: str | None = None
 ) -> str:
-    name = _view_name("cdc", root, (from_id, to_id, key_cols))
-    # Registry fast path (r16): the CDC frame is a function of the current
-    # metadata file and the range spelling — skip the (multi-join) frame
-    # rebuild when this session already registered exactly that.
+    # The CDC frame is a function of the current metadata file and the
+    # range spelling.
     try:
-        reg = _view_registry(sess)
-        reg_key = (
-            "cdc",
-            root,
-            _meta_signature(im.latest_metadata_path(root)),
-            from_id,
-            to_id,
-            key_cols,
-        )
-    except im.IcebergMetadataError:
-        reg, reg_key = {}, object()  # unreadable root: let _cdc_frame raise
-    if reg.get(name) == reg_key:
-        return name
-    _cdc_frame(sess, root, from_id, to_id, key_cols).createOrReplaceTempView(
-        name
+        sig = _meta_signature(im.latest_metadata_path(root))
+    except im.IcebergMetadataError as e:
+        raise bad_request(f"Iceberg read failed: {e}") from None
+    return _cached_view(
+        sess,
+        _view_name("cdc", root, (from_id, to_id, key_cols)),
+        ("cdc", root, sig, from_id, to_id, key_cols),
+        lambda: _cdc_frame(sess, root, from_id, to_id, key_cols),
     )
-    reg[name] = reg_key
-    return name
 
 
 def _cow_commit_frame(
@@ -3494,86 +3574,15 @@ def resolve_iceberg_reads(sess, sql: str) -> str:
                 f"iceberg_geo_scan: {gcol!r} is not a geometry or "
                 "geography column of the table"
             )
-        from pyspark.sql import functions as F
-
-        if geography:
-            # GEOGRAPHY (r15; r15 late — line features): x is CIRCULAR
-            # — the stored file bounds, each FEATURE's envelope, and
-            # the query window may all wrap the antimeridian (x0 > x1
-            # covers [x0, 180] ∪ [-180, x1], the v3 convention). The
-            # row predicate is a wrapped ENVELOPE intersect: the
-            # feature's exact spherical-edge envelope (longitude takes
-            # the shorter arc per edge; latitude includes the Clairaut
-            # vertex where the arc contains it) against the window.
-            # Point/line/multipoint features are exact; POLYGON rings
-            # that separate or touch a pole take the full-sphere
-            # envelope (sound under any interior convention), and
-            # winding-0 pole-free rings their exact boundary envelope
-            # (r15 late — see functions/geo.py for the one documented
-            # convention). geometry windows stay planar and never
-            # wrap.
-            from cloudfloe_spark.functions.geo import (
-                wkb_geography_envelope_udf,
-            )
-
-            base = _snapshot_view(
-                sess, root, None, None, geo_prune=(gcol, box, True)
-            )
-            reg = _view_registry(sess)
-            name = _view_name("geo_scan", root, (gcol, "wrap") + box)
-            gkey = ("geo_wrap", reg.get(base), gcol, box)
-            if reg.get(name) == gkey:
-                return name
-            qx0, qy0, qx1, qy1 = box
-            env = wkb_geography_envelope_udf(strict=True)(F.col(gcol))
-            lo, hi = env["xlo"], env["xhi"]
-            # circular interval intersect: window start inside the
-            # feature interval, or feature start inside the window
-            m1 = (
-                F.when(lo <= hi, (F.lit(qx0) >= lo) & (F.lit(qx0) <= hi))
-                .otherwise((F.lit(qx0) >= lo) | (F.lit(qx0) <= hi))
-            )
-            if qx0 <= qx1:
-                m2 = (lo >= qx0) & (lo <= qx1)
-            else:
-                m2 = (lo >= qx0) | (lo <= qx1)
-            out_df = sess.table(base).filter(
-                F.col(gcol).isNotNull()
-                & lo.isNotNull()  # EMPTY features never intersect
-                & (m1 | m2)
-                & (env["ymax"] >= qy0)
-                & (env["ymin"] <= qy1)
-            )
-            out_df.createOrReplaceTempView(name)
-            reg[name] = gkey
-            return name
-
-        base = _snapshot_view(
-            sess, root, None, None, geo_prune=(gcol, box, False)
+        extra = (gcol, "wrap") + box if geography else (gcol,) + box
+        return _snapshot_view(
+            sess,
+            root,
+            None,
+            None,
+            view_name=_view_name("geo_scan", root, extra),
+            geo_prune=(gcol, box, geography),
         )
-        reg = _view_registry(sess)
-        name = _view_name("geo_scan", root, (gcol,) + box)
-        gkey = ("geo_planar", reg.get(base), gcol, box)
-        if reg.get(name) == gkey:
-            return name
-        from cloudfloe_spark.functions.geo import (
-            bbox_intersects,
-            wkb_envelope_udf,
-        )
-
-        window = F.struct(
-            F.lit(box[0]).alias("xmin"),
-            F.lit(box[1]).alias("ymin"),
-            F.lit(box[2]).alias("xmax"),
-            F.lit(box[3]).alias("ymax"),
-        )
-        env = wkb_envelope_udf()(F.col(gcol))
-        out_df = sess.table(base).filter(
-            F.col(gcol).isNotNull() & bbox_intersects(env, window)
-        )
-        out_df.createOrReplaceTempView(name)
-        reg[name] = gkey
-        return name
 
     def _snapshots(m: re.Match) -> str:
         root = _readable_root(sess, m.group(1).rstrip("/"))

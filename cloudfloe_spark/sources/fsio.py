@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 import posixpath
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -68,6 +70,62 @@ def file_identity(path: str) -> tuple:
         st.st_size,
         st.st_mtime_ns,
     )
+
+
+class LRUCache:
+    """Bounded, thread-safe least-recently-used map. Past ``maxsize``
+    entries the least recently used one is evicted. ``hits`` and
+    ``misses`` count lookups that found their key and that did not."""
+
+    def __init__(self, maxsize: int) -> None:
+        self.maxsize = maxsize
+        self.hits = 0
+        self.misses = 0
+        self._data: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key):
+        """The value under ``key``, or None."""
+        with self._lock:
+            if key not in self._data:
+                self.misses += 1
+                return None
+            self.hits += 1
+            self._data.move_to_end(key)
+            return self._data[key]
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            self._data[key] = value
+            self._data.move_to_end(key)
+            while len(self._data) > self.maxsize:
+                self._data.popitem(last=False)
+
+    def __len__(self) -> int:
+        return len(self._data)
+
+
+def cached_by_file(cache: LRUCache, path: str, compute):
+    """``compute(path)``, memoized in ``cache`` per path and validated by
+    the file's identity: a local file replaced or rewritten at the same
+    path (new :func:`file_identity`) is recomputed. Remote URIs need no
+    check (Iceberg never rewrites a file in place; commits write new
+    ones). A local file that has since vanished is served its last value
+    — the read that needs the file itself raises — and one never seen is
+    computed uncached, so its own read raises."""
+    ident = None
+    if not is_remote(path):
+        try:
+            ident = file_identity(local_path(path) or path)
+        except OSError:
+            hit = cache.get(path)
+            return compute(path) if hit is None else hit[1]
+    hit = cache.get(path)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    value = compute(path)
+    cache.put(path, (ident, value))
+    return value
 
 
 def _spark_context():

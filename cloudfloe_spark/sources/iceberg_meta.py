@@ -71,20 +71,39 @@ def _read_text(path: str) -> str:
         return f.read()
 
 
-@_functools.lru_cache(maxsize=256)
-def _read_remote_manifest_cached(path: str) -> tuple:
-    return tuple(read_avro_bytes(fsio.read_bytes(path), name=path))
+#: Work derived from one immutable file, cached per file and validated by
+#: its identity (:func:`fsio.cached_by_file`): parsed manifests and lists,
+#: parquet footer schemas, and the data files a position-delete file
+#: names. One resolve reads the same manifests from several projections
+#: (live paths, delete files, sequence numbers, stats), and every request
+#: re-resolves; a new commit writes new files, so nothing goes stale.
+_FILE_CACHE_MAX = 4096
+_MANIFEST_CACHE = fsio.LRUCache(_FILE_CACHE_MAX)
+_FOOTER_SCHEMA_CACHE = fsio.LRUCache(_FILE_CACHE_MAX)
+_DELETE_TARGET_CACHE = fsio.LRUCache(_FILE_CACHE_MAX)
+
+
+def _parse_manifest(path: str) -> tuple:
+    if fsio.is_remote(path):
+        return tuple(read_avro_bytes(fsio.read_bytes(path), name=path))
+    return tuple(read_avro(fsio.local_path(path) or path))
 
 
 def _read_manifest(path: str) -> list[dict]:
-    if fsio.is_remote(path):
-        # Iceberg manifests and manifest lists are immutable once written
-        # (new snapshots write NEW files), so caching by full URI is
-        # spec-safe — and one iceberg_scan resolves the same manifests
-        # from several projections (live paths, delete files, sequence
-        # numbers), which must not mean several network fetches each.
-        return list(_read_remote_manifest_cached(path))
-    return read_avro(fsio.local_path(path) or path)
+    """Records of a manifest or manifest list, parsed once per file
+    identity. Callers share the record dicts and must not mutate them."""
+    return list(fsio.cached_by_file(_MANIFEST_CACHE, path, _parse_manifest))
+
+
+def _footer_schema(path: str):
+    """Arrow schema of a parquet file's footer, read once per identity."""
+
+    def read(p: str):
+        import pyarrow.parquet as pq
+
+        return pq.read_schema(fsio.arrow_source(p))
+
+    return fsio.cached_by_file(_FOOTER_SCHEMA_CACHE, path, read)
 
 
 def _join(root: str, *parts: str) -> str:
@@ -463,9 +482,6 @@ def variant_columns(
     ]
 
 
-_FOOTER_SCHEMA_CACHE: dict = {}
-
-
 def variant_shred_groups(
     paths: "list[str]",
     cols: "list[str]",
@@ -507,12 +523,7 @@ def variant_shred_groups(
     groups: dict = {}
     errors: list[str] = []
     for p in paths:
-        sch = _FOOTER_SCHEMA_CACHE.get(p)
-        if sch is None:
-            import pyarrow.parquet as pq
-
-            sch = pq.read_schema(fsio.arrow_source(p))
-            _FOOTER_SCHEMA_CACHE[p] = sch
+        sch = _footer_schema(p)
         suffix = p.rsplit("/data/", 1)[-1]
         descs: dict = {}
         bad = False
@@ -673,9 +684,6 @@ def ns_precision_errors(
     carry the old name). Only ns tables pay the footer read (cached per
     immutable file)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cloudfloe_spark.sources import fsio
 
     names_for: dict[str, list[str]] = {c: [c] for c in cols}
     for old, cur in (name_history or {}).items():
@@ -684,10 +692,7 @@ def ns_precision_errors(
 
     out: list[str] = []
     for p in paths:
-        sch = _FOOTER_SCHEMA_CACHE.get(p)
-        if sch is None:
-            sch = pq.read_schema(fsio.arrow_source(p))
-            _FOOTER_SCHEMA_CACHE[p] = sch
+        sch = _footer_schema(p)
         suffix = p.rsplit("/data/", 1)[-1]
         for c, cand in names_for.items():
             disk = next((n for n in cand if n in sch.names), None)
@@ -860,17 +865,14 @@ def position_delete_targets(paths: list[str]) -> set[str]:
     return out
 
 
-_DELETE_TARGET_CACHE: dict[str, frozenset] = {}
-
-
 def position_delete_targets_cached(path: str) -> frozenset:
     """Per-file cached :func:`position_delete_targets` (delete files are
     immutable, like data files — the footer answer never changes)."""
-    t = _DELETE_TARGET_CACHE.get(path)
-    if t is None:
-        t = frozenset(position_delete_targets([path]))
-        _DELETE_TARGET_CACHE[path] = t
-    return t
+    return fsio.cached_by_file(
+        _DELETE_TARGET_CACHE,
+        path,
+        lambda p: frozenset(position_delete_targets([p])),
+    )
 
 
 def prune_position_deletes(
@@ -1221,27 +1223,14 @@ def schema_name_history(
     return hist
 
 
-# Footer column names are immutable for a given (immutable) Iceberg data
-# file path, so cache them process-wide: without this, ANY rename in the
-# schema log turns every subsequent read of the table into a re-fetch of
-# every live file's footer — and for remote schemes (which fsio fetches
-# whole at fixture scale) a double full-corpus download per query.
-_FOOTER_NAME_CACHE: dict[str, list[str]] = {}
-
-
 def parquet_column_names(path: str) -> list[str]:
-    """Top-level column names from a parquet file's footer, cached per
-    path (Iceberg data files are immutable). Local paths read the footer
-    directly; served remote schemes go through fsio (the whole object at
-    fixture scale — a production reader range-reads the footer)."""
-    import pyarrow.parquet as pq
-
-    cached = _FOOTER_NAME_CACHE.get(path)
-    if cached is not None:
-        return cached
-    names = pq.read_schema(fsio.arrow_source(path)).names
-    _FOOTER_NAME_CACHE[path] = names
-    return names
+    """Top-level column names from a parquet file's footer, read once per
+    file identity: without the cache, ANY rename in the schema log turns
+    every later read of the table into a re-fetch of every live file's
+    footer. Local paths read the footer directly; served remote schemes
+    go through fsio (the whole object at fixture scale — a production
+    reader range-reads the footer)."""
+    return _footer_schema(path).names
 
 
 def scan_groups(

@@ -1,7 +1,9 @@
 """One file-identity rule (``sources.fsio.local_path`` / ``file_identity``)
-and the build-once fixture helper keyed on it (``queries.catalog.
-build_once``): URI forms, relative/remote pass-through at the former
-call sites, concurrent builders, failed builds, and input changes."""
+and the two things keyed on it — the build-once fixture helper
+(``queries.catalog.build_once``) and the per-file cache
+(``fsio.cached_by_file``): URI forms, relative/remote pass-through at the
+former call sites, concurrent builders and cache users, failed builds,
+and input changes."""
 
 from __future__ import annotations
 
@@ -80,6 +82,67 @@ def _fill(d: str) -> None:
     for i in range(3):
         with open(os.path.join(d, f"part{i}"), "w") as f:
             f.write("ok")
+
+
+def test_lru_cache_under_concurrent_threads():
+    """More threads than cores hammer one small cache: it never exceeds
+    its bound and every hit returns the value stored under its key."""
+    import sys
+
+    cache = fsio.LRUCache(8)
+    wrong = []
+
+    def worker(t: int) -> None:
+        for i in range(2000):
+            key = (t * 7 + i) % 24
+            got = cache.get(key)
+            if got is not None and got != key * 3:
+                wrong.append((key, got))
+            cache.put(key, key * 3)
+            if len(cache) > 8:
+                wrong.append(("size", len(cache)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            for f in [ex.submit(worker, t) for t in range(16)]:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert wrong == []
+    assert len(cache) == 8
+    assert cache.hits + cache.misses == 16 * 2000
+
+
+def test_cached_by_file_recomputes_on_new_identity(tmp_path):
+    cache = fsio.LRUCache(4)
+    calls = []
+
+    def read(p):
+        calls.append(p)
+        with open(p) as f:
+            return f.read()
+
+    p = str(tmp_path / "f")
+    with open(p, "w") as f:
+        f.write("one")
+    assert fsio.cached_by_file(cache, p, read) == "one"
+    assert fsio.cached_by_file(cache, p, read) == "one"
+    assert len(calls) == 1
+    os.replace(_write(tmp_path / "g", "two"), p)  # new inode, same path
+    assert fsio.cached_by_file(cache, p, read) == "two"
+    os.remove(p)  # vanished: served its last value
+    assert fsio.cached_by_file(cache, p, read) == "two"
+    assert len(calls) == 2
+    with pytest.raises(OSError):  # never seen and missing: read raises
+        fsio.cached_by_file(cache, str(tmp_path / "none"), read)
+
+
+def _write(path, text: str) -> str:
+    with open(path, "w") as f:
+        f.write(text)
+    return str(path)
 
 
 def test_build_once_concurrent_callers_build_once(tmpdir_root):

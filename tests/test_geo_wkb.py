@@ -881,8 +881,12 @@ def test_wrap_interval_properties():
     """Property: wrap_interval returns a COVER of every input (circle
     membership) whose width is exactly 360° minus the largest circular
     gap — i.e. the minimal cover. Checked against a brute-force gap
-    computation over random longitude sets."""
-    from hypothesis import given, settings
+    computation over random longitude sets. The oracle's arithmetic is
+    exact (``Fraction``): in floats, a gap of 360 - 2.8e-14 rounds to
+    360 and ``% 360`` makes it 0."""
+    from fractions import Fraction
+
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from cloudfloe_spark.functions.geo import wrap_interval
@@ -891,7 +895,8 @@ def test_wrap_interval_properties():
         return lo <= x <= hi if lo <= hi else (x >= lo or x <= hi)
 
     def width(lo, hi):
-        return hi - lo if lo <= hi else (180.0 - lo) + (hi + 180.0)
+        lo, hi = Fraction(lo), Fraction(hi)
+        return hi - lo if lo <= hi else (180 - lo) + (hi + 180)
 
     lons = st.lists(
         st.floats(min_value=-180.0, max_value=180.0,
@@ -901,6 +906,7 @@ def test_wrap_interval_properties():
 
     @settings(max_examples=300, deadline=None)
     @given(lons)
+    @example([179.99999999999997, -180.0])
     def check(vals):
         if -180.0 in vals and 180.0 in vals:
             return  # ±180 alias the same circular point — the gap
@@ -912,12 +918,12 @@ def test_wrap_interval_properties():
             assert lo == hi == pts[0]
             return
         gaps = [
-            (pts[(i + 1) % len(pts)] - pts[i]) % 360.0
+            (Fraction(pts[(i + 1) % len(pts)]) - Fraction(pts[i])) % 360
             for i in range(len(pts))
         ]
         # minimality: the cover's width is the circle minus the
-        # largest gap (tolerate fp rounding in the % arithmetic)
-        assert abs(width(lo, hi) - (360.0 - max(gaps))) < 1e-9
+        # largest gap
+        assert abs(width(lo, hi) - (360 - max(gaps))) < 1e-9
 
     check()
 

@@ -1577,6 +1577,22 @@ def test_parquet_footer_names_cached_per_path(tmp_path):
     assert im.parquet_column_names(p) == ["a", "b"]  # served from cache
 
 
+def test_parquet_footer_names_follow_replaced_file(tmp_path):
+    """The footer cache is validated by file identity: a file replaced at
+    the same path (new inode) yields its own footer names."""
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), p)
+    assert im.parquet_column_names(p) == ["a", "b"]
+    old_ino = os.stat(p).st_ino
+    os.link(p, str(tmp_path / "pin"))  # keep the old inode allocated
+    os.remove(p)
+    pq.write_table(pa.table({"c": [2]}), p)
+    assert os.stat(p).st_ino != old_ino
+    assert im.parquet_column_names(p) == ["c"]
+
+
 def test_multi_field_partition_pruning(spark, tmp_path):
     """Multi-field spec — days(ts) + bucket[4](uid), the layout real
     Iceberg tables overwhelmingly use: conjuncts on BOTH source columns
@@ -2836,3 +2852,187 @@ def test_analyze_typed_columns_exact_ndv(spark, tmp_path):
         _cfg(),
     ).rows
     assert {r[0]: r[1] for r in rows} == {"ts": 37, "d": 11, "b": 2, "x": 5}
+
+
+# --- process-wide plan cache ----------------------------------------------------
+
+
+@pytest.fixture()
+def plan_cache(monkeypatch):
+    """An empty plan cache for one test, so hits and misses count only
+    that test's resolves."""
+    from cloudfloe_spark.service import iceberg_local as il
+    from cloudfloe_spark.sources import fsio
+
+    cache = fsio.LRUCache(il._PLAN_CACHE_MAX)
+    monkeypatch.setattr(il, "_PLAN_CACHE", cache)
+    return cache
+
+
+def test_plan_cache_hits_unchanged_table_across_requests(
+    spark, two_snapshot_table, plan_cache
+):
+    """Every request opens a new session; the second one still reuses the
+    first one's plan and returns the same rows."""
+    root = two_snapshot_table[0]
+    sql = f"SELECT id, name FROM iceberg_scan('{root}') ORDER BY id"
+    first = run_query(spark, sql, _cfg())
+    assert (plan_cache.hits, plan_cache.misses) == (0, 1)
+    second = run_query(spark, sql, _cfg())
+    assert (plan_cache.hits, plan_cache.misses) == (1, 1)
+    assert second.rows == first.rows == [[3, "c"], [4, "d"], [5, "e"]]
+
+
+def test_plan_cache_misses_after_delete_append_and_compaction(
+    spark, tmp_path, plan_cache
+):
+    import pyarrow.parquet as pq
+
+    from cloudfloe_spark.sources.iceberg_fixture import (
+        commit_row_delta_snapshot,
+    )
+    from cloudfloe_spark.sources.maintenance import (
+        compact_iceberg_table,
+        delete_where,
+    )
+
+    root = str(tmp_path / "tw")
+    schema = pa.schema([("id", pa.int64())])
+    LocalIcebergTable(root, schema).append_snapshot(
+        [pa.table({"id": [0, 1, 2]}), pa.table({"id": [3, 4]})],
+        timestamp_ms=T1,
+    )
+    sql = f"SELECT id FROM iceberg_scan('{root}') ORDER BY id"
+
+    def ids(expect_miss: bool):
+        misses = plan_cache.misses
+        out = [r[0] for r in run_query(spark, sql, _cfg()).rows]
+        assert plan_cache.misses == misses + expect_miss
+        return out
+
+    assert ids(True) == [0, 1, 2, 3, 4]
+    assert ids(False) == [0, 1, 2, 3, 4]
+    delete_where(spark, root, "id < 2", timestamp_ms=T1 + 1000)
+    assert ids(True) == [2, 3, 4]
+    extra = os.path.join(root, "data", "extra.parquet")
+    pq.write_table(pa.table({"id": [7, 8]}), extra)
+    commit_row_delta_snapshot(
+        root, new_data_files=[(extra, 2)], timestamp_ms=T1 + 2000
+    )
+    assert ids(True) == [2, 3, 4, 7, 8]
+    compact_iceberg_table(spark, root, timestamp_ms=T1 + 3000)
+    assert ids(True) == [2, 3, 4, 7, 8]
+    assert ids(False) == [2, 3, 4, 7, 8]
+
+
+def test_plan_cache_reregisters_a_dropped_view(spark, two_snapshot_table, plan_cache):
+    import re
+
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+
+    root = two_snapshot_table[0]
+    sess = spark.newSession()
+    sql = f"SELECT id FROM iceberg_scan('{root}')"
+    out = resolve_iceberg_reads(sess, sql)
+    sess.catalog.dropTempView(re.search(r"cf_ice_\w+", out).group(0))
+    out = resolve_iceberg_reads(sess, sql)
+    assert plan_cache.hits == 1
+    assert sorted(r[0] for r in sess.sql(out).collect()) == [3, 4, 5]
+
+
+def test_plan_cache_stays_within_its_bound(spark, two_snapshot_table, monkeypatch):
+    from cloudfloe_spark.service import iceberg_local as il
+    from cloudfloe_spark.sources import fsio
+
+    root, s1, s2, _t = two_snapshot_table
+    cache = fsio.LRUCache(2)
+    monkeypatch.setattr(il, "_PLAN_CACHE", cache)
+    reads = [
+        (f" VERSION AS OF {s1}", [1, 2, 3]),
+        (f" VERSION AS OF {s2}", [3, 4, 5]),
+        ("", [3, 4, 5]),
+        (f" VERSION AS OF {s1}", [1, 2, 3]),  # evicted: rebuilt
+    ]
+    for clause, expect in reads:
+        sql = f"SELECT id FROM iceberg_scan('{root}'){clause}"
+        assert _ids(run_query(spark, sql, _cfg())) == expect
+        assert len(cache) <= 2
+    assert (cache.hits, cache.misses) == (0, 4)
+
+
+def test_plan_cache_shared_by_conjuncts_that_prune_alike(
+    spark, two_snapshot_table, plan_cache
+):
+    """The scan key is taken after pruning: conjuncts that keep the same
+    files share one entry; one that prunes a file gets its own."""
+    root = two_snapshot_table[0]  # live files: id 3 | ids 4, 5
+
+    def ids(where):
+        sql = f"SELECT id FROM iceberg_scan('{root}') WHERE {where}"
+        return _ids(run_query(spark, sql, _cfg()))
+
+    assert ids("id >= 3") == [3, 4, 5]
+    assert ids("id <= 5") == [3, 4, 5]
+    assert (plan_cache.hits, len(plan_cache)) == (1, 1)
+    assert ids("id >= 4") == [4, 5]
+    assert (plan_cache.hits, len(plan_cache)) == (1, 2)
+
+
+def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cache):
+    """Position-delete files read under the spec's fixed schema, so
+    applying them starts no footer-inference job."""
+    import uuid
+
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+
+    root = str(tmp_path / "tpd")
+    t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
+    t.append_snapshot(
+        [pa.table({"id": [1, 2]}), pa.table({"id": [3]})], timestamp_ms=T1
+    )
+    sess = spark.newSession()
+    sc = spark.sparkContext
+    sql = f"SELECT id FROM iceberg_scan('{root}')"
+
+    def resolve_jobs():
+        group = f"cf-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = resolve_iceberg_reads(sess, sql)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _out, plain = resolve_jobs()
+    target = im.live_data_paths(root, im.resolve_snapshot(root))[0]
+    t.position_delete_snapshot([(target, 0)], timestamp_ms=T2)
+    out, with_deletes = resolve_jobs()
+    assert plan_cache.misses == 2
+    assert with_deletes <= plain
+    assert sorted(r[0] for r in sess.sql(out).collect()) == [2, 3]
+
+
+def test_plan_cache_under_concurrent_requests(spark, two_snapshot_table, plan_cache):
+    """Requests racing on one table (more threads than cores) all read
+    the right rows and leave one entry behind."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    root = two_snapshot_table[0]
+    sql = f"SELECT id FROM iceberg_scan('{root}')"
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        with ThreadPoolExecutor(max_workers=6) as ex:
+            futs = [
+                ex.submit(lambda: _ids(run_query(spark, sql, _cfg())))
+                for _ in range(12)
+            ]
+            results = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert results == [[3, 4, 5]] * 12
+    assert len(plan_cache) == 1
+    assert plan_cache.hits + plan_cache.misses == 12

@@ -710,22 +710,22 @@ class TestPrunePositionDeletesProperty:
             scanned=st.sets(names, max_size=6),
         )
         def check(targets_per_delete, scanned):
-            cache = {}
+            targets = {}
             dpaths = []
             for i, tg in enumerate(targets_per_delete):
                 p = f"/w/t/data/deletes-{i}.parquet"
                 dpaths.append(p)
-                cache[p] = tg
-            old = dict(im._DELETE_TARGET_CACHE)
-            im._DELETE_TARGET_CACHE.clear()
-            im._DELETE_TARGET_CACHE.update(cache)
+                targets[p] = tg
+            # the delete files do not exist, so nothing is cached: each
+            # lookup reads its targets from the stand-in footer reader
+            real = im.position_delete_targets
+            im.position_delete_targets = lambda ps: set(targets[ps[0]])
             try:
                 kept = im.prune_position_deletes(
                     dpaths, [f"/w/t/data/{s}" for s in scanned]
                 )
             finally:
-                im._DELETE_TARGET_CACHE.clear()
-                im._DELETE_TARGET_CACHE.update(old)
+                im.position_delete_targets = real
             for p, tg in zip(dpaths, targets_per_delete):
                 if tg & scanned:
                     assert p in kept  # NEVER drop a targeting file

@@ -379,3 +379,25 @@ def test_no_config_run_uses_request_scoped_session(spark, tmp_path):
         v.name for v in spark.catalog.listTables() if v.name.startswith("cf_")
     } - before
     assert leaked == set()
+
+
+def test_classpath_probed_once_per_class(spark, monkeypatch):
+    """The classpath cannot change once the JVM has started, so each class
+    name is probed at most once however many requests ask."""
+    import collections
+
+    from cloudfloe_spark.service import engine as eng
+
+    calls = collections.Counter()
+    real = eng._load_class
+
+    def counting(jvm, name):
+        calls[name] += 1
+        return real(jvm, name)
+
+    monkeypatch.setattr(eng, "_CLASS_PROBES", {})
+    monkeypatch.setattr(eng, "_load_class", counting)
+    for _ in range(3):
+        assert run_query(spark, "SELECT 1 AS x", _cfg()).rows == [[1]]
+    assert calls["org.apache.iceberg.spark.SparkCatalog"] == 1
+    assert max(calls.values()) == 1
