@@ -36,7 +36,8 @@ against local tables:
 
 Each resolved reference becomes a per-request temp view (request sessions
 have isolated view namespaces — `engine.request_session`). Row-level
-deletes are APPLIED, not rejected: position deletes via an anti-join on
+deletes are APPLIED, not rejected (:mod:`cloudfloe_spark.sources.deletes`):
+position deletes and deletion vectors via an anti-join on
 ``(_metadata.file_path, _metadata.row_index)`` and equality deletes via
 sequence-ordered null-safe anti-joins — strictly better than the
 reference, which hard-rejects any delete-carrying table
@@ -59,6 +60,12 @@ from cloudfloe_spark.service.convert import CATALOG_NAME, _sub_outside_literals
 from cloudfloe_spark.service.errors import bad_request
 from cloudfloe_spark.sources import fsio
 from cloudfloe_spark.sources import iceberg_meta as im
+from cloudfloe_spark.sources.deletes import (
+    RowDeletes,
+    equality_delete_frames,
+    position_delete_frame,
+    read_deletion_vector,
+)
 
 _SCAN_TT_RE = re.compile(
     r"""iceberg_scan\(\s*['"]([^'"]+)['"]\s*\)
@@ -209,7 +216,10 @@ def _cached_view(sess, name: str, key: tuple, build) -> str:
     key = (key, sess.sparkContext, conf)
     plan = _PLAN_CACHE.get(key)
     if plan is None:
-        jdf = build()._jdf
+        try:
+            jdf = build()._jdf
+        except im.IcebergMetadataError as e:  # e.g. an unappliable delete
+            raise bad_request(f"Iceberg read failed: {e}") from None
         _PLAN_CACHE.put(key, jdf.queryExecution().analyzed())
     else:
         jdf = sess._jvm.org.apache.spark.sql.classic.Dataset.ofRows(jsess, plan)
@@ -269,15 +279,6 @@ def _snapshot_view(
             timestamp_ms=_parse_ts_ms(ts_text) if ts_text else None,
             metadata_path=metadata_path,
         )
-        if im.unreadable_equality_deletes(root, snap, metadata_path):
-            # Equality deletes whose field ids don't resolve (or v1-era
-            # files with no equality_ids at all) cannot be applied —
-            # reading around them would silently resurrect deleted rows.
-            raise bad_request(
-                "Table has equality-delete files this engine cannot apply "
-                "(missing or unresolvable equality field ids). Run "
-                "compaction before querying."
-            )
         paths = im.live_data_paths(root, snap)
         # Transform-aware manifest pruning (inclusive projection): WHERE
         # conjuncts on partition SOURCE columns eliminate files whose
@@ -413,32 +414,14 @@ def _scan_frame(
     schema evolution, v3 variant and ns columns, partition stamping and
     the geo row window, over exactly ``paths``."""
     try:
-        pos_deletes = im.position_delete_paths(root, snap)
-        if pos_deletes and paths:
-            # Delete-file pruning (r8): a pruned scan applies only the
-            # delete files that NAME its surviving data files —
-            # footer-stats driver work, cached per immutable delete file.
-            pos_deletes = im.prune_position_deletes(pos_deletes, paths)
-        # v3 deletion vectors (r10 stretch): reject the v3 features the
-        # reader cannot honor (clear 400, never a silent wrong read),
-        # then gather the DV entries naming surviving files — they apply
-        # through the same anti-join as v2 position deletes.
+        # v3: reject the features the reader cannot honor (clear 400,
+        # never a silent wrong read)
         bad_v3 = im.unsupported_v3_features(root, metadata_path)
         if bad_v3:
             raise bad_request(
                 "Iceberg v3 feature(s) this engine does not support: "
                 + "; ".join(sorted(set(bad_v3)))
             )
-        dv_records = im.deletion_vector_records(root, snap)
-        if dv_records and paths:
-            scanned = {p.rsplit("/data/", 1)[-1] for p in paths}
-            dv_records = [
-                r
-                for r in dv_records
-                if r["referenced_data_file"].rsplit("/data/", 1)[-1]
-                in scanned
-            ]
-        eq_deletes = im.equality_delete_records(root, snap)
         # TIME TRAVEL resolves under the SNAPSHOT's schema when the
         # metadata records one (spec field `schema-id` per snapshot) —
         # a pre-rename snapshot shows pre-rename column names. The
@@ -447,12 +430,9 @@ def _scan_frame(
         # name — Iceberg scans are current-schema; only time travel is
         # write-time-schema).
         snap_sid = snap.get("schema-id") if time_travel else None
-        field_names = (
-            im.schema_field_names(root, metadata_path, schema_id=snap_sid)
-            if eq_deletes
-            else {}
+        deletes = RowDeletes(
+            sess, root, snap, metadata_path, paths, schema_id=snap_sid
         )
-        file_seqs = im.live_data_seqs(root, snap) if eq_deletes else {}
         # Schema evolution: group files by the rename map their footer
         # needs (field-id resolution via the schema log — a renamed
         # column's old data files keep the old parquet name; reading by
@@ -531,19 +511,11 @@ def _scan_frame(
         part_values = (
             im.live_data_partitions(root, snap) if part_fields else {}
         )
-        name_history = (
-            im.schema_name_history(root, metadata_path, schema_id=snap_sid)
-            if eq_deletes
-            else {}
-        )
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
     if paths:
         from pyspark.sql import functions as F
 
-        # Shared per-resolve delete state (r16): position-delete and
-        # deletion-vector frames build once and serve every file group.
-        dctx: dict = {}
         parts = []
         for gpaths, renames, read_ddl, default_fills in groups:
             # Sub-group by identity-partition tuple so each sub-group can
@@ -579,23 +551,8 @@ def _scan_frame(
                 # columns), so the fill survives the rename untouched.
                 for _fc, (_fv, _ft) in (default_fills or {}).items():
                     gdf = gdf.withColumn(_fc, F.lit(_fv).cast(_ft))
-                # Deletes apply BEFORE the rename: both use _metadata
-                # pseudo-columns of the fresh scan, and equality-delete
-                # value columns translate into each group's on-disk names.
-                if pos_deletes:
-                    gdf = _apply_position_deletes(
-                        sess, gdf, pos_deletes, ctx=dctx
-                    )
-                if dv_records:
-                    gdf = _apply_deletion_vectors(
-                        sess, gdf, dv_records, ctx=dctx,
-                        group_paths=spaths,
-                    )
-                if eq_deletes:
-                    gdf = _apply_equality_deletes(
-                        sess, gdf, eq_deletes, field_names, file_seqs,
-                        renames=renames, name_history=name_history,
-                    )
+                # deletes apply to the fresh scan, before the rename
+                gdf = deletes.apply(gdf, spaths, renames)
                 if renames:
                     gdf = gdf.withColumnsRenamed(renames)
                 if pvals:
@@ -654,20 +611,7 @@ def _scan_frame(
                 for _fc, (_fv, _ft) in v_fills.items():
                     if _fc not in present:
                         gdf = gdf.withColumn(_fc, F.lit(_fv).cast(_ft))
-                if pos_deletes:
-                    gdf = _apply_position_deletes(
-                        sess, gdf, pos_deletes, ctx=dctx
-                    )
-                if dv_records:
-                    gdf = _apply_deletion_vectors(
-                        sess, gdf, dv_records, ctx=dctx,
-                        group_paths=spaths,
-                    )
-                if eq_deletes:
-                    gdf = _apply_equality_deletes(
-                        sess, gdf, eq_deletes, field_names, file_seqs,
-                        renames=grmap, name_history=name_history,
-                    )
+                gdf = deletes.apply(gdf, spaths, grmap)
                 if grmap:
                     gdf = gdf.withColumnsRenamed(grmap)
                 # typed-path pushdown (r13, VERDICT r12 #2): when this
@@ -947,319 +891,6 @@ def _stats_broadcast_hint(sess, df, root, snap, metadata_path):
     return df
 
 
-#: The Iceberg spec's fixed position-delete schema (field ids 2147483546
-#: and 2147483545). Reading under it skips footer schema inference, which
-#: is a Spark job per read; the optional ``row`` column is not needed.
-_POSITION_DELETE_DDL = "file_path STRING, pos BIGINT"
-
-
-def _apply_position_deletes(
-    sess, data, delete_paths: list[str], ctx: dict | None = None
-):
-    """Merge-on-read for Iceberg v2 position deletes, no runtime jar
-    needed: a position-delete file is plain parquet ``(file_path, pos)``,
-    and Spark's parquet source exposes exactly the matching coordinates as
-    ``_metadata.file_path`` / ``_metadata.row_index`` — so deletion is one
-    LEFT ANTI join on the composite key (reference rejects these tables
-    outright, `backend/main.py:398-414`).
-
-    Join keys are compared on the path suffix after the last ``/data/``
-    component (unique within a table: uuid file names) so a relocated
-    table — where manifests and delete files record stale absolute URIs —
-    still matches. Scale: the delete side is a fraction of the data side;
-    no forced hint, AQE broadcasts it when it fits."""
-    from pyspark.sql import functions as F
-
-    def suffix(col):
-        return F.substring_index(col, "/data/", -1)
-
-    # One delete frame per resolve (r16): each file group's anti-join
-    # reuses the same DataFrame object, so the broadcast/distinct
-    # subtree canonicalizes identically and ReuseExchange builds it once
-    # instead of once per group.
-    if ctx is not None and "pos_frame" in ctx:
-        dels = ctx["pos_frame"]
-    else:
-        dels = (
-            sess.read.schema(_POSITION_DELETE_DDL)
-            .parquet(*delete_paths)
-            .select(
-                suffix(F.col("file_path")).alias("__cf_del_file"),
-                F.col("pos").alias("__cf_del_pos"),
-            )
-            .distinct()
-        )
-        if ctx is not None:
-            ctx["pos_frame"] = dels
-    keyed = data.withColumns(
-        {
-            "__cf_file": suffix(F.col("_metadata.file_path")),
-            "__cf_pos": F.col("_metadata.row_index"),
-        }
-    )
-    return keyed.join(
-        dels,
-        (keyed["__cf_file"] == dels["__cf_del_file"])
-        & (keyed["__cf_pos"] == dels["__cf_del_pos"]),
-        "left_anti",
-    ).drop("__cf_file", "__cf_pos")
-
-
-#: above this combined blob size the DV decode moves to the executors —
-#: a driver-side Python list of every deleted position would not survive
-#: a 100-TB table's delete debt (compressed roaring ≈ ≤2 bytes/position,
-#: so 8 MB ≈ ≥4M positions)
-_DV_DRIVER_DECODE_MAX_BYTES = 8 * 1024 * 1024
-
-#: below this many driver-decoded positions the MOR mask is inlined as a
-#: literal scan filter (file == suffix AND pos IN (...)) instead of a
-#: broadcast anti-join — no delete-side scan, no broadcast exchange, no
-#: join node. InSet evaluation is O(1)/row; past the threshold the plan
-#: string and driver literal handling stop being worth it and the shared
-#: broadcast anti-join takes over (r16, VERDICT r15 #1).
-_DV_LITERAL_FILTER_MAX_POSITIONS = 10_000
-
-
-def _dv_decode_driver(dv_records: list[dict]) -> dict:
-    """All Puffin blobs decoded once per resolve → ``{file suffix:
-    sorted unique positions}`` (r16: this used to run once PER FILE
-    GROUP, re-seeking every blob and rebuilding the delete frame for
-    each arm of the union)."""
-    from cloudfloe_spark.sources import puffin
-
-    by_suffix: dict = {}
-    for r in dv_records:
-        try:
-            positions = puffin.read_deletion_vector(
-                r["path"], r["offset"], r["length"]
-            )
-        except (OSError, puffin.PuffinError) as e:
-            raise bad_request(
-                f"Iceberg v3 deletion vector unreadable: {e}"
-            ) from None
-        suf = r["referenced_data_file"].rsplit("/data/", 1)[-1]
-        if positions:
-            by_suffix.setdefault(suf, set()).update(
-                int(p) for p in positions
-            )
-    return {s: sorted(ps) for s, ps in by_suffix.items()}
-
-
-def _apply_deletion_vectors(
-    sess, data, dv_records: list[dict], ctx: dict | None = None,
-    group_paths=None,
-):
-    """Merge-on-read for Iceberg v3 DELETION VECTORS (r10 stretch): each
-    record names one data file's Puffin blob. Small delete sets decode
-    DRIVER-side once per resolve (``ctx`` carries the decoded state
-    across file groups — r16); tiny ones apply as a literal scan filter,
-    the rest through ONE shared broadcast anti-join frame (Python-side
-    dedupe replaces the old per-group ``.distinct()`` exchange, and a
-    group whose files carry no DV skips the join entirely). Past
-    ``_DV_DRIVER_DECODE_MAX_BYTES`` of combined blob bytes the decode
-    runs ON THE EXECUTORS — one task per vector reads its own blob from
-    shared storage and emits that file's positions, so the deleted-row
-    frame is born distributed and the driver never materializes it
-    (the v2 path's scale shape, where delete parquet is executor-read)."""
-    from pyspark.sql import functions as F
-
-    if ctx is None:
-        ctx = {}
-    # Group pruning (both decode paths): every DV record names its data
-    # file, so a group that contains none of the referenced files needs
-    # no delete machinery at all.
-    if group_paths is not None:
-        if "suffixes" not in ctx:
-            ctx["suffixes"] = {
-                r["referenced_data_file"].rsplit("/data/", 1)[-1]
-                for r in dv_records
-            }
-        gsufs = {str(p).rsplit("/data/", 1)[-1] for p in group_paths}
-        hit = gsufs & ctx["suffixes"]
-        if not hit:
-            return data
-    else:
-        hit = None
-
-    total = sum(int(r["length"]) for r in dv_records)
-    if total <= _DV_DRIVER_DECODE_MAX_BYTES:
-        if "by_suffix" not in ctx:
-            ctx["by_suffix"] = _dv_decode_driver(dv_records)
-        by_suffix = ctx["by_suffix"]
-        if not by_suffix:
-            return data
-        if hit is not None and not (hit & by_suffix.keys()):
-            return data  # every DV touching this group is empty
-        n_pos = sum(len(ps) for ps in by_suffix.values())
-        if n_pos <= _DV_LITERAL_FILTER_MAX_POSITIONS:
-            # Literal mask: keep rows whose (file, pos) is not deleted.
-            # Only suffixes present in this group contribute terms.
-            rel = {
-                s: ps
-                for s, ps in by_suffix.items()
-                if hit is None or s in hit
-            }
-            if not rel:
-                return data
-            fcol = F.substring_index(
-                F.col("_metadata.file_path"), "/data/", -1
-            )
-            pcol = F.col("_metadata.row_index")
-            drop = None
-            for s, ps in sorted(rel.items()):
-                term = (fcol == F.lit(s)) & pcol.isin(ps)
-                drop = term if drop is None else (drop | term)
-            return data.filter(~drop)
-        if "frame" not in ctx:
-            # One shared Arrow-backed frame for the whole resolve —
-            # deduped driver-side (no ``.distinct()`` exchange), reused
-            # by every group's anti-join so the broadcast builds once
-            # (ReuseExchange collapses the identical subtrees).
-            import pandas as pd
-
-            files: list = []
-            poss: list = []
-            for s in sorted(by_suffix):
-                ps = by_suffix[s]
-                files.extend([s] * len(ps))
-                poss.extend(ps)
-            ctx["frame"] = F.broadcast(
-                sess.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "__cf_del_file": pd.Series(
-                                files, dtype="object"
-                            ),
-                            "__cf_del_pos": pd.Series(
-                                poss, dtype="int64"
-                            ),
-                        }
-                    )
-                )
-            )
-        dels = ctx["frame"]
-    elif "frame" in ctx:
-        dels = ctx["frame"]
-    else:
-        refs = sess.createDataFrame(
-            [
-                (
-                    r["path"],
-                    int(r["offset"]),
-                    int(r["length"]),
-                    r["referenced_data_file"].rsplit("/data/", 1)[-1],
-                )
-                for r in dv_records
-            ],
-            "path STRING, offset BIGINT, length BIGINT, suffix STRING",
-        ).repartition(min(len(dv_records), 256))
-
-        def decode(batches):
-            # SELF-CONTAINED closure (stdlib + pandas): Arrow UDF workers
-            # do not resolve repo modules — the portable-roaring READ
-            # side is inlined, format-matched to sources/puffin.py.
-            import struct
-            import zlib
-
-            import pandas as pd
-
-            def rb32(buf, pos):
-                (cookie,) = struct.unpack_from("<i", buf, pos)
-                run_bits = b""
-                if (cookie & 0xFFFF) == 12347:
-                    n = (cookie >> 16) + 1
-                    pos += 4
-                    nb = (n + 7) // 8
-                    run_bits = buf[pos:pos + nb]
-                    pos += nb
-                elif cookie == 12346:
-                    (n,) = struct.unpack_from("<i", buf, pos + 4)
-                    pos += 8
-                else:
-                    raise ValueError(f"roaring cookie {cookie}")
-                kc = []
-                for i in range(n):
-                    k, c = struct.unpack_from("<HH", buf, pos)
-                    kc.append((k, c + 1))
-                    pos += 4
-                if cookie == 12346 or n >= 4:
-                    pos += 4 * n
-                vals = []
-                for i, (k, card) in enumerate(kc):
-                    base = k << 16
-                    if run_bits and (run_bits[i // 8] & (1 << (i % 8))):
-                        (nr,) = struct.unpack_from("<H", buf, pos)
-                        pos += 2
-                        for _ in range(nr):
-                            s, ln = struct.unpack_from("<HH", buf, pos)
-                            pos += 4
-                            vals.extend(
-                                base + v for v in range(s, s + ln + 1)
-                            )
-                    elif card <= 4096:
-                        vs = struct.unpack_from(f"<{card}H", buf, pos)
-                        pos += 2 * card
-                        vals.extend(base + v for v in vs)
-                    else:
-                        bits = buf[pos:pos + 8192]
-                        pos += 8192
-                        for bi, byte in enumerate(bits):
-                            while byte:
-                                low = byte & -byte
-                                vals.append(
-                                    base + bi * 8 + low.bit_length() - 1
-                                )
-                                byte ^= low
-                return vals, pos
-
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    with open(row["path"], "rb") as fh:
-                        fh.seek(int(row["offset"]))
-                        blob = fh.read(int(row["length"]))
-                    (ln,) = struct.unpack_from(">I", blob, 0)
-                    body = blob[4:4 + ln]
-                    if body[:4] != b"\xd1\xd3\x39\x64":
-                        raise ValueError("deletion vector: bad magic")
-                    (crc,) = struct.unpack_from(">I", blob, 4 + ln)
-                    if (zlib.crc32(body) & 0xFFFFFFFF) != crc:
-                        raise ValueError("deletion vector: CRC mismatch")
-                    vec = body[4:]
-                    (nb,) = struct.unpack_from("<Q", vec, 0)
-                    p = 8
-                    out = []
-                    for _ in range(nb):
-                        (hi,) = struct.unpack_from("<I", vec, p)
-                        p += 4
-                        lows, p = rb32(vec, p)
-                        out.extend((hi << 32) | v for v in lows)
-                    yield pd.DataFrame(
-                        {
-                            "__cf_del_file": [row["suffix"]] * len(out),
-                            "__cf_del_pos": out,
-                        }
-                    )
-
-        dels = refs.mapInPandas(
-            decode, schema="__cf_del_file STRING, __cf_del_pos BIGINT"
-        )
-        ctx["frame"] = dels
-    keyed = data.withColumns(
-        {
-            "__cf_file": F.substring_index(
-                F.col("_metadata.file_path"), "/data/", -1
-            ),
-            "__cf_pos": F.col("_metadata.row_index"),
-        }
-    )
-    return keyed.join(
-        dels,
-        (keyed["__cf_file"] == dels["__cf_del_file"])
-        & (keyed["__cf_pos"] == dels["__cf_del_pos"]),
-        "left_anti",
-    ).drop("__cf_file", "__cf_pos")
-
-
 def _resolve_range_endpoint(root: str, token: str, metadata_path) -> dict:
     """Snapshot for an incremental-range endpoint: bare digits = snapshot
     id; quoted = ref name (tag/branch) or, failing that, a timestamp —
@@ -1281,102 +912,6 @@ def _resolve_range_endpoint(root: str, token: str, metadata_path) -> dict:
     return im.resolve_snapshot(
         root, version=int(token), metadata_path=metadata_path
     )
-
-
-def _delete_file_column(path: str, current: str, hist: dict) -> str:
-    """On-disk column name inside a delete parquet FILE for the current
-    field name ``current``: a delete file written before a rename carries
-    the old parquet name — resolved per file against its own footer using
-    the table's full rename history (schema evolution is metadata-only;
-    already-written files are never rewritten)."""
-    if not hist:
-        return current
-    try:
-        from cloudfloe_spark.sources.iceberg_meta import parquet_column_names
-
-        avail = set(parquet_column_names(path))
-    except Exception:
-        return current
-    if current in avail:
-        return current
-    for old, cur in hist.items():
-        if cur == current and old in avail:
-            return old
-    return current
-
-
-def _apply_equality_deletes(
-    sess,
-    data,
-    deletes: list[dict],
-    field_names: dict,
-    file_seqs: dict,
-    renames: dict | None = None,
-    name_history: dict | None = None,
-):
-    """Merge-on-read for Iceberg v2 equality deletes, no runtime jar
-    needed. Per the spec, an equality-delete row removes every data row
-    whose values NULL-SAFE-equal it on the delete's ``equality_ids``
-    columns AND whose data sequence number is STRICTLY LOWER than the
-    delete's — rows (re-)written after the delete survive.
-
-    Construction: attach each data row's sequence number by joining a
-    tiny broadcast (file-suffix → seq) map derived from the manifests,
-    then one LEFT ANTI join per distinct equality-column-set against the
-    union of that set's delete files (each row carrying its delete
-    sequence). The delete side is a fraction of the data side; no forced
-    hint on it — AQE broadcasts it when it fits."""
-    from pyspark.sql import functions as F
-
-    def suffix(col):
-        return F.substring_index(col, "/data/", -1)
-
-    seq_df = sess.createDataFrame(
-        [(p.rsplit("/data/", 1)[-1], int(s)) for p, s in file_seqs.items()],
-        "__cf_seq_file STRING, __cf_data_seq BIGINT",
-    )
-    keyed = data.withColumn(
-        "__cf_eq_file", suffix(F.col("_metadata.file_path"))
-    ).join(
-        F.broadcast(seq_df),
-        F.col("__cf_eq_file") == F.col("__cf_seq_file"),
-        "left",
-    )
-
-    # Rename-aware resolution (schema evolution): ``field_names`` carries
-    # CURRENT names; a data-file group read under pre-rename names matches
-    # via the inverse of its rename map, and a delete FILE written before
-    # the rename carries the old parquet name too — resolved per delete
-    # file against its own footer using the table's full rename history.
-    inv = {v: k for k, v in (renames or {}).items()}
-    hist = name_history or {}
-
-    def _del_col(path: str, c: str) -> str:
-        return _delete_file_column(path, c, hist)
-
-    by_cols: dict[tuple, list[dict]] = {}
-    for d in deletes:
-        cols = tuple(field_names[i] for i in d["equality_ids"])
-        by_cols.setdefault(cols, []).append(d)
-    for cols, group in by_cols.items():
-        dels = None
-        for d in group:
-            one = (
-                sess.read.parquet(d["path"])
-                .select(
-                    *[
-                        F.col(_del_col(d["path"], c)).alias(f"__cf_del_{c}")
-                        for c in cols
-                    ]
-                )
-                .withColumn("__cf_del_seq", F.lit(int(d["seq"])))
-            )
-            dels = one if dels is None else dels.unionByName(one)
-        cond = F.col("__cf_data_seq") < F.col("__cf_del_seq")
-        for c in cols:
-            cond = cond & F.col(inv.get(c, c)).eqNullSafe(F.col(f"__cf_del_{c}"))
-        keyed = keyed.join(dels, cond, "left_anti")
-    return keyed.drop("__cf_eq_file", "__cf_seq_file", "__cf_data_seq")
 
 
 def _changes_view(sess, root: str, from_id: str, to_id: str) -> str:
@@ -1435,29 +970,17 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
                 "data files were removed or rewritten in the snapshot "
                 "range — run a full refresh of the downstream instead."
             )
-        if im.unreadable_equality_deletes(root, s_to, metadata_path):
-            raise bad_request(
-                "iceberg_changes: the range contains equality-delete "
-                "files this engine cannot apply (missing or unresolvable "
-                "equality field ids). Run compaction before querying."
-            )
         added = sorted(p for p in live_to if p not in live_from)
-        pos_deletes = im.position_delete_paths(root, s_to) if added else []
-        # Deletes at or below the from-snapshot's sequence can only hit
-        # pre-range rows (strictly-lower-seq rule) — skip reading them.
-        eq_deletes = (
-            [
+        # Equality deletes at or below the from-snapshot's sequence can
+        # only hit pre-range rows (strictly-lower-seq rule) — skip them.
+        deletes = RowDeletes(
+            sess, root, s_to, metadata_path, added,
+            equality=[
                 d
                 for d in im.equality_delete_records(root, s_to)
                 if int(d["seq"]) > seq_from
-            ]
-            if added
-            else []
+            ],
         )
-        field_names = (
-            im.schema_field_names(root, metadata_path) if eq_deletes else {}
-        )
-        file_seqs = {p: live_to[p] for p in added} if eq_deletes else {}
         schema_ddl = (
             None
             if added
@@ -1504,15 +1027,6 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
             if added_plain
             else []
         )
-        dv_added = []
-        if added:
-            _asufs = {p.rsplit("/data/", 1)[-1] for p in added}
-            dv_added = [
-                r
-                for r in im.deletion_vector_records(root, s_to)
-                if r["referenced_data_file"].rsplit("/data/", 1)[-1]
-                in _asufs
-            ]
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
     if added:
@@ -1539,25 +1053,12 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
             )
 
         parts = []
-        dctx: dict = {}  # shared delete frames across groups (r16)
         for gpaths, grenames, gddl, gfills in added_groups:
             rd = sess.read.schema(gddl) if gddl else sess.read
             d = rd.parquet(*gpaths)
             for _fc, (_fv, _ft) in (gfills or {}).items():
                 d = d.withColumn(_fc, F.lit(_fv).cast(_ft))
-            if pos_deletes:
-                d = _apply_position_deletes(
-                    sess, d, pos_deletes, ctx=dctx
-                )
-            if dv_added:
-                d = _apply_deletion_vectors(
-                    sess, d, dv_added, ctx=dctx, group_paths=gpaths
-                )
-            if eq_deletes:
-                d = _apply_equality_deletes(
-                    sess, d, eq_deletes, field_names, file_seqs,
-                    renames=grenames, name_history=name_hist,
-                )
+            d = deletes.apply(d, gpaths, grenames)
             if grenames:
                 d = d.withColumnsRenamed(grenames)
             if variant_cols:
@@ -1700,27 +1201,22 @@ def _cdc_frame(
                 "across copy-on-write and replace commits), enable row "
                 "lineage, or run a full refresh instead."
             )
-        if im.unreadable_equality_deletes(root, s_to, metadata_path):
-            raise bad_request(
-                "iceberg_cdc: the range contains equality-delete files "
-                "this engine cannot apply (missing or unresolvable "
-                "equality field ids). Run compaction before querying."
-            )
-        if removed and im.unreadable_equality_deletes(
-            root, s_from, metadata_path
-        ):
-            # the lineage removed-files scan applies the FROM state's
-            # deletes — an unresolvable eq file THERE (even one
-            # compacted away before s_to) must 400 like the s_to case,
-            # not escape as the scan's raw ValueError
-            raise bad_request(
-                "iceberg_cdc: the FROM snapshot carries equality-"
-                "delete files this engine cannot apply (missing or "
-                "unresolvable equality field ids). Run compaction "
-                "before querying."
-            )
         added = sorted(p for p in live_to if p not in live_from)
         carried = sorted(set(live_from) & set(live_to))
+        pos_new = [
+            r["path"]
+            for r in im.position_delete_records(root, s_to)
+            if int(r["seq"]) > seq_from
+        ]
+        eq_to = im.equality_delete_records(root, s_to)
+        eq_new = [d for d in eq_to if int(d["seq"]) > seq_from]
+        eq_old = [d for d in eq_to if int(d["seq"]) <= seq_from]
+        # the inserts' deletes are the range's own (pre-range deletes
+        # cannot reach files added after them)
+        added_deletes = RowDeletes(
+            sess, root, s_to, metadata_path, added,
+            positions=pos_new, equality=eq_new,
+        )
         first_ids: "dict | None" = None
         if want_rid:
             first_ids = {
@@ -1737,8 +1233,6 @@ def _cdc_frame(
                         f"{sfx} carries neither a manifest first_row_id "
                         "nor a materialized _row_id column"
                     )
-        pos_to = im.position_delete_records(root, s_to)
-        pos_new = [r for r in pos_to if int(r["seq"]) > seq_from]
         # v3 DELETION VECTORS in range (r10): a file's vector is an
         # immutable blob superseded per commit, so the NEWLY deleted
         # positions of the range are (to-vector − from-vector) per
@@ -1748,14 +1242,12 @@ def _cdc_frame(
         # vectors reproduce positions the from-snapshot's parquet deletes
         # already killed, and those rows are subtracted below with the
         # rest of the already-dead set.
-        dv_to = im.deletion_vector_records(root, s_to)
         dv_from_map = {
             r["referenced_data_file"].rsplit("/data/", 1)[-1]: r
             for r in im.deletion_vector_records(root, s_from)
         }
         dv_new_positions: dict[str, list[int]] = {}
-        dv_to_records = list(dv_to)
-        for r in dv_to_records:
+        for r in im.deletion_vector_records(root, s_to):
             suf = r["referenced_data_file"].rsplit("/data/", 1)[-1]
             prev = dv_from_map.get(suf)
             if prev is not None and (
@@ -1763,33 +1255,10 @@ def _cdc_frame(
                 and prev["offset"] == r["offset"]
             ):
                 continue  # vector unchanged in range
-            from cloudfloe_spark.sources import puffin as _puffin
-
-            try:
-                now = set(
-                    _puffin.read_deletion_vector(
-                        r["path"], r["offset"], r["length"]
-                    )
-                )
-                before = (
-                    set(
-                        _puffin.read_deletion_vector(
-                            prev["path"], prev["offset"], prev["length"]
-                        )
-                    )
-                    if prev is not None
-                    else set()
-                )
-            except (OSError, _puffin.PuffinError) as e:
-                raise bad_request(
-                    f"iceberg_cdc: deletion vector unreadable: {e}"
-                ) from None
-            fresh = sorted(now - before)
+            before = set(read_deletion_vector(prev)) if prev else set()
+            fresh = sorted(set(read_deletion_vector(r)) - before)
             if fresh:
                 dv_new_positions[suf] = fresh
-        eq_to = im.equality_delete_records(root, s_to)
-        eq_new = [d for d in eq_to if int(d["seq"]) > seq_from]
-        eq_old = [d for d in eq_to if int(d["seq"]) <= seq_from]
         # pre-range position deletes: resolve from the FROM snapshot (the
         # set already applied when the consumer read it)
         pos_old_paths = im.position_delete_paths(root, s_from)
@@ -1906,9 +1375,7 @@ def _cdc_frame(
             # range keeps the full carried scan (sound).
             targets = set(dv_new_positions)
             if pos_new:
-                targets |= im.position_delete_targets(
-                    [r["path"] for r in pos_new]
-                )
+                targets |= im.position_delete_targets(pos_new)
             carried_scan = [
                 p for p in carried
                 if p.rsplit("/data/", 1)[-1] in targets
@@ -1966,53 +1433,29 @@ def _cdc_frame(
     def suffix(col):
         return F.substring_index(col, "/data/", -1)
 
-    def pos_frame(paths):
-        return (
-            sess.read.schema(_POSITION_DELETE_DDL)
-            .parquet(*paths)
-            .select(
-                suffix(F.col("file_path")).alias("__cdc_dfile"),
-                F.col("pos").alias("__cdc_dpos"),
-            )
-            .distinct()
+    def coord_join(df, dels, how):
+        # join on scan coordinates against a delete-position frame
+        return df.join(
+            dels,
+            (df["__cdc_file"] == dels["__cf_del_file"])
+            & (df["__cdc_pos"] == dels["__cf_del_pos"]),
+            how,
         )
 
-    def eq_groups(records):
-        # Delete-side column names resolve per delete FILE against its own
-        # footer (a pre-rename delete file carries the old parquet name);
-        # the data side is already renamed to CURRENT names below.
-        by_cols: dict[tuple, list[dict]] = {}
-        for d in records:
-            cols = tuple(field_names[i] for i in d["equality_ids"])
-            by_cols.setdefault(cols, []).append(d)
-        out = []
-        for cols, group in by_cols.items():
-            dels = None
-            for d in group:
-                one = (
-                    sess.read.parquet(d["path"])
-                    .select(
-                        *[
-                            F.col(
-                                _delete_file_column(d["path"], c, name_hist)
-                            ).alias(f"__cdc_del_{c}")
-                            for c in cols
-                        ]
-                    )
-                    .withColumn("__cdc_del_seq", F.lit(int(d["seq"])))
-                )
-                dels = one if dels is None else dels.unionByName(one)
-            cond = F.col("__cdc_seq") < F.col("__cdc_del_seq")
+    def eq_joins(records):
+        # the data side is already renamed to CURRENT names below
+        for cols, dels in equality_delete_frames(
+            sess, records, field_names, name_hist
+        ):
+            cond = F.col("__cdc_seq") < F.col("__cf_del_seq")
             for c in cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__cdc_del_{c}"))
-            out.append((dels, cond))
-        return out
+                cond = cond & F.col(c).eqNullSafe(F.col(f"__cf_del_{c}"))
+            yield dels, cond
 
     parts = []
     ins_lineage = dead_lineage = None
     if added:
         ins_parts = []
-        dctx: dict = {}  # shared delete frames across groups (r16)
         for gpaths, renames, read_ddl, default_fills in added_groups:
             reader = sess.read
             if read_ddl is not None:
@@ -2024,32 +1467,9 @@ def _cdc_frame(
             g = reader.parquet(*gpaths)
             for _fc, (_fv, _ft) in (default_fills or {}).items():
                 g = g.withColumn(_fc, F.lit(_fv).cast(_ft))
-            # deletes apply BEFORE the rename (both resolve delete-file
-            # columns against on-disk names), exactly as the read path
-            if pos_new:
-                g = _apply_position_deletes(
-                    sess, g, [r["path"] for r in pos_new], ctx=dctx
-                )
-            if dv_to_records:
-                # a row added in range then DV-deleted in range must not
-                # emit an insert (net semantics)
-                added_sufs = {p.rsplit("/data/", 1)[-1] for p in added}
-                dv_added = [
-                    r
-                    for r in dv_to_records
-                    if r["referenced_data_file"].rsplit("/data/", 1)[-1]
-                    in added_sufs
-                ]
-                if dv_added:
-                    g = _apply_deletion_vectors(
-                        sess, g, dv_added, ctx=dctx, group_paths=gpaths
-                    )
-            if eq_new:
-                g = _apply_equality_deletes(
-                    sess, g, eq_new, field_names,
-                    {p: live_to[p] for p in added},
-                    renames=renames, name_history=name_hist,
-                )
+            # deletes apply BEFORE the rename, exactly as the read path;
+            # a row added then deleted in range emits no insert
+            g = added_deletes.apply(g, gpaths, renames)
             if want_rid:
                 # coordinates for rid resolution — _metadata survives
                 # the anti-join applies above
@@ -2162,13 +1582,9 @@ def _cdc_frame(
             dead = df if dead is None else dead.unionByName(df)
 
         if pos_new:
-            nd = pos_frame([r["path"] for r in pos_new])
             _acc(
-                base.join(
-                    nd,
-                    (base["__cdc_file"] == nd["__cdc_dfile"])
-                    & (base["__cdc_pos"] == nd["__cdc_dpos"]),
-                    "left_semi",
+                coord_join(
+                    base, position_delete_frame(sess, pos_new), "left_semi"
                 )
             )
         if dv_new_positions:
@@ -2178,17 +1594,10 @@ def _cdc_frame(
                     for suf, ps in dv_new_positions.items()
                     for p in ps
                 ],
-                "__cdc_dfile STRING, __cdc_dpos BIGINT",
+                "__cf_del_file STRING, __cf_del_pos BIGINT",
             )
-            _acc(
-                base.join(
-                    F.broadcast(dvd),
-                    (base["__cdc_file"] == dvd["__cdc_dfile"])
-                    & (base["__cdc_pos"] == dvd["__cdc_dpos"]),
-                    "left_semi",
-                )
-            )
-        for dels, cond in eq_groups(eq_new):
+            _acc(coord_join(base, F.broadcast(dvd), "left_semi"))
+        for dels, cond in eq_joins(eq_new):
             _acc(base.join(dels, cond, "left_semi"))
         # a row hit by several in-range deletes must emit ONE retraction
         dead = dead.dropDuplicates(["__cdc_file", "__cdc_pos"])
@@ -2196,14 +1605,10 @@ def _cdc_frame(
         # (re-deleting is idempotent on the table, and must be silent
         # in the changelog) — cheap: dead is delete-set-sized by now
         if pos_old_paths:
-            od = pos_frame(pos_old_paths)
-            dead = dead.join(
-                od,
-                (dead["__cdc_file"] == od["__cdc_dfile"])
-                & (dead["__cdc_pos"] == od["__cdc_dpos"]),
-                "left_anti",
+            dead = coord_join(
+                dead, position_delete_frame(sess, pos_old_paths), "left_anti"
             )
-        for dels, cond in eq_groups(eq_old):
+        for dels, cond in eq_joins(eq_old):
             dead = dead.join(dels, cond, "left_anti")
         if want_rid:
             dead_lineage = dead  # keep coords + _row_id for rid below
@@ -3508,6 +2913,43 @@ def _row_lineage_view(sess, root: str, version: "str | None" = None) -> str:
     return name
 
 
+#: metadata functions ``iceberg_<name>('<root>', ...)`` → ``(pattern,
+#: view builder(sess, root, match))``, substituted in this order
+_METADATA_FUNCTIONS = (
+    (_SNAPSHOTS_RE, lambda sess, root, m: _snapshots_view(sess, root)),
+    (_METADATA_RE, lambda sess, root, m: _metadata_view(sess, root)),
+    (_PARTITIONS_RE, lambda sess, root, m: _partitions_view(sess, root)),
+    (_REFS_RE, lambda sess, root, m: _refs_view(sess, root)),
+    (_HISTORY_RE, lambda sess, root, m: _history_view(sess, root)),
+    (_COLSTATS_RE, lambda sess, root, m: _column_stats_view(sess, root)),
+    (
+        _SCANPLAN_RE,
+        lambda sess, root, m: _scan_plan_view(
+            sess, root, m.group(2) and m.group(2).replace("''", "'")
+        ),
+    ),
+    (
+        _VIEW_VERSIONS_RE,
+        lambda sess, root, m: _view_versions_view(sess, root),
+    ),
+    (
+        _MATVIEW_STATUS_RE,
+        lambda sess, root, m: _matview_status_view(sess, root),
+    ),
+    (_DVS_RE, lambda sess, root, m: _deletion_vectors_view(sess, root)),
+    (
+        _ROW_LINEAGE_RE,
+        lambda sess, root, m: _row_lineage_view(
+            sess, root, version=m.group(2)
+        ),
+    ),
+    (
+        _PARTITION_STATS_RE,
+        lambda sess, root, m: _partition_stats_view(sess, root),
+    ),
+)
+
+
 def resolve_iceberg_reads(sess, sql: str) -> str:
     """Rewrite local-table Iceberg scan functions into temp-view references
     backed by the pure-Python snapshot reader. Remote roots and non-Iceberg
@@ -3584,95 +3026,21 @@ def resolve_iceberg_reads(sess, sql: str) -> str:
             geo_prune=(gcol, box, geography),
         )
 
-    def _snapshots(m: re.Match) -> str:
+    def _metadata_fn(regex, build, m: re.Match) -> str:
         root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
+        # a view root holds view metadata, not table metadata
+        if root is None or (
+            regex is not _VIEW_VERSIONS_RE and not _has_metadata(root)
+        ):
             return m.group(0)
-        return _snapshots_view(sess, root)
-
-    def _metadata(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _metadata_view(sess, root)
-
-    def _partitions(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _partitions_view(sess, root)
-
-    def _refs(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _refs_view(sess, root)
-
-    def _history(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _history_view(sess, root)
-
-    def _colstats(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _column_stats_view(sess, root)
-
-    def _scanplan(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        pred = m.group(2)
-        if pred is not None:
-            pred = pred.replace("''", "'")
-        return _scan_plan_view(sess, root, pred)
-
-    def _view_versions(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None:
-            return m.group(0)
-        return _view_versions_view(sess, root)
-
-    def _mv_status(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _matview_status_view(sess, root)
-
-    def _dvs(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _deletion_vectors_view(sess, root)
-
-    def _row_lineage(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _row_lineage_view(sess, root, version=m.group(2))
-
-    def _pstats(m: re.Match) -> str:
-        root = _readable_root(sess, m.group(1).rstrip("/"))
-        if root is None or not _has_metadata(root):
-            return m.group(0)
-        return _partition_stats_view(sess, root)
+        return build(sess, root, m)
 
     out = _sub_outside_literals(_GEO_SCAN_RE, _geo_scan, sql)
     out = _sub_outside_literals(_SCAN_TT_RE, _scan, out)
-    out = _sub_outside_literals(_SNAPSHOTS_RE, _snapshots, out)
-    out = _sub_outside_literals(_METADATA_RE, _metadata, out)
-    out = _sub_outside_literals(_PARTITIONS_RE, _partitions, out)
-    out = _sub_outside_literals(_REFS_RE, _refs, out)
-    out = _sub_outside_literals(_HISTORY_RE, _history, out)
-    out = _sub_outside_literals(_COLSTATS_RE, _colstats, out)
-    out = _sub_outside_literals(_SCANPLAN_RE, _scanplan, out)
-    out = _sub_outside_literals(_VIEW_VERSIONS_RE, _view_versions, out)
-    out = _sub_outside_literals(_MATVIEW_STATUS_RE, _mv_status, out)
-    out = _sub_outside_literals(_DVS_RE, _dvs, out)
-    out = _sub_outside_literals(_ROW_LINEAGE_RE, _row_lineage, out)
-    out = _sub_outside_literals(_PARTITION_STATS_RE, _pstats, out)
+    for regex, build in _METADATA_FUNCTIONS:
+        out = _sub_outside_literals(
+            regex, lambda m, r=regex, b=build: _metadata_fn(r, b, m), out
+        )
     if pending:
         from cloudfloe_spark.sources.partition_pruning import (
             extract_scan_conjuncts,

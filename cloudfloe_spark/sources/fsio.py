@@ -102,7 +102,8 @@ class LRUCache:
                 self._data.popitem(last=False)
 
     def __len__(self) -> int:
-        return len(self._data)
+        with self._lock:  # a put holds one entry past maxsize until it evicts
+            return len(self._data)
 
 
 def cached_by_file(cache: LRUCache, path: str, compute):

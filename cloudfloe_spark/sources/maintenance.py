@@ -23,6 +23,7 @@ import uuid as _uuid
 from pyspark.sql import SparkSession
 
 from cloudfloe_spark.sources import fsio
+from cloudfloe_spark.sources.deletes import RowDeletes
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-sized default
 
@@ -580,20 +581,11 @@ def compact_iceberg_table(
             from cloudfloe_spark.functions.variant import (
                 shredded_to_unshredded_columns,
             )
-            from cloudfloe_spark.service.iceberg_local import (
-                _apply_deletion_vectors,
-                _apply_equality_deletes,
-                _apply_position_deletes,
-            )
 
-            _pos = im.position_delete_paths(root, snap)
-            _dvs = im.deletion_vector_records(root, snap)
-            _eq = im.equality_delete_records(root, snap)
-            _fnames = (
-                im.schema_field_names(root, metadata_path)
-                if _eq else {}
+            _deletes = RowDeletes(
+                sess, root, snap, metadata_path,
+                [p for _spaths, _, _ in _shred for p in _spaths],
             )
-            _fseqs = im.live_data_seqs(root, snap) if _eq else {}
             _pairs = im.schema_read_pairs(
                 root, metadata_path, variant_as="physical",
                 ns_as="physical" if _ns else None,
@@ -610,15 +602,7 @@ def compact_iceberg_table(
                         gdf = gdf.withColumn(
                             _fc, _Fv.lit(_fv).cast(_ft)
                         )
-                if _pos:
-                    gdf = _apply_position_deletes(sess, gdf, _pos)
-                if _dvs:
-                    gdf = _apply_deletion_vectors(sess, gdf, _dvs)
-                if _eq:
-                    gdf = _apply_equality_deletes(
-                        sess, gdf, _eq, _fnames, _fseqs,
-                        renames=_grmap, name_history=_hist,
-                    )
+                gdf = _deletes.apply(gdf, _spaths, _grmap)
                 lineage_out = []
                 if _lineage_t:
                     gdf = gdf.select(
@@ -1052,10 +1036,11 @@ def _mor_raw_scan(
     columns ``__cf_fp`` / ``__cf_pos`` (from ``_metadata``, materialized
     per file group BEFORE any union — the pseudo-column does not survive
     a union of separate scans). Renamed tables are handled exactly as the
-    read path does (`service/iceberg_local.py:232-258`): files grouped by
-    the rename map their footer needs via ``scan_groups`` field-id
-    resolution, deletes applied against on-disk names, then renamed — so
-    a condition on current names matches rows in pre-rename files too.
+    read path does: files grouped by the rename map their footer needs via
+    ``scan_groups`` field-id resolution, deletes applied by one
+    :class:`~cloudfloe_spark.sources.deletes.RowDeletes` against on-disk
+    names, then renamed — so a condition on current names matches rows in
+    pre-rename files too.
 
     Live EQUALITY deletes are applied with the read path's full
     sequence-aware machinery (r8, VERDICT r07 #5 — previously refused for
@@ -1069,43 +1054,7 @@ def _mor_raw_scan(
 
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    eq_recs = im.equality_delete_records(root, snap)
-    if eq_recs and im.unreadable_equality_deletes(root, snap, metadata_path):
-        raise ValueError(
-            "table carries equality-delete files this engine cannot apply "
-            "(missing or unresolvable equality field ids); run "
-            "compact_iceberg_table first"
-        )
-    pos = im.position_delete_paths(root, snap)
-    if pos:
-        # delete-file pruning, same as the read path (r8): a pruned DML
-        # scan anti-joins only against delete files naming its files
-        pos = im.prune_position_deletes(pos, paths)
-    # v3 deletion vectors (r10): applied exactly like the read path, so
-    # DML over a v3 table never matches (or resurrects) deleted rows
-    dvs = im.deletion_vector_records(root, snap)
-    if dvs:
-        scanned = {p.rsplit("/data/", 1)[-1] for p in paths}
-        dvs = [
-            r
-            for r in dvs
-            if r["referenced_data_file"].rsplit("/data/", 1)[-1] in scanned
-        ]
-    if pos or eq_recs or dvs:
-        from cloudfloe_spark.service.iceberg_local import (
-            _apply_deletion_vectors,
-            _apply_equality_deletes,
-            _apply_position_deletes,
-        )
-    field_names = (
-        im.schema_field_names(root, metadata_path) if eq_recs else {}
-    )
-    file_seqs = im.live_data_seqs(root, snap) if eq_recs else {}
-    # unambiguous by the time scan_groups succeeds (it raises otherwise)
-    name_hist = (
-        im.schema_name_history(root, metadata_path) if eq_recs else {}
-    )
-
+    deletes = RowDeletes(spark, root, snap, metadata_path, paths)
     groups = im.scan_groups(
         root, paths, metadata_path, variant_as=variant_as, ns_as=ns_as
     )
@@ -1127,15 +1076,7 @@ def _mor_raw_scan(
         # would materialize NULL into the new data files
         for _fc, (_fv, _ft) in (default_fills or {}).items():
             gdf = gdf.withColumn(_fc, F.lit(_fv).cast(_ft))
-        if pos:
-            gdf = _apply_position_deletes(spark, gdf, pos)
-        if dvs:
-            gdf = _apply_deletion_vectors(spark, gdf, dvs)
-        if eq_recs:
-            gdf = _apply_equality_deletes(
-                spark, gdf, eq_recs, field_names, file_seqs,
-                renames=renames, name_history=name_hist,
-            )
+        gdf = deletes.apply(gdf, gpaths, renames)
         gdf = gdf.select(
             F.col("_metadata.file_path").alias(_FP),
             F.col("_metadata.row_index").alias(_POS),
@@ -1241,24 +1182,8 @@ def _shred_group_scan(
         decode_variant_columns,
         shredded_to_unshredded_columns,
     )
-    from cloudfloe_spark.service.iceberg_local import (
-        _apply_deletion_vectors,
-        _apply_equality_deletes,
-        _apply_position_deletes,
-    )
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    eq = (
-        im.equality_delete_records(root, snap) if apply_deletes else []
-    )
-    if eq and im.unreadable_equality_deletes(root, snap, meta_path):
-        # same precise refusal as _mor_raw_scan — applying around
-        # unresolvable field ids would silently resurrect erased rows
-        raise ValueError(
-            "table carries equality-delete files this engine cannot "
-            "apply (missing or unresolvable equality field ids); run "
-            "compact_iceberg_table first"
-        )
     g = spark.read.parquet(*spaths)
     # renames + v3 defaults over shredded groups (r15, VERDICT r14 #1):
     # the group's files share one footer schema, so the on-disk→current
@@ -1280,33 +1205,9 @@ def _shred_group_scan(
     for _fc, (_fv, _ft) in fills.items():
         if _fc not in present_cur:
             g = g.withColumn(_fc, F.lit(_fv).cast(_ft))
-    pos = (
-        im.prune_position_deletes(
-            im.position_delete_paths(root, snap), spaths
-        )
-        if apply_deletes
-        else []
-    )
-    dvs = (
-        im.deletion_vector_records(root, snap) if apply_deletes else []
-    )
-    if dvs:
-        scanned = {p.rsplit("/data/", 1)[-1] for p in spaths}
-        dvs = [
-            r
-            for r in dvs
-            if r["referenced_data_file"].rsplit("/data/", 1)[-1] in scanned
-        ]
-    if pos:
-        g = _apply_position_deletes(spark, g, pos)
-    if dvs:
-        g = _apply_deletion_vectors(spark, g, dvs)
-    if eq:
-        g = _apply_equality_deletes(
-            spark, g, eq,
-            im.schema_field_names(root, meta_path),
-            im.live_data_seqs(root, snap),
-            renames=rmap, name_history=hist,
+    if apply_deletes:
+        g = RowDeletes(spark, root, snap, meta_path, spaths).apply(
+            g, spaths, rmap
         )
     present_extra = [
         c for c in (extra_footer_cols or []) if c in g.columns

@@ -487,7 +487,12 @@ def extract_scan_conjuncts(
         import duckdb
 
         lit = sql.replace("'", "''")
-        raw = duckdb.execute(f"SELECT json_serialize_sql('{lit}')").fetchone()[0]
+        # a cursor per call: the module-level default connection is not
+        # thread-safe, and service requests resolve concurrently
+        with duckdb.cursor() as cur:
+            raw = cur.execute(
+                f"SELECT json_serialize_sql('{lit}')"
+            ).fetchone()[0]
         ast = json.loads(raw)
     except Exception:
         return {}

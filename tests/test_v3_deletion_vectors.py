@@ -557,15 +557,85 @@ def test_dv_decode_distributes_past_threshold(spark, v3_table, monkeypatch):
     """Past _DV_DRIVER_DECODE_MAX_BYTES the DV decode runs ON THE
     EXECUTORS (mapInPandas over the blob references, self-contained
     roaring reader) — the deleted-position frame is never materialized
-    on the driver. Forced here by zeroing the threshold; the result must
-    be identical to the driver-side path."""
+    on the driver. Forced here by zeroing the threshold, with an empty
+    plan cache so the read is built again; the read and a DML scan must
+    both match the driver-side path."""
     from cloudfloe_spark.service import iceberg_local as il
+    from cloudfloe_spark.sources import deletes, fsio, puffin
+    from cloudfloe_spark.sources.maintenance import delete_where
 
     root, _, _ = v3_table
     expect = _rows(spark, f"SELECT id FROM iceberg_scan('{root}') ORDER BY id")
-    monkeypatch.setattr(il, "_DV_DRIVER_DECODE_MAX_BYTES", 0)
+    monkeypatch.setattr(deletes, "_DV_DRIVER_DECODE_MAX_BYTES", 0)
+    monkeypatch.setattr(il, "_PLAN_CACHE", fsio.LRUCache(il._PLAN_CACHE_MAX))
+    driver_decodes = []
+    real_read = puffin.read_deletion_vector
+    monkeypatch.setattr(
+        puffin,
+        "read_deletion_vector",
+        lambda *a: driver_decodes.append(a) or real_read(*a),
+    )
     got = _rows(spark, f"SELECT id FROM iceberg_scan('{root}') ORDER BY id")
     assert got == expect == [(0,), (2,), (4,), (6,), (7,), (8,)]
+    assert driver_decodes == []
+    # id 5 is already deleted: a DML scan that missed the executor-decoded
+    # vectors would match it again
+    res = delete_where(spark, root, "id IN (5, 6)", timestamp_ms=T1 + 2000)
+    assert res["matched"] == 1
+    got = _rows(spark, f"SELECT id FROM iceberg_scan('{root}') ORDER BY id")
+    assert got == [(0,), (2,), (4,), (7,), (8,)]
+
+
+def test_dml_scan_decodes_each_vector_once(spark, tmp_path, monkeypatch):
+    """A DML scan over files in two rename groups decodes each deletion
+    vector once, like the read path — not once per file group."""
+    from cloudfloe_spark.sources import puffin
+    from cloudfloe_spark.sources.maintenance import _mor_raw_scan
+
+    root = str(tmp_path / "t")
+    t = LocalIcebergTable(
+        root, pa.schema([("id", pa.int64()), ("v", pa.string())])
+    )
+    t.append_snapshot(
+        [pa.table({"id": [0, 1, 2], "v": list("abc")})], timestamp_ms=T1
+    )
+    t.rename_column("v", "w", timestamp_ms=T1 + 500)
+    t.append_snapshot(
+        [pa.table({"id": [3, 4, 5], "w": list("def")})],
+        timestamp_ms=T1 + 1000,
+    )
+    paths = im.live_data_paths(root, im.resolve_snapshot(root))
+    commit_deletion_vector_snapshot(
+        root, {paths[0]: [1], paths[1]: [1]}, timestamp_ms=T1 + 2000
+    )
+    snap = im.resolve_snapshot(root)
+    assert len(im.scan_groups(root, paths, None)) == 2
+    calls = []
+    real_read = puffin.read_deletion_vector
+    monkeypatch.setattr(
+        puffin,
+        "read_deletion_vector",
+        lambda *a: calls.append(a) or real_read(*a),
+    )
+    df = _mor_raw_scan(spark, root, snap, paths)
+    assert len(calls) == len(im.deletion_vector_records(root, snap)) == 2
+    assert sorted(r["id"] for r in df.select("id").collect()) == [0, 2, 3, 5]
+
+
+def test_corrupt_deletion_vector_is_a_400(spark, v3_table):
+    """A DV blob that fails its checksum refuses the read with a 400 —
+    reading around it would resurrect deleted rows."""
+    root, _, _ = v3_table
+    rec = im.deletion_vector_records(root, im.resolve_snapshot(root))[0]
+    with open(rec["path"], "r+b") as f:
+        f.seek(rec["offset"] + rec["length"] // 2)
+        b = f.read(1)
+        f.seek(-1, os.SEEK_CUR)
+        f.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(CloudfloeError) as e:
+        run_query(spark, f"SELECT id FROM iceberg_scan('{root}')", _cfg())
+    assert e.value.status_code == 400
+    assert "deletion vector" in e.value.detail
 
 
 def test_orphan_sweep_keeps_referenced_puffins(spark, v3_table):
