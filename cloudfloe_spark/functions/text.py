@@ -174,13 +174,6 @@ def minhash_signature_from_shingles(sh: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_signature(col: Column, num_hashes: int = 16, shingle_k: int = 3) -> Column:
-    """MinHash signature of a text column (see
-    ``minhash_signature_from_shingles``). array<bigint>; empty shingle set
-    → empty-array min = nulls, callers filter those out."""
-    return minhash_signature_from_shingles(word_shingles(col, shingle_k), num_hashes)
-
-
 def minhash_affine_sql(i: int, base_expr: str) -> str:
     """DuckDB twin of one affine MinHash derivation."""
     a, b = _MINHASH_A[i], _MINHASH_B[i]
@@ -203,19 +196,6 @@ def _membership(stopwords: tuple[str, ...]):
         return w.isin(*stopwords)
 
     return f
-
-
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    """Fraction of words that are (English) stopwords.
-
-    The word array is let-bound (r15): higher-order functions are
-    codegen-fallback, so the three references re-ran the split otherwise."""
-
-    def body(ws: Column) -> Column:
-        hits = F.size(F.filter(ws, _membership(stopwords)))
-        return F.when(F.size(ws) > 0, hits / F.size(ws)).otherwise(0.0)
-
-    return let(words(F.lower(col)), body)
 
 
 def mean_word_length(col: Column) -> Column:
@@ -250,15 +230,6 @@ def quality_score(col: Column) -> Column:
         return F.round((len_score + wl_score + punct_score) / 3.0, 4)
 
     return let(words(col), body)
-
-
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language stopword hit counts (the n-gram-heuristic lang-ID)."""
-    ws = words(F.lower(col))
-    return {
-        lang: F.size(F.filter(ws, _membership(sw)))
-        for lang, sw in LANG_STOPWORDS.items()
-    }
 
 
 def lang_id(col: Column) -> Column:

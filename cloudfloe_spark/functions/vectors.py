@@ -48,10 +48,3 @@ def cosine_cast(a: Column, b: Column) -> Column:
     return let(
         as_double(a), lambda ad: let(as_double(b), lambda bd: cosine(ad, bd))
     )
-
-
-def cosine_sql(a: str, b: str) -> str:
-    """DuckDB twin of ``cosine`` with identical summation order
-    (list_cosine_similarity matches within rounding; spelled explicitly so
-    the formula is auditable)."""
-    return f"LIST_COSINE_SIMILARITY(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"

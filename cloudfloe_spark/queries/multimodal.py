@@ -228,6 +228,21 @@ def mm_dedup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _declare_geo_column(root: str, geo_type: str) -> None:
+    """Declare the fixture table's ``geo`` column as the v3 type
+    ``geo_type`` (the parquet column stays WKB binary)."""
+    from cloudfloe_spark.sources.snapshots import commit_metadata
+
+    def update(meta: dict) -> None:
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = geo_type
+        meta["format-version"] = 3
+
+    commit_metadata(root, update)
+
+
 def _geo_fixture(sf_dir: str) -> str:
     """Deterministic v3 geometry table shared by the geo entries: one
     WKB POINT per document, coordinates synthesized from doc_id /
@@ -236,11 +251,7 @@ def _geo_fixture(sf_dir: str) -> str:
     import os
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
 
     def build(parent: str) -> None:
         import pyarrow as pa
@@ -270,13 +281,7 @@ def _geo_fixture(sf_dir: str) -> str:
         )
         t = LocalIcebergTable(root, data.schema)
         t.append_snapshot([data], timestamp_ms=1700000000000)
-        meta = im.load_metadata(root)
-        for sch in meta["schemas"]:
-            for f in sch["fields"]:
-                if f["name"] == "geo":
-                    f["type"] = "geometry(srid:4326)"
-        meta["format-version"] = 3
-        write_next_metadata_version(root, meta)
+        _declare_geo_column(root, "geometry(srid:4326)")
 
     docs = os.path.join(sf_dir, "documents.parquet")
     return os.path.join(build_once("geobbox_v1", [docs], build), "t")
@@ -475,11 +480,7 @@ def _geo_skip_fixture(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
 
     def build(parent: str) -> None:
@@ -521,13 +522,7 @@ def _geo_skip_fixture(spark: SparkSession, sf_dir: str) -> str:
         tables = [_band_table(b) for b in bands if b]
         t = LocalIcebergTable(root, tables[0].schema)
         t.append_snapshot(tables, timestamp_ms=1700000000000)
-        meta = im.load_metadata(root)
-        for sch in meta["schemas"]:
-            for f in sch["fields"]:
-                if f["name"] == "geo":
-                    f["type"] = "geometry(srid:4326)"
-        meta["format-version"] = 3
-        write_next_metadata_version(root, meta)
+        _declare_geo_column(root, "geometry(srid:4326)")
         rep = compute_geo_bounds(
             spark, root, timestamp_ms=1700000001000
         )
@@ -597,10 +592,7 @@ def _geog_fixture(spark: SparkSession, sf_dir: str) -> str:
 
     from cloudfloe_spark.functions.geo import encode_wkb_point
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
 
     def build(parent: str) -> None:
@@ -653,13 +645,7 @@ def _geog_fixture(spark: SparkSession, sf_dir: str) -> str:
         tables = [_tbl(p) for p in parts if p]
         t = LocalIcebergTable(root, tables[0].schema)
         t.append_snapshot(tables, timestamp_ms=1700000000000)
-        meta = im.load_metadata(root)
-        for sch in meta["schemas"]:
-            for f in sch["fields"]:
-                if f["name"] == "geo":
-                    f["type"] = "geography(srid:4326)"
-        meta["format-version"] = 3
-        write_next_metadata_version(root, meta)
+        _declare_geo_column(root, "geography(srid:4326)")
         rep = compute_geo_bounds(
             spark, root, timestamp_ms=1700000001000
         )

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import uuid
 from typing import Optional
 
@@ -33,6 +32,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from cloudfloe_spark.sources.avrolite import write_avro
+from cloudfloe_spark.sources.snapshots import (
+    CommitConflictError,  # noqa: F401  (callers import it from here)
+    SnapshotProducer,
+    commit_metadata,
+    snapshot_of,
+)
 
 _MANIFEST_SCHEMA = {
     "type": "record",
@@ -180,32 +185,6 @@ def _default_single_value_json(v):
         f"unsupported column default {v!r}: only primitive defaults "
         "(bool/int/float/str/date/timestamp/decimal) are honored"
     )
-
-
-def _assign_row_ids(meta: dict, new_entries: list) -> "int | None":
-    """v3 row lineage (r11): on a lineage-carrying table (metadata has
-    ``next-row-id``), stamp each NEW content=0 manifest entry's
-    ``first_row_id`` from the table counter and advance it by the file's
-    record count — the spec's commit-time assignment. Returns the
-    snapshot's ``first-row-id`` (the counter before this commit), or
-    None for non-lineage tables. Entries already carrying a
-    ``first_row_id`` (an apply replaying preserved files) are left
-    alone."""
-    nri = meta.get("next-row-id")
-    if nri is None:
-        return None
-    mark = int(nri)
-    cur = mark
-    for e in new_entries:
-        df_ = e["data_file"]
-        if df_.get("content", 0) != 0:
-            continue
-        if df_.get("first_row_id") is not None:
-            continue
-        df_["first_row_id"] = cur
-        cur += int(df_.get("record_count") or 0)
-    meta["next-row-id"] = cur
-    return mark
 
 
 def _stamp_row_lineage(snap: dict, mark: "int | None", nri: int) -> None:
@@ -1240,10 +1219,6 @@ def _sync_main_ref(meta: dict, snap_id: int) -> None:
         refs["main"]["snapshot-id"] = snap_id
 
 
-class CommitConflictError(RuntimeError):
-    """Another commit landed between a rewrite's read and its commit."""
-
-
 def commit_rewrite_snapshot(
     root: str,
     data_files: list[tuple[str, int]],
@@ -1266,108 +1241,34 @@ def commit_rewrite_snapshot(
 
     Returns the new snapshot id.
     """
-    from cloudfloe_spark.sources import iceberg_meta as im
 
-    if expected_metadata_path is not None:
-        latest = im.latest_metadata_path(root)
-        if os.path.realpath(latest) != os.path.realpath(expected_metadata_path):
-            raise CommitConflictError(
-                f"table {root} moved on during rewrite: read "
-                f"{expected_metadata_path}, current {latest}; re-run the "
-                "rewrite against the new current snapshot"
-            )
-    meta = im.load_metadata(root)
-    snaps = meta.get("snapshots", [])
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    # Random 63-bit id (still > 2^53, so stringified like every other id):
-    # seq-derived ids would collide with a live LocalIcebergTable's private
-    # counter if it commits again after this external rewrite.
-    snap_id = (uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
-
-    meta_dir = os.path.join(root, "metadata")
-    mpath = os.path.join(meta_dir, f"manifest-rw-{uuid.uuid4().hex[:12]}.avro")
-    entries = []
-    for item in data_files:
+    def build(meta: dict) -> int:
+        p = SnapshotProducer(root, meta, timestamp_ms)
         # (path, n) — unpartitioned rewrite (coalesced across partitions,
         # never pruned on partition fields) — or (path, n, pvals[,
         # spec_id]) when the compaction fanned files out per partition
-        # tuple (r8): the rewritten layout then keeps pruning.
-        p, n = item[0], item[1]
-        pvals = item[2] if len(item) > 2 else None
-        entry_spec = item[3] if len(item) > 3 else None
-        if pvals is not None and entry_spec is None:
-            entry_spec = meta.get("default-spec-id", 0)
-        # column statistics recomputed from the rewritten file — with a
+        # tuple (r8): the rewritten layout then keeps pruning. Column
+        # statistics are recomputed from the rewritten file — with a
         # sort_by compaction the bounds are tight and disjoint, which is
-        # what lets metrics skipping prune the compacted layout
-        lower, upper, nulls = _column_stats(
-            pq.read_table(p), geo_cols=_geo_stat_cols(meta)
-        )
-        entries.append(
+        # what lets metrics skipping prune the compacted layout. v3 row
+        # lineage: the ADDED files receive fresh id ranges, per spec, even
+        # though readers prefer the materialized `_row_id` column.
+        entries = [p.data_entry(item) for item in data_files]
+        for e in entries:
+            e["snapshot_id"] = p.snapshot_id
+        return p.commit(
+            [("rw", 0, entries)],
             {
-                "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": f"file://{p}",
-                    "file_format": "PARQUET",
-                    "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "equality_ids": None,
-                    "partition": pvals,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "null_value_counts": nulls,
-                    "spec_id": entry_spec,
-                },
-            }
-        )
-    # v3 row lineage: a rewrite's ADDED files receive fresh id ranges and
-    # the snapshot carries first-row-id, per spec — even though readers
-    # prefer the materialized per-row `_row_id` column the compaction
-    # wrote, a conformant external reader must see complete assignment.
-    row_mark = _assign_row_ids(meta, entries)
-    write_avro(mpath, _MANIFEST_SCHEMA, entries)
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(
-        mlist,
-        _MANIFEST_LIST_SCHEMA,
-        [
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": 0,
-                "added_snapshot_id": snap_id,
-            }
-        ],
-    )
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
                 "operation": "replace",
                 "total-records": str(sum(item[1] for item in data_files)),
                 "total-data-files": str(len(data_files)),
                 "total-delete-files": "0",
             },
-        }
+        )
+
+    return commit_metadata(
+        root, build, expected_metadata_path=expected_metadata_path
     )
-    _stamp_row_lineage(
-        snaps[-1], row_mark, int(meta.get("next-row-id") or 0)
-    )
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = snap_id
-    _sync_main_ref(meta, snap_id)
-    meta["last-updated-ms"] = timestamp_ms
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
-    )
-    write_next_metadata_version(root, meta)
-    return snap_id
 
 
 def commit_delete_rewrite_snapshot(
@@ -1391,82 +1292,25 @@ def commit_delete_rewrite_snapshot(
     changelog readers skip it."""
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    if expected_metadata_path is not None:
-        latest = im.latest_metadata_path(root)
-        if os.path.realpath(latest) != os.path.realpath(expected_metadata_path):
-            raise CommitConflictError(
-                f"table {root} moved on during delete rewrite: read "
-                f"{expected_metadata_path}, current {latest}"
-            )
-    meta = im.load_metadata(root)
-    snaps = meta.get("snapshots", [])
-    cur = im.resolve_snapshot(root)
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    snap_id = (uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
-
-    def entry(status, sequence, data_file):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": sequence,
-            "data_file": {k: data_file.get(k) for k in _DATA_FILE_KEYS},
-        }
-
-    carry_data, carry_eq, dropped = [], [], []
-    for e in im.manifest_entries(root, cur):
-        if e["status"] == 2:
-            continue
-        c = e["data_file"].get("content", 0)
-        if c == 0:
-            carry_data.append(entry(0, e["sequence_number"], e["data_file"]))
-        elif c == 2:
-            carry_eq.append(entry(0, e["sequence_number"], e["data_file"]))
-        else:
-            dropped.append(entry(2, e["sequence_number"], e["data_file"]))
-    new_dels = [
-        entry(
-            1,
-            seq,
+    def build(meta: dict) -> int:
+        p = SnapshotProducer(root, meta, timestamp_ms)
+        cur = snapshot_of(meta)
+        carry_data, carry_eq, dropped = [], [], []
+        for e in im.manifest_entries(root, cur):
+            if e["status"] == 2:
+                continue
+            c = e["data_file"].get("content", 0)
+            if c == 0:
+                carry_data.append(p.entry(0, e["sequence_number"], e["data_file"]))
+            elif c == 2:
+                carry_eq.append(p.entry(0, e["sequence_number"], e["data_file"]))
+            else:
+                dropped.append(p.entry(2, e["sequence_number"], e["data_file"]))
+        new_dels = [p.added(path, n, content=1) for path, n in delete_files]
+        # carried data entries keep their first_row_id verbatim
+        return p.commit(
+            [("data", 0, carry_data), ("del", 1, carry_eq + dropped + new_dels)],
             {
-                "content": 1,
-                "file_path": f"file://{p}",
-                "file_format": "PARQUET",
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(p),
-            },
-        )
-        for p, n in delete_files
-    ]
-    meta_dir = os.path.join(root, "metadata")
-    manifests = []
-    for tag, content, entries in (
-        ("data", 0, carry_data),
-        ("del", 1, carry_eq + dropped + new_dels),
-    ):
-        if not entries:
-            continue
-        mpath = os.path.join(
-            meta_dir, f"manifest-{tag}-{uuid.uuid4().hex[:12]}.avro"
-        )
-        write_avro(mpath, _MANIFEST_SCHEMA, entries)
-        manifests.append(
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": content,
-                "added_snapshot_id": snap_id,
-            }
-        )
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": cur.get("snapshot-id"),
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
                 "operation": "replace",
                 "total-records": str(
                     sum(
@@ -1478,26 +1322,12 @@ def commit_delete_rewrite_snapshot(
                 "total-delete-files": str(len(carry_eq) + len(new_dels)),
                 "removed-delete-files": str(len(dropped)),
             },
-        }
-    )
-    # v3 row lineage: delete-file rewrites add no data rows, but every v3
-    # snapshot must still carry first-row-id (assigned-rows = 0); carried
-    # data entries keep their first_row_id verbatim via _DATA_FILE_KEYS.
-    if meta.get("next-row-id") is not None:
-        _stamp_row_lineage(
-            snaps[-1],
-            int(meta["next-row-id"]),
-            int(meta["next-row-id"]),
+            parent=cur,
         )
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = snap_id
-    _sync_main_ref(meta, snap_id)
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
+
+    return commit_metadata(
+        root, build, expected_metadata_path=expected_metadata_path
     )
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return snap_id
 
 
 def commit_manifest_rewrite_snapshot(
@@ -1526,119 +1356,58 @@ def commit_manifest_rewrite_snapshot(
     "entries"}``."""
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    if expected_metadata_path is not None:
-        latest = im.latest_metadata_path(root)
-        if os.path.realpath(latest) != os.path.realpath(
-            expected_metadata_path
-        ):
-            raise CommitConflictError(
-                f"table {root} moved on during manifest rewrite: read "
-                f"{expected_metadata_path}, current {latest}"
+    def build(meta: dict) -> dict:
+        p = SnapshotProducer(root, meta, timestamp_ms)
+        cur = snapshot_of(meta)
+        n_before = len(
+            im._read_manifest(
+                im._relocate(cur["manifest-list"], im._norm_root(root))
             )
-    meta = im.load_metadata(root)
-    snaps = meta.get("snapshots", [])
-    cur = im.resolve_snapshot(root)
-    root_n = im._norm_root(root)
-    n_before = len(
-        list(im._read_manifest(im._relocate(cur["manifest-list"], root_n)))
-    )
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    snap_id = (uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
-
-    data_entries, delete_entries = [], []
-    # ``patch_bounds`` (r14, geo file stats): ``{file_suffix: (lower,
-    # upper)}`` dicts of per-column bound strings merged into the
-    # carried entries' lower/upper maps — how compute_geo_bounds stamps
-    # geometry envelopes (the v3 spec stores these as WKB points; this
-    # fixture's manifests use its name-keyed stringified stand-in, like
-    # every other bound it records). Live file sets stay identical.
-    def _pb_key(p: str) -> str:
-        return im.data_file_suffix(p)
-
-    for e in im.manifest_entries(root, cur):
-        if e["status"] == 2:
-            continue  # dead entries are dropped, not carried
-        df_rec = {k: e["data_file"].get(k) for k in _DATA_FILE_KEYS}
-        pb = (patch_bounds or {}).get(_pb_key(df_rec["file_path"]))
-        if pb is not None and df_rec.get("content", 0) == 0:
-            lo, hi = pb
-            df_rec["lower_bounds"] = {
-                **(df_rec.get("lower_bounds") or {}), **lo
-            }
-            df_rec["upper_bounds"] = {
-                **(df_rec.get("upper_bounds") or {}), **hi
-            }
-        rec = {
-            "status": 0,
-            "snapshot_id": None,
-            "sequence_number": e["sequence_number"],
-            "data_file": df_rec,
-        }
-        if df_rec.get("content", 0) == 0:
-            data_entries.append(rec)
-        else:
-            delete_entries.append(rec)
-
-    meta_dir = os.path.join(root, "metadata")
-    manifests = []
-    for tag, content, entries in (
-        ("data", 0, data_entries),
-        ("del", 1, delete_entries),
-    ):
-        if not entries:
-            continue
-        mpath = os.path.join(
-            meta_dir, f"manifest-{tag}-{uuid.uuid4().hex[:12]}.avro"
         )
-        write_avro(mpath, _MANIFEST_SCHEMA, entries)
-        manifests.append(
+        data_entries, delete_entries = [], []
+        for e in im.manifest_entries(root, cur):
+            if e["status"] == 2:
+                continue  # dead entries are dropped, not carried
+            rec = p.entry(0, e["sequence_number"], e["data_file"])
+            df_rec = rec["data_file"]
+            # ``patch_bounds`` (r14, geo file stats): ``{file_suffix:
+            # (lower, upper)}`` dicts of per-column bound strings merged
+            # into the carried entries' lower/upper maps — how
+            # compute_geo_bounds stamps geometry envelopes (the v3 spec
+            # stores these as WKB points; this fixture's manifests use its
+            # name-keyed stringified stand-in, like every other bound it
+            # records). Live file sets stay identical.
+            pb = (patch_bounds or {}).get(im.data_file_suffix(df_rec["file_path"]))
+            if pb is not None and df_rec.get("content", 0) == 0:
+                lo, hi = pb
+                df_rec["lower_bounds"] = {**(df_rec.get("lower_bounds") or {}), **lo}
+                df_rec["upper_bounds"] = {**(df_rec.get("upper_bounds") or {}), **hi}
+            if df_rec.get("content", 0) == 0:
+                data_entries.append(rec)
+            else:
+                delete_entries.append(rec)
+        n_after = sum(1 for es in (data_entries, delete_entries) if es)
+        sid = p.commit(
+            [("data", 0, data_entries), ("del", 1, delete_entries)],
             {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": content,
-                "added_snapshot_id": snap_id,
-            }
-        )
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": cur.get("snapshot-id"),
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
                 "operation": "replace",
                 "total-data-files": str(len(data_entries)),
                 "total-delete-files": str(len(delete_entries)),
                 "manifests-replaced": str(n_before),
-                "manifests-created": str(len(manifests)),
+                "manifests-created": str(n_after),
             },
-        }
-    )
-    # v3 row lineage: no data file added — stamp first-row-id with zero
-    # assigned rows; carried entries keep first_row_id via _DATA_FILE_KEYS.
-    if meta.get("next-row-id") is not None:
-        _stamp_row_lineage(
-            snaps[-1],
-            int(meta["next-row-id"]),
-            int(meta["next-row-id"]),
+            parent=cur,
         )
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = snap_id
-    _sync_main_ref(meta, snap_id)
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
+        return {
+            "snapshot_id": sid,
+            "manifests_before": n_before,
+            "manifests_after": n_after,
+            "entries": len(data_entries) + len(delete_entries),
+        }
+
+    return commit_metadata(
+        root, build, expected_metadata_path=expected_metadata_path
     )
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return {
-        "snapshot_id": snap_id,
-        "manifests_before": n_before,
-        "manifests_after": len(manifests),
-        "entries": len(data_entries) + len(delete_entries),
-    }
 
 
 def rename_column_on_disk(
@@ -1653,99 +1422,36 @@ def rename_column_on_disk(
     metadata-only, no snapshot, already-written files keep their old
     parquet column names. Partition specs are untouched: they reference
     source FIELD IDS, which a rename never changes."""
-    from cloudfloe_spark.sources import fsio, iceberg_meta as im
 
-    meta_path = im.latest_metadata_path(root)
-    meta_path = fsio.local_path(meta_path) or meta_path
-    with open(meta_path) as f:
-        meta = json.load(f)
-    schemas = meta.get("schemas") or (
-        [meta["schema"]] if meta.get("schema") else []
-    )
-    if not schemas:
-        raise ValueError("table metadata carries no schema")
-    cur_id = meta.get("current-schema-id", 0)
-    cur = next(
-        (s for s in schemas if s.get("schema-id") == cur_id), schemas[-1]
-    )
-    names = [f.get("name") for f in cur.get("fields", [])]
-    if old not in names:
-        raise KeyError(f"no column {old!r} to rename")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    next_id = max(s.get("schema-id", 0) for s in schemas) + 1
-    renamed = {
-        "type": "struct",
-        "schema-id": next_id,
-        "fields": [
-            {**f, "name": new if f.get("name") == old else f.get("name")}
-            for f in cur.get("fields", [])
-        ],
-    }
-    meta["schemas"] = schemas + [renamed]
-    meta["current-schema-id"] = next_id
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+    def update(meta: dict) -> None:
+        schemas = meta.get("schemas") or (
+            [meta["schema"]] if meta.get("schema") else []
+        )
+        if not schemas:
+            raise ValueError("table metadata carries no schema")
+        cur_id = meta.get("current-schema-id", 0)
+        cur = next(
+            (s for s in schemas if s.get("schema-id") == cur_id), schemas[-1]
+        )
+        names = [f.get("name") for f in cur.get("fields", [])]
+        if old not in names:
+            raise KeyError(f"no column {old!r} to rename")
+        if new in names:
+            raise ValueError(f"column {new!r} already exists")
+        next_id = max(s.get("schema-id", 0) for s in schemas) + 1
+        renamed = {
+            "type": "struct",
+            "schema-id": next_id,
+            "fields": [
+                {**f, "name": new if f.get("name") == old else f.get("name")}
+                for f in cur.get("fields", [])
+            ],
+        }
+        meta["schemas"] = schemas + [renamed]
+        meta["current-schema-id"] = next_id
+        meta["last-updated-ms"] = timestamp_ms
 
-
-def write_next_metadata_version(root: str, meta: dict) -> str:
-    """Write ``meta`` as the next numeric metadata version and point
-    ``version-hint.text`` at it when the table has one — the hint is
-    authoritative for HadoopCatalog-style tables (honored by
-    ``iceberg_meta.latest_metadata_path``), so leaving it stale would make
-    every subsequent read resolve the PREVIOUS version and un-commit the
-    change.
-
-    REST-bound roots (r10, VERDICT r9 #4): when the table was bound to a
-    REST catalog via ``rest_catalog.bind_rest_table``, this — the shared
-    commit point of every write op — routes through the catalog's POST
-    commit protocol instead of writing locally: the catalog validates the
-    ``assert-ref-snapshot-id`` CAS, materializes the new metadata
-    version, and its 409 surfaces as :class:`CommitConflictError`, which
-    the maintenance layer's optimistic retry handles exactly like a local
-    conflict."""
-    from cloudfloe_spark.sources import rest_catalog as _rc
-
-    binding = _rc.binding_for(root)
-    if binding is not None:
-        return _rc.commit_table_metadata(binding, root, meta)
-    meta_dir = os.path.join(root, "metadata")
-    versions = [
-        m.group(1)
-        for f in os.listdir(meta_dir)
-        if f.endswith(".metadata.json")
-        and (m := re.match(r"v?(\d+)", f)) is not None
-    ]
-    version = max((int(v) for v in versions), default=0) + 1
-    path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(path, "w") as f:
-        json.dump(meta, f)
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint, "w") as f:
-            f.write(str(version))
-    return path
-
-
-_DATA_FILE_KEYS = (
-    "content",
-    "file_path",
-    "file_format",
-    "record_count",
-    "file_size_in_bytes",
-    "equality_ids",
-    "partition",
-    "lower_bounds",
-    "upper_bounds",
-    "null_value_counts",
-    "spec_id",
-    # v3 deletion-vector reference (null on v2 entries)
-    "referenced_data_file",
-    "content_offset",
-    "content_size_in_bytes",
-    # v3 row lineage (null on non-lineage tables / rewritten files)
-    "first_row_id",
-)
+    commit_metadata(root, update)
 
 
 def commit_delete_snapshot(
@@ -1855,6 +1561,7 @@ def commit_row_delta_snapshot(
     Tags are immutable per the Iceberg spec — a ``parent_ref``/``ref``
     naming an existing tag errors.
     """
+    from cloudfloe_spark.sources import fsio
     from cloudfloe_spark.sources import iceberg_meta as im
 
     if parent_ref is not None:
@@ -1871,215 +1578,109 @@ def commit_row_delta_snapshot(
             "commit_row_delta_snapshot: publish=False requires a ref name "
             "— an unpublished snapshot with no ref would be unreachable"
         )
-    if expected_metadata_path is not None:
-        latest = im.latest_metadata_path(root)
-        if os.path.realpath(latest) != os.path.realpath(expected_metadata_path):
-            raise CommitConflictError(
-                f"table {root} moved on during row delta: read "
-                f"{expected_metadata_path}, current {latest}; re-run "
-                "against the new current snapshot"
-            )
-    meta = im.load_metadata(root)
-    snaps = meta.get("snapshots", [])
-    existing_ref = (meta.get("refs") or {}).get(ref) if ref else None
-    if existing_ref is not None and existing_ref.get("type") == "tag":
-        raise ValueError(
-            f"commit_row_delta_snapshot: ref {ref!r} is a tag — tags are "
-            "immutable; create a branch to write to"
-        )
-    if parent_ref is not None:
-        if existing_ref is None:
-            raise ValueError(
-                f"commit_row_delta_snapshot: parent_ref {parent_ref!r} "
-                f"not found (known refs: "
-                f"{sorted(meta.get('refs') or {})}) — create the branch "
-                "with set_ref(..., ref_type='branch') first"
-            )
-        cur = im.resolve_snapshot(root, version=int(existing_ref["snapshot-id"]))
-    else:
-        try:
-            cur = im.resolve_snapshot(root)
-        except im.IcebergMetadataError:
-            # created-but-empty table (no snapshot yet): the delta is
-            # the table's FIRST snapshot — nothing to carry
-            cur = None
-    carried = (
-        [e for e in im.manifest_entries(root, cur) if e["status"] != 2]
-        if cur is not None
-        else []
-    )
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    snap_id = (uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
-
-    def entry(status, sequence, data_file):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": sequence,
-            "data_file": {k: data_file.get(k) for k in _DATA_FILE_KEYS},
-        }
 
     def _data_key(p: str) -> str:
         return p.rsplit("/data/", 1)[-1]
 
-    removed_keys = {_data_key(p) for p in removed_data_files}
-    carry_data = []
-    removed_entries = []
-    for e in carried:
-        if e["data_file"].get("content", 0) != 0:
-            continue
-        if removed_keys and _data_key(e["data_file"]["file_path"]) in removed_keys:
-            removed_entries.append(entry(2, e["sequence_number"], e["data_file"]))
-            removed_keys.discard(_data_key(e["data_file"]["file_path"]))
-        else:
-            carry_data.append(entry(0, e["sequence_number"], e["data_file"]))
-    if removed_keys:
-        raise ValueError(
-            "commit_row_delta_snapshot: removed_data_files name no live "
-            f"data file: {sorted(removed_keys)}"
-        )
-    # With removals (copy-on-write), carried POSITION-delete files whose
-    # footer-recorded targets are all among the removed files dangle —
-    # they can never match a live row again — so they are dropped
-    # (status=2) in the same commit, keeping pure-COW tables
-    # delete-file-free without waiting for compaction. Footer reads are
-    # per-immutable-file cached; an unreadable footer keeps the file
-    # (sound). Equality deletes name VALUES, not files — always carried.
-    live_keys = (
-        {_data_key(e["data_file"]["file_path"]) for e in carry_data}
-        if removed_entries
-        else set()
-    )
-    carry_dels = []
-    dropped_dels = []
-    for e in carried:
-        df_ = e["data_file"]
-        if df_.get("content", 0) == 0:
-            continue
-        if removed_entries and df_.get("content", 0) == 1:
-            from cloudfloe_spark.sources import fsio
-            from cloudfloe_spark.sources.iceberg_meta import (
-                position_delete_targets_cached,
+    def build(meta: dict) -> int:
+        existing_ref = (meta.get("refs") or {}).get(ref) if ref else None
+        if existing_ref is not None and existing_ref.get("type") == "tag":
+            raise ValueError(
+                f"commit_row_delta_snapshot: ref {ref!r} is a tag — tags are "
+                "immutable; create a branch to write to"
             )
-
-            local = fsio.local_path(df_["file_path"]) or df_["file_path"]
-            try:
-                tgts = position_delete_targets_cached(local)
-            except Exception:
-                tgts = None
-            if tgts is not None and not (tgts & live_keys):
-                dropped_dels.append(
-                    entry(2, e["sequence_number"], df_)
+        if parent_ref is not None:
+            if existing_ref is None:
+                raise ValueError(
+                    f"commit_row_delta_snapshot: parent_ref {parent_ref!r} "
+                    f"not found (known refs: "
+                    f"{sorted(meta.get('refs') or {})}) — create the branch "
+                    "with set_ref(..., ref_type='branch') first"
                 )
+            cur = snapshot_of(meta, int(existing_ref["snapshot-id"]))
+        else:
+            try:
+                cur = snapshot_of(meta)
+            except im.IcebergMetadataError:
+                # created-but-empty table (no snapshot yet): the delta is
+                # the table's FIRST snapshot — nothing to carry
+                cur = None
+        carried = (
+            [e for e in im.manifest_entries(root, cur) if e["status"] != 2]
+            if cur is not None
+            else []
+        )
+        p = SnapshotProducer(root, meta, timestamp_ms)
+        removed_keys = {_data_key(x) for x in removed_data_files}
+        carry_data = []
+        removed_entries = []
+        for e in carried:
+            if e["data_file"].get("content", 0) != 0:
                 continue
-        carry_dels.append(entry(0, e["sequence_number"], df_))
-    new_dels = [
-        entry(
-            1,
-            seq,
-            {
-                "content": 1,
-                "file_path": f"file://{p}",
-                "file_format": "PARQUET",
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(p),
-            },
-        )
-        for p, n in delete_files
-    ]
-    new_dels += [
-        entry(
-            1,
-            seq,
-            {
-                "content": 2,
-                "file_path": f"file://{p}",
-                "file_format": "PARQUET",
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(p),
-                "equality_ids": list(eq_ids),
-            },
-        )
-        for p, n, eq_ids in equality_delete_files
-    ]
-    new_data = []
-    for item in new_data_files:
-        # (path, n) — unpartitioned entry — or (path, n, pvals[, spec_id])
-        # for PARTITION-AWARE writes (r8): DML/apply paths that fan their
-        # new files out per partition tuple stamp the tuple + spec id so
-        # partition pruning keeps working on post-DML rows.
-        p, n = item[0], item[1]
-        pvals = item[2] if len(item) > 2 else None
-        entry_spec = item[3] if len(item) > 3 else None
-        if pvals is not None and entry_spec is None:
-            entry_spec = meta.get("default-spec-id", 0)
-        lower, upper, nulls = _column_stats(
-            pq.read_table(p), geo_cols=_geo_stat_cols(meta)
-        )
-        new_data.append(
-            entry(
-                1,
-                seq,
-                {
-                    "content": 0,
-                    "file_path": f"file://{p}",
-                    "file_format": "PARQUET",
-                    "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "null_value_counts": nulls,
-                    "partition": pvals,
-                    "spec_id": entry_spec,
-                },
+            key = _data_key(e["data_file"]["file_path"])
+            if removed_keys and key in removed_keys:
+                removed_entries.append(p.entry(2, e["sequence_number"], e["data_file"]))
+                removed_keys.discard(key)
+            else:
+                carry_data.append(p.entry(0, e["sequence_number"], e["data_file"]))
+        if removed_keys:
+            raise ValueError(
+                "commit_row_delta_snapshot: removed_data_files name no live "
+                f"data file: {sorted(removed_keys)}"
             )
+        # With removals (copy-on-write), carried POSITION-delete files whose
+        # footer-recorded targets are all among the removed files dangle —
+        # they can never match a live row again — so they are dropped
+        # (status=2) in the same commit, keeping pure-COW tables
+        # delete-file-free without waiting for compaction. Footer reads are
+        # per-immutable-file cached; an unreadable footer keeps the file
+        # (sound). Equality deletes name VALUES, not files — always carried.
+        live_keys = (
+            {_data_key(e["data_file"]["file_path"]) for e in carry_data}
+            if removed_entries
+            else set()
         )
-    row_mark = _assign_row_ids(meta, new_data)
-
-    meta_dir = os.path.join(root, "metadata")
-    manifests = []
-    # Pure row-delta (nothing removed): REUSE the parent's manifests in
-    # the new manifest list and write only the new entries — the commit's
-    # metadata write is then O(new files), not O(table files). Removals
-    # (copy-on-write) and unsound parents fall back to the full rewrite.
-    reused = (
-        _reusable_parent_manifests(root, cur)
-        if not removed_data_files and cur is not None
-        else None
-    )
-    if reused is not None:
-        manifests.extend(reused)
-        groups = (("data", 0, new_data), ("del", 1, new_dels))
-    else:
-        groups = (
-            ("data", 0, carry_data + removed_entries + new_data),
-            ("del", 1, carry_dels + dropped_dels + new_dels),
+        carry_dels = []
+        dropped_dels = []
+        for e in carried:
+            df_ = e["data_file"]
+            if df_.get("content", 0) == 0:
+                continue
+            if removed_entries and df_.get("content", 0) == 1:
+                local = fsio.local_path(df_["file_path"]) or df_["file_path"]
+                try:
+                    tgts = im.position_delete_targets_cached(local)
+                except Exception:
+                    tgts = None
+                if tgts is not None and not (tgts & live_keys):
+                    dropped_dels.append(p.entry(2, e["sequence_number"], df_))
+                    continue
+            carry_dels.append(p.entry(0, e["sequence_number"], df_))
+        new_dels = [p.added(x, n, content=1) for x, n in delete_files] + [
+            p.added(x, n, content=2, equality_ids=list(eq_ids))
+            for x, n, eq_ids in equality_delete_files
+        ]
+        new_data = [p.data_entry(item) for item in new_data_files]
+        # Pure row-delta (nothing removed): REUSE the parent's manifests in
+        # the new manifest list and write only the new entries — the
+        # commit's metadata write is then O(new files), not O(table
+        # files). Removals (copy-on-write) and unsound parents fall back
+        # to the full rewrite.
+        reused = (
+            _reusable_parent_manifests(root, cur)
+            if not removed_data_files and cur is not None
+            else None
         )
-    for tag, content, entries in groups:
-        if not entries:
-            continue
-        mpath = os.path.join(
-            meta_dir, f"manifest-{tag}-{uuid.uuid4().hex[:12]}.avro"
-        )
-        write_avro(mpath, _MANIFEST_SCHEMA, entries)
-        manifests.append(
+        if reused is not None:
+            groups = [("data", 0, new_data), ("del", 1, new_dels)]
+        else:
+            groups = [
+                ("data", 0, carry_data + removed_entries + new_data),
+                ("del", 1, carry_dels + dropped_dels + new_dels),
+            ]
+        return p.commit(
+            groups,
             {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": content,
-                "added_snapshot_id": snap_id,
-            }
-        )
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": (cur.get("snapshot-id") if cur is not None else None),
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
                 "operation": (
                     "delete"
                     if not new_data
@@ -2104,27 +1705,15 @@ def commit_row_delta_snapshot(
                 "total-delete-files": str(len(carry_dels) + len(new_dels)),
                 **(summary_extra or {}),
             },
-        }
-    )
-    _stamp_row_lineage(snaps[-1], row_mark, int(meta.get("next-row-id") or 0))
-    meta["snapshots"] = snaps
-    if ref is not None:
-        # merge: spec-optional retention fields survive staged commits
-        refs_ = meta.setdefault("refs", {})
-        refs_[ref] = {
-            **(refs_.get(ref) or {}),
-            "snapshot-id": snap_id,
-            "type": "branch",
-        }
-    if publish:
-        meta["current-snapshot-id"] = snap_id
-        _sync_main_ref(meta, snap_id)
-        meta.setdefault("snapshot-log", []).append(
-            {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
+            reused=reused or (),
+            parent=cur,
+            ref=ref,
+            publish=publish,
         )
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return snap_id
+
+    return commit_metadata(
+        root, build, expected_metadata_path=expected_metadata_path
+    )
 
 
 def commit_deletion_vector_snapshot(
@@ -2177,229 +1766,158 @@ def commit_deletion_vector_snapshot(
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources import puffin
 
-    if expected_metadata_path is not None:
-        latest = im.latest_metadata_path(root)
-        if os.path.realpath(latest) != os.path.realpath(
-            expected_metadata_path
-        ):
-            raise CommitConflictError(
-                f"table {root} moved on during deletion-vector commit"
-            )
     if not deletes:
         raise ValueError("commit_deletion_vector_snapshot: empty deletes")
-    meta = im.load_metadata(root)
-    snaps = meta.get("snapshots", [])
-    if parent_ref is not None:
-        r_ = (meta.get("refs") or {}).get(parent_ref)
-        if r_ is None:
-            raise ValueError(
-                f"commit_deletion_vector_snapshot: parent_ref "
-                f"{parent_ref!r} not found (known refs: "
-                f"{sorted(meta.get('refs') or {})}) — create the branch "
-                "with set_ref(..., ref_type='branch') first"
-            )
-        if r_.get("type") == "tag":
-            raise ValueError(
-                f"commit_deletion_vector_snapshot: ref {parent_ref!r} is "
-                "a tag — tags are immutable; create a branch to write to"
-            )
-        cur = im.resolve_snapshot(root, version=int(r_["snapshot-id"]))
-    else:
-        cur = im.resolve_snapshot(root)
-    carried = [
-        e for e in im.manifest_entries(root, cur) if e["status"] != 2
-    ]
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    snap_id = (uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
 
     def _suffix(p: str) -> str:
         return p.rsplit("/data/", 1)[-1]
 
-    live = {
-        _suffix(e["data_file"]["file_path"]): e["data_file"]["file_path"]
-        for e in carried
-        if e["data_file"].get("content", 0) == 0
-    }
-    # resolve targets to the MANIFEST-recorded path (what the reader's
-    # anti-join matches on) and validate they are live
-    merged: dict[str, set] = {}
-    for p, positions in deletes.items():
-        key = _suffix(p)
-        if key not in live:
-            raise ValueError(
-                f"commit_deletion_vector_snapshot: {p!r} names no live "
-                "data file"
-            )
-        merged.setdefault(live[key], set()).update(
-            int(x) for x in positions
-        )
-
-    def entry(status, sequence, data_file):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": sequence,
-            "data_file": {k: data_file.get(k) for k in _DATA_FILE_KEYS},
+    def build(meta: dict) -> int:
+        if parent_ref is not None:
+            r_ = (meta.get("refs") or {}).get(parent_ref)
+            if r_ is None:
+                raise ValueError(
+                    f"commit_deletion_vector_snapshot: parent_ref "
+                    f"{parent_ref!r} not found (known refs: "
+                    f"{sorted(meta.get('refs') or {})}) — create the branch "
+                    "with set_ref(..., ref_type='branch') first"
+                )
+            if r_.get("type") == "tag":
+                raise ValueError(
+                    f"commit_deletion_vector_snapshot: ref {parent_ref!r} is "
+                    "a tag — tags are immutable; create a branch to write to"
+                )
+            cur = snapshot_of(meta, int(r_["snapshot-id"]))
+        else:
+            cur = snapshot_of(meta)
+        carried = [
+            e for e in im.manifest_entries(root, cur) if e["status"] != 2
+        ]
+        p = SnapshotProducer(root, meta, timestamp_ms)
+        live = {
+            _suffix(e["data_file"]["file_path"]): e["data_file"]["file_path"]
+            for e in carried
+            if e["data_file"].get("content", 0) == 0
         }
+        # resolve targets to the MANIFEST-recorded path (what the reader's
+        # anti-join matches on) and validate they are live
+        merged: dict[str, set] = {}
+        for path, positions in deletes.items():
+            key = _suffix(path)
+            if key not in live:
+                raise ValueError(
+                    f"commit_deletion_vector_snapshot: {path!r} names no live "
+                    "data file"
+                )
+            merged.setdefault(live[key], set()).update(
+                int(x) for x in positions
+            )
 
-    # Conformance boundary (r11, VERDICT r10 #6): committing DVs onto a
-    # v3 table whose vectors THIS engine did not write would mix our
-    # blobs with containers of unproven parseability. The reader is now
-    # spec-proven against independently-derived byte vectors
-    # (tests/test_puffin_spec_vectors.py — run containers, bitmap
-    # containers, multi-bucket keys), so instead of refusing outright we
-    # VALIDATE once: on the first DV commit onto an unstamped table,
-    # fully decode every live foreign vector (CRC + structure) and fail
-    # with the offending blob named if any is unreadable — then stamp
-    # ``cloudfloe.dv-writer`` so later commits skip the sweep. Cost is
-    # one delete-set-sized driver pass, paid once per foreign table.
-    _DV_WRITER_PROP = "cloudfloe.dv-writer"
-    props = meta.get("properties") or {}
-    if (
-        int(meta.get("format-version") or 1) >= 3
-        and _DV_WRITER_PROP not in props
-    ):
+        # Conformance boundary (r11, VERDICT r10 #6): committing DVs onto a
+        # v3 table whose vectors THIS engine did not write would mix our
+        # blobs with containers of unproven parseability. The reader is now
+        # spec-proven against independently-derived byte vectors
+        # (tests/test_puffin_spec_vectors.py — run containers, bitmap
+        # containers, multi-bucket keys), so instead of refusing outright we
+        # VALIDATE once: on the first DV commit onto an unstamped table,
+        # fully decode every live foreign vector (CRC + structure) and fail
+        # with the offending blob named if any is unreadable — then stamp
+        # ``cloudfloe.dv-writer`` so later commits skip the sweep. Cost is
+        # one delete-set-sized driver pass, paid once per foreign table.
+        _DV_WRITER_PROP = "cloudfloe.dv-writer"
+        props = meta.get("properties") or {}
+        if (
+            int(meta.get("format-version") or 1) >= 3
+            and _DV_WRITER_PROP not in props
+        ):
+            for e in carried:
+                df_ = e["data_file"]
+                if (
+                    df_.get("content", 0) != 1
+                    or df_.get("referenced_data_file") is None
+                    or df_["referenced_data_file"] in merged
+                ):
+                    continue  # merged targets are decoded by the supersede path
+                try:
+                    puffin.read_deletion_vector(
+                        im._relocate(df_["file_path"], im._norm_root(root)),
+                        int(df_["content_offset"]),
+                        int(df_["content_size_in_bytes"]),
+                    )
+                except (OSError, puffin.PuffinError) as e2:
+                    raise ValueError(
+                        "commit_deletion_vector_snapshot: this v3 table's "
+                        "existing deletion vectors were written by another "
+                        f"engine and the one for "
+                        f"{df_['referenced_data_file']!r} (in "
+                        f"{df_['file_path']!r}) does not decode: {e2}. "
+                        "Refusing to commit alongside unreadable vectors — "
+                        "repair or re-migrate the table first"
+                    ) from None
+
+        # carry everything, superseding old DVs of the targeted files
+        carry = []
+        superseded = []
         for e in carried:
             df_ = e["data_file"]
             if (
-                df_.get("content", 0) != 1
-                or df_.get("referenced_data_file") is None
-                or df_["referenced_data_file"] in merged
+                drop_position_deletes
+                and df_.get("content", 0) == 1
+                and df_.get("referenced_data_file") is None
+                and str(df_.get("file_format") or "").upper() != "PUFFIN"
             ):
-                continue  # merged targets are decoded by the supersede path
-            try:
-                puffin.read_deletion_vector(
-                    im._relocate(df_["file_path"], im._norm_root(root)),
-                    int(df_["content_offset"]),
-                    int(df_["content_size_in_bytes"]),
-                )
-            except (OSError, puffin.PuffinError) as e2:
-                raise ValueError(
-                    "commit_deletion_vector_snapshot: this v3 table's "
-                    "existing deletion vectors were written by another "
-                    f"engine and the one for "
-                    f"{df_['referenced_data_file']!r} (in "
-                    f"{df_['file_path']!r}) does not decode: {e2}. "
-                    "Refusing to commit alongside unreadable vectors — "
-                    "repair or re-migrate the table first"
-                ) from None
+                # v2 position-delete parquet being MIGRATED into the new DVs
+                superseded.append(p.entry(2, e["sequence_number"], df_))
+                continue
+            if (
+                df_.get("content", 0) == 1
+                and df_.get("referenced_data_file") in merged
+            ):
+                try:
+                    old = puffin.read_deletion_vector(
+                        im._relocate(df_["file_path"], im._norm_root(root)),
+                        int(df_["content_offset"]),
+                        int(df_["content_size_in_bytes"]),
+                    )
+                except (OSError, puffin.PuffinError) as e2:
+                    raise ValueError(
+                        f"cannot merge existing deletion vector: {e2}"
+                    ) from None
+                merged[df_["referenced_data_file"]].update(old)
+                superseded.append(p.entry(2, e["sequence_number"], df_))
+                continue
+            carry.append(p.entry(0, e["sequence_number"], df_))
 
-    # carry everything, superseding old DVs of the targeted files
-    carry = []
-    superseded = []
-    for e in carried:
-        df_ = e["data_file"]
-        if (
-            drop_position_deletes
-            and df_.get("content", 0) == 1
-            and df_.get("referenced_data_file") is None
-            and str(df_.get("file_format") or "").upper() != "PUFFIN"
-        ):
-            # v2 position-delete parquet being MIGRATED into the new DVs
-            superseded.append(entry(2, e["sequence_number"], df_))
-            continue
-        if (
-            df_.get("content", 0) == 1
-            and df_.get("referenced_data_file") in merged
-        ):
-            try:
-                old = puffin.read_deletion_vector(
-                    im._relocate(df_["file_path"], im._norm_root(root)),
-                    int(df_["content_offset"]),
-                    int(df_["content_size_in_bytes"]),
-                )
-            except (OSError, puffin.PuffinError) as e2:
-                raise ValueError(
-                    f"cannot merge existing deletion vector: {e2}"
-                ) from None
-            merged[df_["referenced_data_file"]].update(old)
-            superseded.append(entry(2, e["sequence_number"], df_))
-            continue
-        carry.append(entry(0, e["sequence_number"], df_))
-
-    meta_dir = os.path.join(root, "metadata")
-    pf = os.path.join(
-        root, "data", f"dv-{timestamp_ms}-{uuid.uuid4().hex[:8]}.puffin"
-    )
-    refs = puffin.write_puffin_dvs(
-        pf,
-        {k: sorted(v) for k, v in merged.items()},
-        snapshot_id=snap_id,
-        sequence_number=seq,
-    )
-    new_entries = [
-        entry(
-            1,
-            seq,
-            {
-                "content": 1,
-                "file_path": f"file://{pf}",
-                "file_format": "PUFFIN",
-                "record_count": m["cardinality"],
-                "file_size_in_bytes": os.path.getsize(pf),
-                "referenced_data_file": ref,
-                "content_offset": m["offset"],
-                "content_size_in_bytes": m["length"],
-            },
+        pf = os.path.join(
+            root, "data", f"dv-{timestamp_ms}-{uuid.uuid4().hex[:8]}.puffin"
         )
-        for ref, m in sorted(refs.items())
-    ]
-    new_data = []
-    for item in new_data_files:
-        p, n = item[0], item[1]
-        pvals = item[2] if len(item) > 2 else None
-        entry_spec = item[3] if len(item) > 3 else None
-        if pvals is not None and entry_spec is None:
-            entry_spec = meta.get("default-spec-id", 0)
-        lower, upper, nulls = _column_stats(
-            pq.read_table(p), geo_cols=_geo_stat_cols(meta)
+        blobs = puffin.write_puffin_dvs(
+            pf,
+            {k: sorted(v) for k, v in merged.items()},
+            snapshot_id=p.snapshot_id,
+            sequence_number=p.sequence_number,
         )
-        new_data.append(
-            entry(
-                1,
-                seq,
-                {
-                    "content": 0,
-                    "file_path": f"file://{p}",
-                    "file_format": "PARQUET",
-                    "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "null_value_counts": nulls,
-                    "partition": pvals,
-                    "spec_id": entry_spec,
-                },
+        new_entries = [
+            p.added(
+                pf,
+                m["cardinality"],
+                content=1,
+                file_format="PUFFIN",
+                referenced_data_file=data_file,
+                content_offset=m["offset"],
+                content_size_in_bytes=m["length"],
             )
-        )
-    row_mark = _assign_row_ids(meta, new_data)
-    mpath = os.path.join(
-        meta_dir, f"manifest-dv-{uuid.uuid4().hex[:12]}.avro"
-    )
-    write_avro(
-        mpath, _MANIFEST_SCHEMA, carry + superseded + new_entries + new_data
-    )
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(
-        mlist,
-        _MANIFEST_LIST_SCHEMA,
-        [
+            for data_file, m in sorted(blobs.items())
+        ]
+        new_data = [p.data_entry(item) for item in new_data_files]
+        meta["format-version"] = 3
+        # provenance stamp: this engine wrote (or validated) every live DV
+        meta.setdefault("properties", {})[_DV_WRITER_PROP] = "cloudfloe-spark"
+        # a branch commit (WAP) moves only the branch; publish_ref
+        # fast-forwards main later
+        return p.commit(
+            [("dv", 0, carry + superseded + new_entries + new_data)],
             {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": 0,
-                "added_snapshot_id": snap_id,
-            }
-        ],
-    )
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": cur.get("snapshot-id"),
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
                 "operation": "overwrite" if new_data else "delete",
                 "added-dvs": str(len(new_entries)),
                 "total-data-files": str(
@@ -2412,32 +1930,14 @@ def commit_deletion_vector_snapshot(
                 ),
                 **(summary_extra or {}),
             },
-        }
-    )
-    _stamp_row_lineage(snaps[-1], row_mark, int(meta.get("next-row-id") or 0))
-    meta["snapshots"] = snaps
-    if parent_ref is not None:
-        # staged on the branch only (WAP); publish_ref fast-forwards.
-        # Merge, don't overwrite: spec-optional retention fields
-        # (max-ref-age-ms, min-snapshots-to-keep, ...) must survive
-        refs_ = meta.setdefault("refs", {})
-        refs_[parent_ref] = {
-            **(refs_.get(parent_ref) or {}),
-            "snapshot-id": snap_id,
-            "type": "branch",
-        }
-    else:
-        meta["current-snapshot-id"] = snap_id
-        _sync_main_ref(meta, snap_id)
-        meta.setdefault("snapshot-log", []).append(
-            {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
+            parent=cur,
+            ref=parent_ref,
+            publish=parent_ref is None,
         )
-    meta["format-version"] = 3
-    # provenance stamp: this engine wrote (or validated) every live DV
-    meta.setdefault("properties", {})[_DV_WRITER_PROP] = "cloudfloe-spark"
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return snap_id
+
+    return commit_metadata(
+        root, build, expected_metadata_path=expected_metadata_path
+    )
 
 
 def set_ref(
@@ -2452,23 +1952,22 @@ def set_ref(
     existing snapshot — the Iceberg v2 ``refs`` metadata map. Readers
     resolve it via ``VERSION AS OF '<name>'``. Metadata-only: publishes a
     new metadata version, moves nothing else."""
-    from cloudfloe_spark.sources import iceberg_meta as im
+    def update(meta: dict) -> None:
+        known = {s.get("snapshot-id") for s in meta.get("snapshots", [])}
+        if snapshot_id not in known:
+            raise ValueError(
+                f"set_ref: snapshot {snapshot_id} not in table (known: "
+                f"{sorted(known)})"
+            )
+        if ref_type not in ("tag", "branch"):
+            raise ValueError(f"set_ref: ref_type must be tag|branch, got {ref_type!r}")
+        meta.setdefault("refs", {})[name] = {
+            "snapshot-id": snapshot_id,
+            "type": ref_type,
+        }
+        meta["last-updated-ms"] = timestamp_ms
 
-    meta = im.load_metadata(root)
-    known = {s.get("snapshot-id") for s in meta.get("snapshots", [])}
-    if snapshot_id not in known:
-        raise ValueError(
-            f"set_ref: snapshot {snapshot_id} not in table (known: "
-            f"{sorted(known)})"
-        )
-    if ref_type not in ("tag", "branch"):
-        raise ValueError(f"set_ref: ref_type must be tag|branch, got {ref_type!r}")
-    meta.setdefault("refs", {})[name] = {
-        "snapshot-id": snapshot_id,
-        "type": ref_type,
-    }
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+    commit_metadata(root, update)
 
 
 def append_to_branch(
@@ -2516,47 +2015,47 @@ def publish_ref(root: str, name: str, *, timestamp_ms: int) -> int:
     the old lenient behavior."""
     from cloudfloe_spark.sources import iceberg_meta as im
 
-    meta = im.load_metadata(root)
-    sid = im.resolve_ref(root, name)
-    current = meta.get("current-snapshot-id")
-    if current is not None and current != sid:
-        by_id = {s.get("snapshot-id"): s for s in meta.get("snapshots", [])}
-        walk, lineage_known = sid, False
-        while walk is not None:
-            if walk == current:
-                break
-            parent = (by_id.get(walk) or {}).get("parent-snapshot-id")
-            if parent is not None:
-                lineage_known = True
-            walk = parent
-        if walk is None and lineage_known:
-            raise ValueError(
-                f"publish_ref: ref {name!r} (snapshot {sid}) does not "
-                f"descend from the current snapshot {current} — not a "
-                "fast-forward; rebase the branch (re-stage its changes on "
-                "the current snapshot) instead of publishing"
-            )
-    meta["current-snapshot-id"] = sid
-    _sync_main_ref(meta, sid)
-    meta["last-updated-ms"] = timestamp_ms
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": sid, "timestamp-ms": timestamp_ms}
-    )
-    write_next_metadata_version(root, meta)
-    return sid
+    def update(meta: dict) -> int:
+        sid = im.resolve_ref(root, name)
+        current = meta.get("current-snapshot-id")
+        if current is not None and current != sid:
+            by_id = {s.get("snapshot-id"): s for s in meta.get("snapshots", [])}
+            walk, lineage_known = sid, False
+            while walk is not None:
+                if walk == current:
+                    break
+                parent = (by_id.get(walk) or {}).get("parent-snapshot-id")
+                if parent is not None:
+                    lineage_known = True
+                walk = parent
+            if walk is None and lineage_known:
+                raise ValueError(
+                    f"publish_ref: ref {name!r} (snapshot {sid}) does not "
+                    f"descend from the current snapshot {current} — not a "
+                    "fast-forward; rebase the branch (re-stage its changes on "
+                    "the current snapshot) instead of publishing"
+                )
+        meta["current-snapshot-id"] = sid
+        _sync_main_ref(meta, sid)
+        meta["last-updated-ms"] = timestamp_ms
+        meta.setdefault("snapshot-log", []).append(
+            {"snapshot-id": sid, "timestamp-ms": timestamp_ms}
+        )
+        return sid
+
+    return commit_metadata(root, update)
 
 
 def drop_ref(root: str, name: str, *, timestamp_ms: int) -> None:
     """Remove a named ref. The snapshot it pointed at stays until normal
     expiry — dropping the ref is what ALLOWS it to expire (expiry retains
     ref-reachable snapshots)."""
-    from cloudfloe_spark.sources import iceberg_meta as im
+    def update(meta: dict) -> None:
+        refs = meta.get("refs") or {}
+        if name not in refs:
+            raise ValueError(f"drop_ref: unknown ref {name!r} (known: {sorted(refs)})")
+        del refs[name]
+        meta["refs"] = refs
+        meta["last-updated-ms"] = timestamp_ms
 
-    meta = im.load_metadata(root)
-    refs = meta.get("refs") or {}
-    if name not in refs:
-        raise ValueError(f"drop_ref: unknown ref {name!r} (known: {sorted(refs)})")
-    del refs[name]
-    meta["refs"] = refs
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+    commit_metadata(root, update)

@@ -138,7 +138,12 @@ def latest_metadata_path(root: str) -> str:
     number, so a lexicographic sort would serve stale state from v9 once v10
     exists. Honor ``version-hint.text`` when present (the catalog's own
     pointer), else sort by the parsed numeric version with a lexicographic
-    fallback for uuid-style names (``<padded-N>-<uuid>.metadata.json``)."""
+    fallback for uuid-style names (``<padded-N>-<uuid>.metadata.json``).
+
+    From the hint, probe forward while the next version exists, as
+    Iceberg's ``HadoopTableOperations.refresh`` does: a commit publishes
+    its version before it moves the hint, so a writer that stopped in
+    between leaves the hint one behind."""
     root_n = _norm_root(root)
     meta_dir = _join(root_n, "metadata")
     hint = _join(meta_dir, "version-hint.text")
@@ -147,6 +152,8 @@ def latest_metadata_path(root: str) -> str:
             v = int(_read_text(hint).strip())
             candidate = _join(meta_dir, f"v{v}.metadata.json")
             if _exists(candidate):
+                while _exists(nxt := _join(meta_dir, f"v{v + 1}.metadata.json")):
+                    candidate, v = nxt, v + 1
                 return candidate
         except (OSError, ValueError):
             pass  # malformed hint — fall through to the directory scan
@@ -305,17 +312,6 @@ def live_data_files(root: str, snapshot: dict) -> list[dict]:
         and e["manifest_content"] == 0
         and e["data_file"].get("content", 0) == 0
     ]
-
-
-def has_delete_files(root: str, snapshot: dict) -> bool:
-    """True when the snapshot carries row-level delete files (manifest
-    content=1, or data_file.content in (1,2))."""
-    for e in manifest_entries(root, snapshot):
-        if e["status"] == 2:
-            continue
-        if e["manifest_content"] != 0 or e["data_file"].get("content", 0) != 0:
-            return True
-    return False
 
 
 def delete_file_records(root: str, snapshot: dict) -> list[dict]:
@@ -898,13 +894,6 @@ def prune_position_deletes(
         except Exception:
             kept.append(d)
     return kept
-
-
-def has_equality_deletes(root: str, snapshot: dict) -> bool:
-    """True when the snapshot carries equality-delete files (content=2)."""
-    return any(
-        f.get("content", 0) == 2 for f in delete_file_records(root, snapshot)
-    )
 
 
 def equality_delete_records(root: str, snapshot: dict) -> list[dict]:

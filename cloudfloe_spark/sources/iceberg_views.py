@@ -33,29 +33,12 @@ class IcebergViewError(ValueError):
     pass
 
 
-def _meta_dir(root: str) -> str:
-    return os.path.join(root, "metadata")
-
-
-def _latest_path(root: str) -> str:
-    d = _meta_dir(root)
-    if not os.path.isdir(d):
-        raise IcebergViewError(f"no view at {root}")
-    versions = [
-        f for f in os.listdir(d)
-        if f.startswith("v") and f.endswith(".metadata.json")
-    ]
-    if not versions:
-        raise IcebergViewError(f"no view metadata under {d}")
-    latest = max(versions, key=lambda f: int(f[1:].split(".")[0]))
-    return os.path.join(d, latest)
-
-
 def load_view(root: str) -> dict:
+    from cloudfloe_spark.sources import iceberg_meta as im
+
     try:
-        with open(_latest_path(root)) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError) as e:
+        meta = im.load_metadata(root)
+    except im.IcebergMetadataError as e:
         raise IcebergViewError(f"unreadable view metadata at {root}: {e}")
     if "view-uuid" not in meta:
         raise IcebergViewError(f"{root} is not an Iceberg view")
@@ -105,30 +88,14 @@ def _representations(sql: str) -> list[dict]:
     return reps
 
 
-def _write_next(root: str, meta: dict) -> None:
-    d = _meta_dir(root)
-    os.makedirs(d, exist_ok=True)
-    existing = [
-        int(f[1:].split(".")[0])
-        for f in os.listdir(d)
-        if f.startswith("v") and f.endswith(".metadata.json")
-    ]
-    n = max(existing, default=0) + 1
-    tmp = os.path.join(d, f".v{n}.metadata.json.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(d, f"v{n}.metadata.json"))
-
-
 def create_iceberg_view(root: str, sql: str, *, timestamp_ms: int) -> dict:
     """CREATE VIEW: version 1 of a new view at ``root``. The SQL must be
     a read-only query (validated now and again at every use)."""
-    if os.path.isdir(_meta_dir(root)) and any(
-        f.endswith(".metadata.json") for f in os.listdir(_meta_dir(root))
-    ):
-        raise IcebergViewError(
-            f"view already exists at {root} — use replace_iceberg_view"
-        )
+    from cloudfloe_spark.sources.snapshots import (
+        CommitConflictError,
+        create_metadata,
+    )
+
     sql = _validated(sql)
     version = {
         "version-id": 1,
@@ -148,7 +115,12 @@ def create_iceberg_view(root: str, sql: str, *, timestamp_ms: int) -> dict:
         "schemas": [],
         "properties": {},
     }
-    _write_next(root, meta)
+    try:
+        create_metadata(root, meta)
+    except CommitConflictError:
+        raise IcebergViewError(
+            f"view already exists at {root} — use replace_iceberg_view"
+        ) from None
     return {"version_id": 1}
 
 
@@ -156,25 +128,30 @@ def replace_iceberg_view(root: str, sql: str, *, timestamp_ms: int) -> dict:
     """CREATE OR REPLACE VIEW: append an immutable new version and point
     ``current-version-id`` at it — prior definitions stay in the log
     (the view analog of table snapshots)."""
-    meta = load_view(root)
+    from cloudfloe_spark.sources.snapshots import commit_metadata
+
+    load_view(root)
     sql = _validated(sql)
-    vid = max(v["version-id"] for v in meta["versions"]) + 1
-    meta["versions"].append(
-        {
-            "version-id": vid,
-            "timestamp-ms": timestamp_ms,
-            "schema-id": 0,
-            "summary": {"operation": "replace"},
-            "representations": _representations(sql),
-            "default-namespace": [],
-        }
-    )
-    meta["current-version-id"] = vid
-    meta.setdefault("version-log", []).append(
-        {"timestamp-ms": timestamp_ms, "version-id": vid}
-    )
-    _write_next(root, meta)
-    return {"version_id": vid}
+
+    def update(meta: dict) -> dict:
+        vid = max(v["version-id"] for v in meta["versions"]) + 1
+        meta["versions"].append(
+            {
+                "version-id": vid,
+                "timestamp-ms": timestamp_ms,
+                "schema-id": 0,
+                "summary": {"operation": "replace"},
+                "representations": _representations(sql),
+                "default-namespace": [],
+            }
+        )
+        meta["current-version-id"] = vid
+        meta.setdefault("version-log", []).append(
+            {"timestamp-ms": timestamp_ms, "version-id": vid}
+        )
+        return {"version_id": vid}
+
+    return commit_metadata(root, update)
 
 
 # --- materialized views ------------------------------------------------------
@@ -450,12 +427,8 @@ def _stamp_mv_property(
 ) -> None:
     """Record/refresh the freshness lineage in a table property — one
     metadata version, O(1)."""
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
-    meta = im.load_metadata(target_root)
     rec = {
         "view": view_root,
         "view-version": view_version,
@@ -464,13 +437,16 @@ def _stamp_mv_property(
     }
     if key_cols:
         rec["key-cols"] = list(key_cols)
-    props = meta.setdefault("properties", {})
-    props["cloudfloe.mv"] = json.dumps(rec, sort_keys=True)
-    # a successful stamp supersedes any pending follower epoch intent
-    # (streaming/matview_follow.py's two-phase apply)
-    props.pop("cloudfloe.mv-intent", None)
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(target_root, meta)
+
+    def update(meta: dict) -> None:
+        props = meta.setdefault("properties", {})
+        props["cloudfloe.mv"] = json.dumps(rec, sort_keys=True)
+        # a successful stamp supersedes any pending follower epoch intent
+        # (streaming/matview_follow.py's two-phase apply)
+        props.pop("cloudfloe.mv-intent", None)
+        meta["last-updated-ms"] = timestamp_ms
+
+    commit_metadata(target_root, update)
 
 
 def _base_tables(sql: str) -> list[str]:

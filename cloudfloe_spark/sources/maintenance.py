@@ -812,83 +812,95 @@ def expire_snapshots(
     Iceberg's own previous-metadata retention. At 100 TB this is what
     bounds snapshot-log growth and lets storage be reclaimed."""
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import write_next_metadata_version
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     if keep_last is None and older_than_ms is None:
         raise ValueError("expire_snapshots: give keep_last, older_than_ms, or both")
     if keep_last is not None and keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    meta = im.load_metadata(root)
-    snaps = sorted(
-        meta.get("snapshots", []), key=lambda s: s.get("sequence-number", 0)
-    )
-    # each rule PROTECTS snapshots; a snapshot expires only when no
-    # given rule protects it (= it satisfies both expiry conditions)
-    protected: set = set()
-    if keep_last is not None:
-        protected |= {s["snapshot-id"] for s in snaps[-keep_last:]}
-    if older_than_ms is not None:
-        protected |= {
-            s["snapshot-id"]
-            for s in snaps
-            if s.get("timestamp-ms", 0) >= older_than_ms
+
+    def plan(meta: dict) -> tuple[list, list]:
+        """(kept snapshots, expired snapshot ids) of ``meta``."""
+        snaps = sorted(
+            meta.get("snapshots", []), key=lambda s: s.get("sequence-number", 0)
+        )
+        # each rule PROTECTS snapshots; a snapshot expires only when no
+        # given rule protects it (= it satisfies both expiry conditions)
+        protected: set = set()
+        if keep_last is not None:
+            protected |= {s["snapshot-id"] for s in snaps[-keep_last:]}
+        if older_than_ms is not None:
+            protected |= {
+                s["snapshot-id"]
+                for s in snaps
+                if s.get("timestamp-ms", 0) >= older_than_ms
+            }
+        kept = [s for s in snaps if s["snapshot-id"] in protected]
+        kept_ids = {s["snapshot-id"] for s in kept}
+        current = meta.get("current-snapshot-id")
+        if current is not None and current not in kept_ids:
+            # e.g. after a rollback the current snapshot may not be the
+            # newest by sequence — it is always retained.
+            kept = [s for s in snaps if s["snapshot-id"] == current] + kept
+            kept_ids.add(current)
+        # ref-reachable snapshots (tags/branches, incl. unpublished WAP
+        # stages) are retained too — expiring them would dangle
+        # ``VERSION AS OF '<name>'``. Matches Iceberg's own ref-aware
+        # expiry (per-ref retention policies collapse to "keep" here).
+        ref_ids = {
+            int(r["snapshot-id"])
+            for r in (meta.get("refs") or {}).values()
+            if isinstance(r, dict) and "snapshot-id" in r
         }
-    kept = [s for s in snaps if s["snapshot-id"] in protected]
-    kept_ids = {s["snapshot-id"] for s in kept}
-    current = meta.get("current-snapshot-id")
-    if current is not None and current not in kept_ids:
-        # e.g. after a rollback the current snapshot may not be the
-        # newest by sequence — it is always retained.
-        kept = [s for s in snaps if s["snapshot-id"] == current] + kept
-        kept_ids.add(current)
-    # ref-reachable snapshots (tags/branches, incl. unpublished WAP
-    # stages) are retained too — expiring them would dangle
-    # ``VERSION AS OF '<name>'``. Matches Iceberg's own ref-aware expiry
-    # (per-ref retention policies collapse to "keep" here).
-    ref_ids = {
-        int(r["snapshot-id"])
-        for r in (meta.get("refs") or {}).values()
-        if isinstance(r, dict) and "snapshot-id" in r
-    }
-    for s in snaps:
-        if s["snapshot-id"] in ref_ids and s["snapshot-id"] not in kept_ids:
-            kept = [s] + kept
-            kept_ids.add(s["snapshot-id"])
-    expired = [s["snapshot-id"] for s in snaps if s["snapshot-id"] not in kept_ids]
+        for s in snaps:
+            if s["snapshot-id"] in ref_ids and s["snapshot-id"] not in kept_ids:
+                kept = [s] + kept
+                kept_ids.add(s["snapshot-id"])
+        expired = [
+            s["snapshot-id"] for s in snaps if s["snapshot-id"] not in kept_ids
+        ]
+        return kept, expired
+
+    kept, expired = plan(im.load_metadata(root))
     if not expired:
         return {"expired": [], "kept": [s["snapshot-id"] for s in kept]}
-    # statistics files are snapshot-scoped: entries for expired snapshots
-    # leave the metadata and their sidecar files are deleted, matching
-    # Iceberg's expireSnapshots clean-up of statistics files (both the
-    # theta StatisticsFiles and the r12 partition-statistics parquet)
-    for stats_key in ("statistics", "partition-statistics"):
-        if not meta.get(stats_key):
-            continue
-        dropped = [
+    dropped: list = []
+
+    def update(meta: dict) -> dict:
+        kept, expired = plan(meta)
+        kept_ids = {s["snapshot-id"] for s in kept}
+        # statistics files are snapshot-scoped: entries for expired
+        # snapshots leave the metadata and their sidecar files are deleted
+        # once it is committed, matching Iceberg's expireSnapshots
+        # clean-up of statistics files (both the theta StatisticsFiles and
+        # the r12 partition-statistics parquet)
+        dropped.clear()
+        for stats_key in ("statistics", "partition-statistics"):
+            if not meta.get(stats_key):
+                continue
+            dropped.extend(
+                e for e in meta[stats_key] if e.get("snapshot-id") not in kept_ids
+            )
+            meta[stats_key] = [
+                e for e in meta[stats_key] if e.get("snapshot-id") in kept_ids
+            ]
+        meta["snapshots"] = kept
+        meta["snapshot-log"] = [
             e
-            for e in meta[stats_key]
-            if e.get("snapshot-id") not in kept_ids
-        ]
-        meta[stats_key] = [
-            e
-            for e in meta[stats_key]
+            for e in meta.get("snapshot-log", [])
             if e.get("snapshot-id") in kept_ids
         ]
-        for e in dropped:
-            p = e.get("statistics-path", "")
-            try:
-                os.remove(fsio.local_path(p) or p)
-            except OSError:
-                pass
-    meta["snapshots"] = kept
-    meta["snapshot-log"] = [
-        e
-        for e in meta.get("snapshot-log", [])
-        if e.get("snapshot-id") in kept_ids
-    ]
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return {"expired": expired, "kept": [s["snapshot-id"] for s in kept]}
+        meta["last-updated-ms"] = timestamp_ms
+        return {"expired": expired, "kept": [s["snapshot-id"] for s in kept]}
+
+    result = commit_metadata(root, update)
+    for e in dropped:
+        p = e.get("statistics-path", "")
+        try:
+            os.remove(fsio.local_path(p) or p)
+        except OSError:
+            pass
+    return result
 
 
 DEFAULT_ORPHAN_GRACE_MS = 3 * 24 * 3600 * 1000  # Iceberg's own default
@@ -916,6 +928,7 @@ def remove_orphan_files(
     import time as _time
 
     from cloudfloe_spark.sources import iceberg_meta as im
+    from cloudfloe_spark.sources.snapshots import TEMP_PREFIX, TEMP_SUFFIX
 
     if fsio.is_remote(root):
         raise ValueError("remove_orphan_files supports local roots only")
@@ -959,12 +972,16 @@ def remove_orphan_files(
         + globmod.glob(os.path.join(root_n, "metadata", "*.avro"))
         # StatisticsFiles (r12): spec Puffin stats + legacy JSON
         # sidecars whose metadata commit never landed (crash between
-        # the ANALYZE write and write_next_metadata_version) — live
-        # ones are referenced via the statistics list below
+        # the ANALYZE write and its commit) — live ones are referenced
+        # via the statistics list below
         + globmod.glob(os.path.join(root_n, "metadata", "*.stats"))
         + globmod.glob(os.path.join(root_n, "metadata", "stats-*.json"))
         + globmod.glob(
             os.path.join(root_n, "metadata", "partition-stats-*.parquet")
+        )
+        # in-flight metadata a writer died holding (never a version)
+        + globmod.glob(
+            os.path.join(root_n, "metadata", f"{TEMP_PREFIX}*{TEMP_SUFFIX}")
         )
     )
     _meta_now = im.load_metadata(root)
@@ -3746,27 +3763,24 @@ def rollback_to(root: str, snapshot_id: int, *, timestamp_ms: int) -> None:
     snapshots stay in the metadata (roll-forward = another rollback;
     :func:`expire_snapshots` already retains the current snapshot even
     when it is not the newest by sequence — the post-rollback state)."""
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
-
-    meta = im.load_metadata(root)
-    known = {s.get("snapshot-id") for s in meta.get("snapshots", [])}
-    if snapshot_id not in known:
-        raise ValueError(
-            f"rollback_to: snapshot {snapshot_id} not in table "
-            f"(known: {sorted(known)})"
-        )
-    meta["current-snapshot-id"] = snapshot_id
     from cloudfloe_spark.sources.iceberg_fixture import _sync_main_ref
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
-    _sync_main_ref(meta, snapshot_id)  # explicit main follows current
-    meta["last-updated-ms"] = timestamp_ms
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": snapshot_id, "timestamp-ms": timestamp_ms}
-    )
-    write_next_metadata_version(root, meta)
+    def update(meta: dict) -> None:
+        known = {s.get("snapshot-id") for s in meta.get("snapshots", [])}
+        if snapshot_id not in known:
+            raise ValueError(
+                f"rollback_to: snapshot {snapshot_id} not in table "
+                f"(known: {sorted(known)})"
+            )
+        meta["current-snapshot-id"] = snapshot_id
+        _sync_main_ref(meta, snapshot_id)  # explicit main follows current
+        meta["last-updated-ms"] = timestamp_ms
+        meta.setdefault("snapshot-log", []).append(
+            {"snapshot-id": snapshot_id, "timestamp-ms": timestamp_ms}
+        )
+
+    commit_metadata(root, update)
 
 
 @_reruns_on_conflict("compact_small_files")
@@ -4350,9 +4364,7 @@ def compute_partition_stats(root: str, *, timestamp_ms: int) -> dict:
     import pyarrow.parquet as pq
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     metadata_path = im.latest_metadata_path(root)
     snap = im.resolve_snapshot(root, metadata_path=metadata_path)
@@ -4486,20 +4498,23 @@ def compute_partition_stats(root: str, *, timestamp_ms: int) -> dict:
         f"{_uuid.uuid4().hex[:8]}.parquet",
     )
     pq.write_table(tbl, path)
-    meta = im.load_metadata(root, metadata_path)
-    meta["partition-statistics"] = [
-        e
-        for e in meta.get("partition-statistics") or []
-        if e.get("snapshot-id") != snap["snapshot-id"]
-    ] + [
-        {
-            "snapshot-id": snap["snapshot-id"],
-            "statistics-path": f"file://{path}",
-            "file-size-in-bytes": os.path.getsize(path),
-        }
-    ]
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+
+    def update(meta: dict) -> None:
+        # the file describes snapshot S whatever landed since it was read
+        meta["partition-statistics"] = [
+            e
+            for e in meta.get("partition-statistics") or []
+            if e.get("snapshot-id") != snap["snapshot-id"]
+        ] + [
+            {
+                "snapshot-id": snap["snapshot-id"],
+                "statistics-path": f"file://{path}",
+                "file-size-in-bytes": os.path.getsize(path),
+            }
+        ]
+        meta["last-updated-ms"] = timestamp_ms
+
+    commit_metadata(root, update)
     return {
         "snapshot_id": snap["snapshot-id"],
         "partitions": len(keys),
@@ -5190,9 +5205,7 @@ def analyze_iceberg_table(
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources import puffin as pf
     from cloudfloe_spark.sources import theta as th
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.sources.tables import ensure_runtime_conf
 
     sess = spark.newSession()
@@ -5383,27 +5396,29 @@ def analyze_iceberg_table(
             "cloudfloe.hash-encoding": str(th.HASH_ENCODING_VERSION),
         },
     )
-    meta = im.load_metadata(root, metadata_path)
-    # spec semantics (set-statistics): ONE StatisticsFile per snapshot —
-    # a re-ANALYZE at the same snapshot replaces its entry
-    meta["statistics"] = [
-        e
-        for e in meta.get("statistics") or []
-        if e.get("snapshot-id") != snap["snapshot-id"]
-    ] + [
-        {
-            "snapshot-id": snap["snapshot-id"],
-            "statistics-path": f"file://{path}",
-            "file-size-in-bytes": os.path.getsize(path),
-            "file-footer-size-in-bytes": pf.puffin_footer_size(path),
-            "blob-metadata": [
-                {k: v for k, v in b.items() if k != "data"}
-                for b in blobs
-            ],
-        }
-    ]
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+
+    def update(meta: dict) -> None:
+        # spec semantics (set-statistics): ONE StatisticsFile per
+        # snapshot — a re-ANALYZE at the same snapshot replaces its entry
+        meta["statistics"] = [
+            e
+            for e in meta.get("statistics") or []
+            if e.get("snapshot-id") != snap["snapshot-id"]
+        ] + [
+            {
+                "snapshot-id": snap["snapshot-id"],
+                "statistics-path": f"file://{path}",
+                "file-size-in-bytes": os.path.getsize(path),
+                "file-footer-size-in-bytes": pf.puffin_footer_size(path),
+                "blob-metadata": [
+                    {k: v for k, v in b.items() if k != "data"}
+                    for b in blobs
+                ],
+            }
+        ]
+        meta["last-updated-ms"] = timestamp_ms
+
+    commit_metadata(root, update)
     return {
         "snapshot_id": snap["snapshot-id"],
         "row_count": row_count,
@@ -5435,21 +5450,23 @@ def migrate_position_deletes_to_dvs(
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources.iceberg_fixture import (
         commit_deletion_vector_snapshot,
-        write_next_metadata_version,
     )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     meta_path = im.latest_metadata_path(root)
     snap = im.resolve_snapshot(root, metadata_path=meta_path)
-    meta = im.load_metadata(root, meta_path)
-    fv = int(meta.get("format-version") or 1)
+    fv = int(im.load_metadata(root, meta_path).get("format-version") or 1)
     pos = im.position_delete_paths(root, snap)
     if not pos:
         if fv >= 3:
             return {"position_delete_files": 0, "deletion_vectors": 0,
                     "snapshot_id": None, "format_version": fv}
-        meta["format-version"] = 3
-        meta["last-updated-ms"] = timestamp_ms
-        write_next_metadata_version(root, meta)
+
+        def bump(meta: dict) -> None:
+            meta["format-version"] = 3
+            meta["last-updated-ms"] = timestamp_ms
+
+        commit_metadata(root, bump)
         return {"position_delete_files": 0, "deletion_vectors": 0,
                 "snapshot_id": None, "format_version": 3}
     live_keys = [
@@ -5503,16 +5520,16 @@ def rewrite_deletion_vectors(
     blob-copy IO sized by the delete set; no Spark job, no decode.
 
     Fewer than ``min_files`` distinct Puffin files commits nothing."""
+    import json
+    import struct as _struct
+
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources import puffin
-    from cloudfloe_spark.sources.iceberg_fixture import (
+    from cloudfloe_spark.sources.snapshots import (
         CommitConflictError,
-        _DATA_FILE_KEYS,
-        _MANIFEST_LIST_SCHEMA,
-        _MANIFEST_SCHEMA,
-        write_next_metadata_version,
+        SnapshotProducer,
+        commit_metadata,
     )
-    from cloudfloe_spark.sources.avrolite import write_avro
 
     meta_path = im.latest_metadata_path(root)
     snap = im.resolve_snapshot(root, metadata_path=meta_path)
@@ -5522,139 +5539,90 @@ def rewrite_deletion_vectors(
         return {"puffin_files_before": n_files, "puffin_files_after": n_files,
                 "deletion_vectors": len(dvs), "snapshot_id": None}
 
-    import json
-
-    # one new container holding every live blob, copied verbatim
-    out = bytearray(puffin.MAGIC)
-    blobs_meta = []
-    coords = {}
-    meta = im.load_metadata(root, meta_path)
-    snaps = meta.get("snapshots", [])
-    seq = max((s.get("sequence-number", 0) for s in snaps), default=0) + 1
-    snap_id = (_uuid.uuid4().int & ((1 << 62) - 1)) | (1 << 62)
-    for r in dvs:
-        with open(r["path"], "rb") as fh:
-            fh.seek(r["offset"])
-            blob = fh.read(r["length"])
-        offset = len(out)
-        out += blob
-        blobs_meta.append(
-            {
-                "type": puffin.BLOB_TYPE,
-                "fields": [],
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "offset": offset,
-                "length": len(blob),
-                "properties": {
-                    "referenced-data-file": r["referenced_data_file"]
-                },
-            }
-        )
-        coords[r["referenced_data_file"]] = (offset, len(blob))
-    payload = json.dumps(
-        {"blobs": blobs_meta, "properties": {}}, sort_keys=True
-    ).encode()
-    out += puffin.MAGIC + payload
-    import struct as _struct
-
-    out += _struct.pack("<I", len(payload)) + _struct.pack("<I", 0)
-    out += puffin.MAGIC
-    pf = os.path.join(
-        root, "data", f"dv-rw-{timestamp_ms}-{_uuid.uuid4().hex[:8]}.puffin"
-    )
-    with open(pf, "w+b") as fh:
-        fh.write(bytes(out))
-
-    def entry(status, sequence, data_file):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": sequence,
-            "data_file": {k: data_file.get(k) for k in _DATA_FILE_KEYS},
-        }
-
-    carried = [
-        e for e in im.manifest_entries(root, snap) if e["status"] != 2
-    ]
-    carry, dropped, new_entries = [], [], []
-    for e in carried:
-        df_ = e["data_file"]
-        if (
-            df_.get("content", 0) == 1
-            and df_.get("referenced_data_file") in coords
-        ):
-            # the old DV entry, superseded by its copy in the new
-            # container — the VECTOR keeps its ORIGINAL sequence number
-            # (its deletes' ordering vs data files must not shift)
-            off, ln = coords[df_["referenced_data_file"]]
-            new_entries.append(
-                entry(
-                    1,
-                    e["sequence_number"],
-                    {
-                        **{k: df_.get(k) for k in _DATA_FILE_KEYS},
-                        "file_path": f"file://{pf}",
-                        "file_size_in_bytes": os.path.getsize(pf),
-                        "content_offset": off,
-                        "content_size_in_bytes": ln,
+    def build(meta: dict) -> dict:
+        p = SnapshotProducer(root, meta, timestamp_ms)
+        # one new container holding every live blob, copied verbatim
+        out = bytearray(puffin.MAGIC)
+        blobs_meta = []
+        coords = {}
+        for r in dvs:
+            with open(r["path"], "rb") as fh:
+                fh.seek(r["offset"])
+                blob = fh.read(r["length"])
+            offset = len(out)
+            out += blob
+            blobs_meta.append(
+                {
+                    "type": puffin.BLOB_TYPE,
+                    "fields": [],
+                    "snapshot-id": p.snapshot_id,
+                    "sequence-number": p.sequence_number,
+                    "offset": offset,
+                    "length": len(blob),
+                    "properties": {
+                        "referenced-data-file": r["referenced_data_file"]
                     },
-                )
+                }
             )
-            dropped.append(entry(2, e["sequence_number"], df_))
-            continue
-        carry.append(entry(0, e["sequence_number"], df_))
-    meta_dir = os.path.join(root, "metadata")
-    mpath = os.path.join(
-        meta_dir, f"manifest-dvrw-{_uuid.uuid4().hex[:12]}.avro"
-    )
-    write_avro(mpath, _MANIFEST_SCHEMA, carry + dropped + new_entries)
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}-manifest-list.avro")
-    write_avro(
-        mlist,
-        _MANIFEST_LIST_SCHEMA,
-        [
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "content": 0,
-                "added_snapshot_id": snap_id,
-            }
-        ],
-    )
-    # CAS: abort (and re-run via the decorator) if the table moved on
-    latest_now = im.latest_metadata_path(root)
-    if os.path.realpath(latest_now) != os.path.realpath(meta_path):
-        raise _ScanInvalidated("rewrite_deletion_vectors")
-    snaps.append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": snap.get("snapshot-id"),
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": f"file://{mlist}",
-            "summary": {
-                "operation": "replace",
-                "rewritten-dv-files": str(n_files),
-            },
-        }
-    )
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = snap_id
-    from cloudfloe_spark.sources.iceberg_fixture import _sync_main_ref
+            coords[r["referenced_data_file"]] = (offset, len(blob))
+        payload = json.dumps(
+            {"blobs": blobs_meta, "properties": {}}, sort_keys=True
+        ).encode()
+        out += puffin.MAGIC + payload
+        out += _struct.pack("<I", len(payload)) + _struct.pack("<I", 0)
+        out += puffin.MAGIC
+        pf = os.path.join(
+            root, "data", f"dv-rw-{timestamp_ms}-{_uuid.uuid4().hex[:8]}.puffin"
+        )
+        with open(pf, "w+b") as fh:
+            fh.write(bytes(out))
 
-    _sync_main_ref(meta, snap_id)
-    meta.setdefault("snapshot-log", []).append(
-        {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
-    )
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
-    return {
-        "puffin_files_before": n_files,
-        "puffin_files_after": 1,
-        "deletion_vectors": len(new_entries),
-        "snapshot_id": snap_id,
-    }
+        carry, dropped, new_entries = [], [], []
+        for e in im.manifest_entries(root, snap):
+            if e["status"] == 2:
+                continue
+            df_ = e["data_file"]
+            if (
+                df_.get("content", 0) == 1
+                and df_.get("referenced_data_file") in coords
+            ):
+                # the old DV entry, superseded by its copy in the new
+                # container — the VECTOR keeps its ORIGINAL sequence number
+                # (its deletes' ordering vs data files must not shift)
+                off, ln = coords[df_["referenced_data_file"]]
+                new_entries.append(
+                    p.entry(
+                        1,
+                        e["sequence_number"],
+                        {
+                            **df_,
+                            "file_path": f"file://{pf}",
+                            "file_size_in_bytes": os.path.getsize(pf),
+                            "content_offset": off,
+                            "content_size_in_bytes": ln,
+                        },
+                    )
+                )
+                dropped.append(p.entry(2, e["sequence_number"], df_))
+                continue
+            carry.append(p.entry(0, e["sequence_number"], df_))
+        sid = p.commit(
+            [("dvrw", 0, carry + dropped + new_entries)],
+            {"operation": "replace", "rewritten-dv-files": str(n_files)},
+            parent=snap,
+        )
+        return {
+            "puffin_files_before": n_files,
+            "puffin_files_after": 1,
+            "deletion_vectors": len(new_entries),
+            "snapshot_id": sid,
+        }
+
+    try:
+        return commit_metadata(root, build, expected_metadata_path=meta_path)
+    except CommitConflictError:
+        # the table moved on: re-run against the new current snapshot
+        raise _ScanInvalidated("rewrite_deletion_vectors") from None
 
 
 @_reruns_on_conflict("rewrite_position_deletes")

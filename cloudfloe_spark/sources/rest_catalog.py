@@ -23,7 +23,7 @@ endpoints the service needs —
 reachable, READ (handing ``metadata-location`` to
 :mod:`cloudfloe_spark.sources.iceberg_meta`) AND — once bound via
 :func:`bind_rest_table` — WRITTEN: every local write op's commit point
-(``iceberg_fixture.write_next_metadata_version``) routes through
+(``snapshots.commit_metadata``) routes through
 :func:`commit_table_metadata`, which derives the spec's update list by
 diffing the op's computed metadata against the catalog's current state
 and POSTs it. The catalog (server) is the one that materializes the new
@@ -536,7 +536,7 @@ def bind_rest_table(
     root: str, client: "RestCatalogClient", namespace: str, table: str
 ) -> None:
     """Route every subsequent commit on ``root`` (the shared commit
-    point ``iceberg_fixture.write_next_metadata_version``) through the
+    point ``snapshots.commit_metadata``) through the
     catalog's POST commit protocol — DML, compaction, matview refresh
     stamps, ref/rollback/expire all become catalog-validated commits."""
     _BINDINGS[_norm_root(root)] = (client, namespace, table)

@@ -123,21 +123,19 @@ def _format_cutover(root: str) -> bool:
 def _stamp_format_cutover(root: str, qid: str, timestamp_ms: int) -> None:
     """One-time table property marking the first new-format commit; a
     single extra metadata version, idempotent under races/retries."""
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
-    meta = im.load_metadata(root)
-    props = meta.setdefault("properties", {})
-    if _CUTOVER_PROP in props:
+    if _format_cutover(root):
         return
-    props[_CUTOVER_PROP] = json.dumps(
-        {"first-query-id": qid, "stamped-at-ms": timestamp_ms},
-        sort_keys=True,
-    )
-    meta["last-updated-ms"] = timestamp_ms
-    write_next_metadata_version(root, meta)
+
+    def update(meta: dict) -> None:
+        meta.setdefault("properties", {})[_CUTOVER_PROP] = json.dumps(
+            {"first-query-id": qid, "stamped-at-ms": timestamp_ms},
+            sort_keys=True,
+        )
+        meta["last-updated-ms"] = timestamp_ms
+
+    commit_metadata(root, update)
 
 
 def append_stream_to_iceberg(

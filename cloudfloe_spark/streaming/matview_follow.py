@@ -81,17 +81,15 @@ def _write_intent(target_root: str, tag: str, to: dict, ts_ms: int) -> None:
     """Record the epoch's pinned refresh targets BEFORE applying — the
     replay side of the two-phase apply (cleared by the freshness
     stamp)."""
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
-    meta = im.load_metadata(target_root)
-    meta.setdefault("properties", {})["cloudfloe.mv-intent"] = json.dumps(
-        {"tag": tag, "to": to}, sort_keys=True
-    )
-    meta["last-updated-ms"] = ts_ms
-    write_next_metadata_version(target_root, meta)
+    def update(meta: dict) -> None:
+        meta.setdefault("properties", {})["cloudfloe.mv-intent"] = json.dumps(
+            {"tag": tag, "to": to}, sort_keys=True
+        )
+        meta["last-updated-ms"] = ts_ms
+
+    commit_metadata(target_root, update)
 
 
 def follow_materialized_view(

@@ -91,11 +91,8 @@ def test_udf_over_iceberg_geometry_table(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "geo")
     wkbs = [encode_wkb_point(float(i), float(-i)) for i in range(5)]
@@ -113,13 +110,15 @@ def test_udf_over_iceberg_geometry_table(spark, tmp_path):
         ],
         timestamp_ms=1700000000000,
     )
-    meta = im.load_metadata(root)
-    for sch in meta["schemas"]:
-        for f in sch["fields"]:
-            if f["name"] == "geo":
-                f["type"] = "geometry(srid:4326)"
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = "geometry(srid:4326)"
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     sess = spark.newSession()
     df = sess.sql(
         resolve_iceberg_reads(
@@ -203,10 +202,8 @@ def test_geo_bounds_stamp_and_bbox_file_skip(spark, tmp_path):
 
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
 
     root = str(tmp_path / "geoskip")
@@ -236,13 +233,15 @@ def test_geo_bounds_stamp_and_bbox_file_skip(spark, tmp_path):
         ],
         timestamp_ms=1700000000000,
     )
-    meta = im.load_metadata(root)
-    for sch in meta["schemas"]:
-        for f in sch["fields"]:
-            if f["name"] == "geo":
-                f["type"] = "geometry(srid:4326)"
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = "geometry(srid:4326)"
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
 
     rep = compute_geo_bounds(
         spark, root, timestamp_ms=1700000001000
@@ -297,11 +296,8 @@ def test_geo_bounds_stamp_and_bbox_file_skip(spark, tmp_path):
 
 
 def _geo_table(tmp_path, name, geo_type):
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / name)
     t = LocalIcebergTable(
@@ -322,13 +318,15 @@ def _geo_table(tmp_path, name, geo_type):
         ],
         timestamp_ms=1700000000000,
     )
-    meta = im.load_metadata(root)
-    for sch in meta["schemas"]:
-        for f in sch["fields"]:
-            if f["name"] == "geo":
-                f["type"] = geo_type
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = geo_type
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     return root, t
 
 
@@ -385,10 +383,8 @@ def test_geography_wrapped_bounds_stamp_scan_and_skip(spark, tmp_path):
 
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.sources.maintenance import compute_geo_bounds
 
     root = str(tmp_path / "geog")
@@ -421,13 +417,15 @@ def test_geography_wrapped_bounds_stamp_scan_and_skip(spark, tmp_path):
         ],
         timestamp_ms=1700000000000,
     )
-    meta = im.load_metadata(root)
-    for sch in meta["schemas"]:
-        for f in sch["fields"]:
-            if f["name"] == "geo":
-                f["type"] = "geography(srid:4326)"
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = "geography(srid:4326)"
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
 
     rep = compute_geo_bounds(spark, root, timestamp_ms=1700000001000)
     assert rep["files_stamped"] == 3
@@ -933,7 +931,7 @@ def test_wrap_interval_cover_properties():
     degenerate point intervals reduce EXACTLY to wrap_interval, and
     the cover contains every input interval (circle membership of both
     endpoints plus the wrap flag implying coverage of the span)."""
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from cloudfloe_spark.functions.geo import (
@@ -956,21 +954,23 @@ def test_wrap_interval_cover_properties():
             [(v, v) for v in vals]
         ) == wrap_interval(vals)
 
+    def fwd_span(s, e):
+        # a non-wrapping interval's span is exactly e - s; `% 360` of a
+        # span within an ulp of 360 would round it to 0
+        return e - s if s <= e else (e - s) % 360.0
+
     @settings(max_examples=300, deadline=None)
     @given(st.lists(st.tuples(lon, lon), min_size=1, max_size=12))
+    @example([(0.0, 0.0), (-179.99999999999997, 180.0)])
     def check_cover(ivs):
         lo, hi = wrap_interval_cover(ivs)
         # exact circular containment: the interval's forward span from
         # its start must fit inside the cover's span from ITS start
-        cover_span = (
-            360.0
-            if (lo, hi) == (-180.0, 180.0)
-            else (hi - lo) % 360.0
-        )
+        cover_span = fwd_span(lo, hi)
         if cover_span >= 360.0:
             return  # full circle: contains everything
         for a, b in ivs:
-            span = (b - a) % 360.0 if a != b else 0.0
+            span = fwd_span(a, b)
             offset = (a - lo) % 360.0
             assert offset + span <= cover_span + 1e-9, (
                 ivs, (lo, hi), (a, b)

@@ -406,30 +406,32 @@ def test_avrolite_rejects_corrupt_sync_marker(tmp_path):
 
 
 def test_latest_metadata_numeric_version_sort(tmp_path):
-    """v10 must beat v9 despite sorting before it lexicographically
+    """v12 must beat v9 despite sorting before it lexicographically
     (HadoopCatalog names versions unpadded), and a version-hint.text
-    pointer must win outright when present."""
+    pointer must win over the scan when present — probing forward from
+    it only through consecutive versions, as Iceberg's
+    HadoopTableOperations does."""
     import json as _json
     import os
 
     meta_dir = tmp_path / "tbl" / "metadata"
     meta_dir.mkdir(parents=True)
-    for v in (1, 2, 9, 10, 11):
+    for v in (1, 2, 9, 10, 12):
         (meta_dir / f"v{v}.metadata.json").write_text(
             _json.dumps({"format-version": 2, "snapshots": [], "v": v})
         )
     root = str(tmp_path / "tbl")
-    assert os.path.basename(im.latest_metadata_path(root)) == "v11.metadata.json"
-    assert im.load_metadata(root)["v"] == 11
+    assert os.path.basename(im.latest_metadata_path(root)) == "v12.metadata.json"
+    assert im.load_metadata(root)["v"] == 12
 
     (meta_dir / "version-hint.text").write_text("9\n")
-    assert os.path.basename(im.latest_metadata_path(root)) == "v9.metadata.json"
+    assert os.path.basename(im.latest_metadata_path(root)) == "v10.metadata.json"
 
     # Malformed / dangling hints fall back to the numeric scan.
     (meta_dir / "version-hint.text").write_text("999")
-    assert os.path.basename(im.latest_metadata_path(root)) == "v11.metadata.json"
+    assert os.path.basename(im.latest_metadata_path(root)) == "v12.metadata.json"
     (meta_dir / "version-hint.text").write_text("not-a-number")
-    assert os.path.basename(im.latest_metadata_path(root)) == "v11.metadata.json"
+    assert os.path.basename(im.latest_metadata_path(root)) == "v12.metadata.json"
 
 
 def test_latest_metadata_uuid_naming_falls_back_lexicographic(tmp_path):
@@ -2517,9 +2519,7 @@ def test_column_stats_reads_legacy_json_sidecar(spark, tmp_path):
     cloudfloe-ndv-json-v1) stay readable after the spec-format switch."""
     import json as _json
 
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "tbl")
     t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
@@ -2537,24 +2537,26 @@ def test_column_stats_reads_legacy_json_sidecar(spark, tmp_path):
             },
             fh,
         )
-    meta = im.load_metadata(root)
-    meta.setdefault("statistics", []).append(
-        {
-            "snapshot-id": snap["snapshot-id"],
-            "statistics-path": f"file://{path}",
-            "file-size-in-bytes": os.path.getsize(path),
-            "file-footer-size-in-bytes": os.path.getsize(path),
-            "blob-metadata": [
-                {
-                    "type": "cloudfloe-ndv-json-v1",
-                    "snapshot-id": snap["snapshot-id"],
-                    "sequence-number": 1,
-                    "fields": ["id"],
-                }
-            ],
-        }
-    )
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        meta.setdefault("statistics", []).append(
+            {
+                "snapshot-id": snap["snapshot-id"],
+                "statistics-path": f"file://{path}",
+                "file-size-in-bytes": os.path.getsize(path),
+                "file-footer-size-in-bytes": os.path.getsize(path),
+                "blob-metadata": [
+                    {
+                        "type": "cloudfloe-ndv-json-v1",
+                        "snapshot-id": snap["snapshot-id"],
+                        "sequence-number": 1,
+                        "fields": ["id"],
+                    }
+                ],
+            }
+        )
+
+    commit_metadata(root, _edit)
     rows = run_query(
         spark,
         f"SELECT column, ndv, null_count, row_count, is_current "

@@ -424,17 +424,16 @@ def test_join_follow_unresolvable_unrecorded_dim_raises(spark, tmp_path):
     a VERSION AS OF clause."""
     import json as _json
 
-    from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     fact, dim, vroot, troot = _join_followed(spark, tmp_path)
-    meta = im.load_metadata(troot)
-    rec = _json.loads(meta["properties"]["cloudfloe.mv"])
-    rec["bases"][dim] = None  # unrecorded
-    meta["properties"]["cloudfloe.mv"] = _json.dumps(rec, sort_keys=True)
-    write_next_metadata_version(troot, meta)
+
+    def _edit(meta):
+        rec = _json.loads(meta["properties"]["cloudfloe.mv"])
+        rec["bases"][dim] = None  # unrecorded
+        meta["properties"]["cloudfloe.mv"] = _json.dumps(rec, sort_keys=True)
+
+    commit_metadata(troot, _edit)
     shutil.rmtree(dim)  # unreadable
     delete_where(spark, fact, "id = 1", timestamp_ms=T1 + 2000)
     with pytest.raises(Exception, match="cannot pin base"):

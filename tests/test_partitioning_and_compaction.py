@@ -363,10 +363,8 @@ def test_expire_never_drops_current_snapshot(tmp_path):
     import pyarrow as pa
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        LocalIcebergTable,
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.sources.maintenance import expire_snapshots
 
     root = str(tmp_path / "rb")
@@ -374,9 +372,11 @@ def test_expire_never_drops_current_snapshot(tmp_path):
     s1 = t.append_snapshot([pa.table({"id": [1]})], timestamp_ms=1700000000000)
     s2 = t.append_snapshot([pa.table({"id": [2]})], timestamp_ms=1700000100000)
     # roll current back to s1
-    meta = im.load_metadata(root)
-    meta["current-snapshot-id"] = s1
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        meta["current-snapshot-id"] = s1
+
+    commit_metadata(root, _edit)
 
     result = expire_snapshots(root, keep_last=1, timestamp_ms=1700000200000)
     assert s1 in result["kept"]  # current survives despite older sequence

@@ -91,9 +91,7 @@ def test_stream_append_into_snapshotless_table(spark, tmp_path):
     snapshot, current-snapshot-id -1) must accept its first streamed
     micro-batch — the unconditional resolve_snapshot guard used to fail
     with 'table has no current snapshot' before any data drained."""
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "empty")
     t = LocalIcebergTable(
@@ -102,12 +100,14 @@ def test_stream_append_into_snapshotless_table(spark, tmp_path):
     t.append_snapshot([pa.table({"id": [99], "v": ["tmp"]})],
                       timestamp_ms=T1)
     # rewrite the metadata as a freshly-CREATEd table: no snapshots yet
-    meta = im.load_metadata(root)
-    meta["snapshots"] = []
-    meta["current-snapshot-id"] = -1
-    meta.pop("refs", None)
-    meta["snapshot-log"] = []
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        meta["snapshots"] = []
+        meta["current-snapshot-id"] = -1
+        meta.pop("refs", None)
+        meta["snapshot-log"] = []
+
+    commit_metadata(root, _edit)
     with pytest.raises(im.IcebergMetadataError):
         im.resolve_snapshot(root)
 
@@ -209,16 +209,15 @@ def _make_table_legacy(root):
     streaming-query-id from every snapshot summary and remove the
     format-cutover property — what a table written entirely by the legacy
     sink looks like."""
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.streaming.iceberg_sink import _CUTOVER_PROP
 
-    meta = im.load_metadata(root)
-    for s in meta.get("snapshots", []):
-        (s.get("summary") or {}).pop("streaming-query-id", None)
-    (meta.get("properties") or {}).pop(_CUTOVER_PROP, None)
-    write_next_metadata_version(root, meta)
+    def _edit(meta):
+        for s in meta.get("snapshots", []):
+            (s.get("summary") or {}).pop("streaming-query-id", None)
+        (meta.get("properties") or {}).pop(_CUTOVER_PROP, None)
+
+    commit_metadata(root, _edit)
 
 
 def test_legacy_epoch_only_summary_dedups_genuine_replay(

@@ -270,9 +270,7 @@ def test_service_stats_refresh_unrunnable_reports_skip(spark, tmp_path):
     failing the whole maintenance pass."""
     from cloudfloe_spark.sources.maintenance import analyze_iceberg_table
 
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "svc_dropped")
     t = LocalIcebergTable(
@@ -287,12 +285,14 @@ def test_service_stats_refresh_unrunnable_reports_skip(spark, tmp_path):
     # simulate the analyzed column disappearing from the schema: point
     # the registered blob at a name (and field id) that no longer
     # resolves, then go stale
-    meta = im.load_metadata(root)
-    blob = meta["statistics"][-1]["blob-metadata"][0]
-    blob["properties"]["cloudfloe.column"] = "gone"
-    blob["fields"] = [9999]
-    meta["last-updated-ms"] = T1 + 1500
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        blob = meta["statistics"][-1]["blob-metadata"][0]
+        blob["properties"]["cloudfloe.column"] = "gone"
+        blob["fields"] = [9999]
+        meta["last-updated-ms"] = T1 + 1500
+
+    commit_metadata(root, _edit)
     delete_where(spark, root, "id = 2", timestamp_ms=T1 + 2000)
     rep = maintain_iceberg_table(spark, root, timestamp_ms=T1 + 4000)
     step = rep["analyze_iceberg_table"]
@@ -397,7 +397,7 @@ def test_incremental_analyze_appends_union_exactly(spark, tmp_path):
     )
     analyze_iceberg_table(spark, root, timestamp_ms=T1 + 1000)
     # append-only delta (delete_where-free path preserves statistics
-    # via write_next_metadata_version — use the commit helper)
+    # through the commit point — use the commit helper)
     from cloudfloe_spark.sources.iceberg_fixture import (
         commit_row_delta_snapshot,
     )

@@ -424,24 +424,24 @@ def test_v3_features_beyond_dvs_reject_400(spark, v3_table):
     before the ADD COLUMN read as the default — test_v3_default_values);
     a default the reader cannot materialize (non-primitive type) still
     rejects with a clear 400, never a silent wrong read."""
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root, _, _ = v3_table
-    meta = im.load_metadata(root)
-    schemas = meta.get("schemas") or [meta.get("schema")]
-    schemas[0]["fields"].append(
-        {
-            "id": 99,
-            "name": "flag",
-            "type": "binary",
-            "required": False,
-            "initial-default": "0xDEAD",
-        }
-    )
-    meta["schemas"] = schemas
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        schemas = meta.get("schemas") or [meta.get("schema")]
+        schemas[0]["fields"].append(
+            {
+                "id": 99,
+                "name": "flag",
+                "type": "binary",
+                "required": False,
+                "initial-default": "0xDEAD",
+            }
+        )
+        meta["schemas"] = schemas
+
+    commit_metadata(root, _edit)
     with pytest.raises(CloudfloeError) as ei:
         run_query(spark, f"SELECT * FROM iceberg_scan('{root}')", _cfg())
     assert ei.value.status_code == 400
@@ -449,16 +449,16 @@ def test_v3_features_beyond_dvs_reject_400(spark, v3_table):
 
 
 def test_format_version_4_rejects(spark, tmp_path):
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "v4")
     t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
     t.append_snapshot([pa.table({"id": [1]})], timestamp_ms=T1)
-    meta = im.load_metadata(root)
-    meta["format-version"] = 4
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        meta["format-version"] = 4
+
+    commit_metadata(root, _edit)
     with pytest.raises(CloudfloeError) as ei:
         run_query(spark, f"SELECT * FROM iceberg_scan('{root}')", _cfg())
     assert ei.value.status_code == 400 and "format-version 4" in str(ei.value)
@@ -665,9 +665,7 @@ def test_v3_streaming_upsert_commits_dvs(spark, tmp_path):
     parquet), and the (queryId, epochId) replay protection still holds."""
     import shutil
 
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
     from cloudfloe_spark.streaming.iceberg_sink import (
         upsert_stream_to_iceberg,
     )
@@ -679,9 +677,11 @@ def test_v3_streaming_upsert_commits_dvs(spark, tmp_path):
     t.append_snapshot(
         [pa.table({"id": [1, 2], "v": ["a", "b"]})], timestamp_ms=T1
     )
-    meta = im.load_metadata(root)
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
 
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
@@ -916,9 +916,7 @@ def test_foreign_v3_table_dv_commit_validates_then_stamps(spark, tmp_path):
     test_puffin_spec_vectors.py — then stamps the table. An unreadable
     foreign vector fails the commit with the blob named and leaves the
     table untouched; a stamped table skips the sweep."""
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "foreign")
     t = LocalIcebergTable(
@@ -939,10 +937,12 @@ def test_foreign_v3_table_dv_commit_validates_then_stamps(spark, tmp_path):
     assert meta["properties"]["cloudfloe.dv-writer"] == "cloudfloe-spark"
 
     def _strip_stamp():
-        m = im.load_metadata(root)
-        m["properties"].pop("cloudfloe.dv-writer", None)
-        m["last-updated-ms"] = T1 + 2000
-        write_next_metadata_version(root, m)
+
+        def _edit(m):
+            m["properties"].pop("cloudfloe.dv-writer", None)
+            m["last-updated-ms"] = T1 + 2000
+
+        commit_metadata(root, _edit)
 
     # direction 1: unstamped (foreign-looking) table with READABLE
     # vectors — the commit validates them, succeeds, and re-stamps

@@ -21,10 +21,8 @@ from cloudfloe_spark.service.config import ConnectionConfig
 from cloudfloe_spark.service.engine import run_query
 from cloudfloe_spark.service.errors import CloudfloeError
 from cloudfloe_spark.sources import iceberg_meta as im
-from cloudfloe_spark.sources.iceberg_fixture import (
-    LocalIcebergTable,
-    write_next_metadata_version,
-)
+from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+from cloudfloe_spark.sources.snapshots import commit_metadata
 
 T1 = 1700000000000
 
@@ -233,12 +231,14 @@ def test_ns_mixed_precision_file_rejects(spark, tmp_path):
         [pa.table({"id": [1], "ts": pa.array([1500], pa.timestamp("us"))})],
         timestamp_ms=T1,
     )
-    meta = im.load_metadata(root)
-    for f in meta["schemas"][-1]["fields"]:
-        if f["name"] == "ts":
-            f["type"] = "timestamp_ns"  # simulate the promotion
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for f in meta["schemas"][-1]["fields"]:
+            if f["name"] == "ts":
+                f["type"] = "timestamp_ns"  # simulate the promotion
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     with pytest.raises(CloudfloeError) as ei:
         _rows(spark, f"SELECT * FROM iceberg_scan('{root}')")
     assert ei.value.status_code == 400
@@ -252,21 +252,23 @@ def test_v3_unknown_type_reads_all_null(spark, tmp_path):
     root = str(tmp_path / "unk")
     t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
     t.append_snapshot([pa.table({"id": [1, 2]})], timestamp_ms=T1)
-    meta = im.load_metadata(root)
-    # the realistic unknown-column shape: ADDED by schema evolution (a
-    # new schema id), the way engines introduce a not-yet-typed column
-    import copy
 
-    sch2 = copy.deepcopy(meta["schemas"][-1])
-    sch2["schema-id"] = sch2.get("schema-id", 0) + 1
-    sch2["fields"].append(
-        {"id": 99, "name": "pending", "required": False,
-         "type": "unknown"}
-    )
-    meta["schemas"].append(sch2)
-    meta["current-schema-id"] = sch2["schema-id"]
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+    def _edit(meta):
+        # the realistic unknown-column shape: ADDED by schema evolution (a
+        # new schema id), the way engines introduce a not-yet-typed column
+        import copy
+
+        sch2 = copy.deepcopy(meta["schemas"][-1])
+        sch2["schema-id"] = sch2.get("schema-id", 0) + 1
+        sch2["fields"].append(
+            {"id": 99, "name": "pending", "required": False,
+             "type": "unknown"}
+        )
+        meta["schemas"].append(sch2)
+        meta["current-schema-id"] = sch2["schema-id"]
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     got = _rows(
         spark, f"SELECT id, pending FROM iceberg_scan('{root}') ORDER BY id"
     )
@@ -289,13 +291,15 @@ def test_v3_geometry_reads_raw_wkb(spark, tmp_path):
         [pa.table({"id": [1], "geo": pa.array([wkb], pa.binary())})],
         timestamp_ms=T1,
     )
-    meta = im.load_metadata(root)
-    for sch in meta["schemas"]:
-        for f in sch["fields"]:
-            if f["name"] == "geo":
-                f["type"] = "geometry(srid:4326)"
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        for sch in meta["schemas"]:
+            for f in sch["fields"]:
+                if f["name"] == "geo":
+                    f["type"] = "geometry(srid:4326)"
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
 
     sess = spark.newSession()
@@ -324,17 +328,19 @@ def test_ns_mixed_precision_rejects_under_rename_too(spark, tmp_path):
         [pa.table({"id": [1], "ts": pa.array([1500], pa.timestamp("us"))})],
         timestamp_ms=T1,
     )
-    meta = im.load_metadata(root)
-    sch2 = copy.deepcopy(meta["schemas"][-1])
-    sch2["schema-id"] = sch2.get("schema-id", 0) + 1
-    for f in sch2["fields"]:
-        if f["name"] == "ts":
-            f["name"] = "event_ts"          # rename
-            f["type"] = "timestamp_ns"       # + promotion
-    meta["schemas"].append(sch2)
-    meta["current-schema-id"] = sch2["schema-id"]
-    meta["format-version"] = 3
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        sch2 = copy.deepcopy(meta["schemas"][-1])
+        sch2["schema-id"] = sch2.get("schema-id", 0) + 1
+        for f in sch2["fields"]:
+            if f["name"] == "ts":
+                f["name"] = "event_ts"          # rename
+                f["type"] = "timestamp_ns"       # + promotion
+        meta["schemas"].append(sch2)
+        meta["current-schema-id"] = sch2["schema-id"]
+        meta["format-version"] = 3
+
+    commit_metadata(root, _edit)
     with pytest.raises(CloudfloeError) as ei:
         _rows(spark, f"SELECT * FROM iceberg_scan('{root}')")
     assert ei.value.status_code == 400

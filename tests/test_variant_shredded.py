@@ -382,9 +382,7 @@ def test_renamed_shredded_variant_column_reassembles(spark, tmp_path):
     bytes are never silently dropped; they are read)."""
     import copy
 
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        write_next_metadata_version,
-    )
+    from cloudfloe_spark.sources.snapshots import commit_metadata
 
     root = str(tmp_path / "ren2")
     shred = {
@@ -395,15 +393,17 @@ def test_renamed_shredded_variant_column_reassembles(spark, tmp_path):
     t1 = pa.table({"id": pa.array([1, 2], pa.int64()), "v": col})
     t = LocalIcebergTable(root, t1.schema, variant_cols=("v",))
     t.append_snapshot([t1], timestamp_ms=T1)
-    meta = im.load_metadata(root)
-    sch2 = copy.deepcopy(meta["schemas"][-1])
-    sch2["schema-id"] = sch2.get("schema-id", 0) + 1
-    for f in sch2["fields"]:
-        if f["name"] == "v":
-            f["name"] = "payload"
-    meta["schemas"].append(sch2)
-    meta["current-schema-id"] = sch2["schema-id"]
-    write_next_metadata_version(root, meta)
+
+    def _edit(meta):
+        sch2 = copy.deepcopy(meta["schemas"][-1])
+        sch2["schema-id"] = sch2.get("schema-id", 0) + 1
+        for f in sch2["fields"]:
+            if f["name"] == "v":
+                f["name"] = "payload"
+        meta["schemas"].append(sch2)
+        meta["current-schema-id"] = sch2["schema-id"]
+
+    commit_metadata(root, _edit)
     got = _rows(
         spark,
         f"SELECT id, payload FROM iceberg_scan('{root}') ORDER BY id",
