@@ -1069,13 +1069,9 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
                     d = _dvc(d, plain_vc)
             parts.append(_aligned(d))
         if added_shred:
-            from cloudfloe_spark.sources.maintenance import (
+            from cloudfloe_spark.sources.row_delta import (
                 _FP as _CFP,
-            )
-            from cloudfloe_spark.sources.maintenance import (
                 _POS as _CPOS,
-            )
-            from cloudfloe_spark.sources.maintenance import (
                 _shred_group_scan,
             )
 
@@ -1296,13 +1292,9 @@ def _cdc_frame(
         # ONE shared helper over _shred_group_scan, so shredded ranges
         # changelog like plain ones (the carried/removed refusals are
         # gone).
-        from cloudfloe_spark.sources.maintenance import (
+        from cloudfloe_spark.sources.row_delta import (
             _FP as _SFP,
-        )
-        from cloudfloe_spark.sources.maintenance import (
             _POS as _SPOS,
-        )
-        from cloudfloe_spark.sources.maintenance import (
             _shred_group_scan,
         )
 
@@ -1620,7 +1612,7 @@ def _cdc_frame(
             )
 
     if want_rid:
-        from cloudfloe_spark.sources.maintenance import (
+        from cloudfloe_spark.sources.row_delta import (
             _FP,
             _POS,
             _mor_raw_scan,
@@ -1943,7 +1935,7 @@ def _cow_commit_frame(
     """
     from pyspark.sql import functions as F
 
-    from cloudfloe_spark.sources.maintenance import _FP, _POS, _mor_raw_scan
+    from cloudfloe_spark.sources.row_delta import _FP, _POS, _mor_raw_scan
 
     seq_prev = s_prev.get("sequence-number", 0)
     removed = sorted(set(live_prev) - set(live_cur))

@@ -1,0 +1,963 @@
+"""One row-level write path for local Iceberg tables: pin, scan, encode,
+commit.
+
+Every row-level change — DELETE, UPDATE and MERGE in merge-on-read and
+copy-on-write mode, changelog apply and equality-delete erasure — takes
+the same steps, and they live here:
+
+- :func:`pin` resolves what the op reads: the metadata version, the
+  snapshot (a branch head for ``ref=``), the format version, the
+  row-lineage flag, the live data files and the ones its condition can
+  touch;
+- :func:`scan` reads those files with the snapshot's deletes applied, on
+  the engine surface the condition is written against (mixed variant
+  layouts included);
+- :func:`apply` encodes the matched ``(file_path, pos)`` coordinates —
+  deletion vectors on v3, sorted position-delete files below — and
+  commits them in one snapshot with the op's new and removed data files;
+- :func:`commit` picks the fixture commit function and runs the retry
+  loop under the op's isolation.
+
+The DML functions in ``maintenance`` keep only their own matching and
+row logic. This module is the write-side twin of
+:mod:`~cloudfloe_spark.sources.deletes` and imports nothing from
+``maintenance``; the other maintenance ops import the retry loop from
+here. Fixture commit functions are looked up on ``iceberg_fixture`` at
+call time, never bound at import, so tests and the benchmark's tracer can
+wrap them.
+"""
+
+from __future__ import annotations
+
+import glob as globmod
+import os
+import uuid as _uuid
+from dataclasses import dataclass, field
+from typing import NamedTuple
+
+from pyspark.sql import SparkSession
+
+from cloudfloe_spark.sources.deletes import RowDeletes
+
+#: the v3 row-lineage columns a rewrite reads back and materializes
+_SEQ = "_last_updated_sequence_number"
+LINEAGE_COLS = ("_row_id", _SEQ)
+
+
+# --- optimistic commit-conflict retry ---------------------------------------
+#
+# Every write op used to pin the metadata version it read and ABORT with
+# CommitConflictError when any commit landed in between — correct but
+# unusable next to a live writer (a scheduled `maintain_iceberg_table`
+# that dies whenever an ingest stream wins the race is not a service).
+# Real Iceberg retries optimistically: re-resolve the current metadata,
+# RE-VALIDATE the op's assumptions against it, and re-commit; only when
+# validation fails does the op re-run its scan from the new snapshot.
+# Semantics implemented here (mirroring Iceberg's SnapshotProducer
+# validations):
+#
+# - append-shaped commits (equality deletes, pure inserts) always rebase;
+# - condition-based DML (delete_where / update_where / merge_into) is
+#   SERIALIZABLE: it rebases only when no new DATA or DELETE file landed
+#   since its read — otherwise the scan re-runs, so rows appended
+#   concurrently are still seen by the condition (Iceberg's default
+#   isolation for row-level ops);
+# - changelog applies (replication) use SNAPSHOT isolation: concurrent
+#   appends coexist, but the scanned files must still be live and no new
+#   delete file may have landed (a lost-delete hazard otherwise), and
+#   an apply whose ``changelog_id`` landed meanwhile never rebases;
+# - compaction rebases only when the live set is untouched; bin-pack only
+#   when its rewritten files are still live — a conflicting commit means
+#   the (cheap, idempotent) op simply re-runs.
+#
+# Bounded: COMMIT_RETRIES CAS re-points per commit, OP_RERUNS full scan
+# re-runs per op, then a clear CommitConflictError. Data/delete files
+# written by an abandoned attempt are uncommitted — remove_orphan_files
+# sweeps them on the normal schedule.
+
+COMMIT_RETRIES = 3
+OP_RERUNS = 2
+
+
+class _ScanInvalidated(Exception):
+    """A conflicting commit invalidated this op's scan — re-point is not
+    enough, the whole op must re-run against the new current snapshot."""
+
+
+def _rebase_ok(
+    root: str,
+    *,
+    scanned_paths,
+    pinned_snap: dict,
+    ref: "str | None" = None,
+    require_same_live: bool = False,
+    forbid_new_data: bool = False,
+    forbid_new_deletes: bool = True,
+) -> bool:
+    """Can this op's already-computed delta re-commit against the NEW
+    current (or branch-head) snapshot? Checks, per the policy above:
+    every scanned/rewritten file still live; optionally the live set
+    unchanged (full-table rewrite); optionally no new data files
+    (serializable DML) and no new delete files (both position and
+    equality — a delete landing between read and commit would be
+    invisible to rows this op rewrote). Metadata-only driver work."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    meta_path = im.latest_metadata_path(root)
+    try:
+        snap = (
+            _branch_head(root, meta_path, ref, "rebase")
+            if ref is not None
+            else im.resolve_snapshot(root, metadata_path=meta_path)
+        )
+    except (ValueError, im.IcebergMetadataError):
+        return False
+    live = set(im.live_data_paths(root, snap))
+    scanned = set(scanned_paths)
+    if not scanned <= live:
+        return False
+    if require_same_live and live != scanned:
+        return False
+    if forbid_new_data or forbid_new_deletes:
+        pinned_seq = int(pinned_snap.get("sequence-number") or 0)
+        for e in im.manifest_entries(root, snap):
+            if e.get("status", 0) == 2:
+                continue
+            if int(e.get("sequence_number") or 0) <= pinned_seq:
+                continue
+            content = (e.get("data_file") or {}).get("content", 0)
+            if content != 0 and forbid_new_deletes:
+                return False
+            if content == 0 and forbid_new_data:
+                return False
+    return True
+
+
+def _commit_with_rebase(root: str, op: str, do_commit, meta_path, validate):
+    """CAS loop: run ``do_commit(meta_path)``; on CommitConflictError
+    re-validate via ``validate()`` and retry against the new latest
+    metadata. Raises :class:`_ScanInvalidated` when validation fails (the
+    caller's @_reruns_on_conflict wrapper re-runs the whole op) and a
+    clear CommitConflictError after COMMIT_RETRIES exhausted."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+    from cloudfloe_spark.sources.iceberg_fixture import CommitConflictError
+
+    for attempt in range(COMMIT_RETRIES + 1):
+        try:
+            return do_commit(meta_path)
+        except CommitConflictError:
+            if attempt == COMMIT_RETRIES:
+                raise CommitConflictError(
+                    f"{op}: still conflicting after {COMMIT_RETRIES} "
+                    "rebase attempts; giving up"
+                ) from None
+            if not validate():
+                raise _ScanInvalidated(op) from None
+            meta_path = im.latest_metadata_path(root)
+
+
+def _reruns_on_conflict(op_name: str):
+    """Decorator: re-run the whole op (fresh metadata read, fresh scan)
+    when a conflicting commit invalidated its scan, up to OP_RERUNS times.
+    The decorated op must be re-entrant — every covered op re-resolves
+    the current snapshot at its top, so a re-run IS the rebase."""
+    import functools
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def wrapper(*args, **kwargs):
+            for i in range(OP_RERUNS + 1):
+                try:
+                    return fn(*args, **kwargs)
+                except _ScanInvalidated:
+                    if i == OP_RERUNS:
+                        from cloudfloe_spark.sources.iceberg_fixture import (
+                            CommitConflictError,
+                        )
+
+                        raise CommitConflictError(
+                            f"{op_name}: concurrent commits invalidated "
+                            f"the scan {OP_RERUNS + 1} times; giving up"
+                        ) from None
+
+        return wrapper
+
+    return deco
+
+
+# --- pin: what a row-level op reads ----------------------------------------
+
+
+@dataclass
+class Pin:
+    """The table state a row-level op reads and commits against.
+    ``paths`` starts as every live data file and narrows to the files the
+    op's condition can touch; the serializable rebase check requires
+    exactly these to stay live. ``variant_cols`` / ``ns_cols`` /
+    ``shred`` are the v3 columns and shredded file groups of ``paths``
+    (:func:`_dml_v3_cols`)."""
+
+    root: str
+    op: str
+    meta_path: str
+    snap: "dict | None" = None
+    ref: "str | None" = None
+    fv: int = 1
+    lineage: bool = False
+    live: list = field(default_factory=list)
+    paths: list = field(default_factory=list)
+    variant_cols: list = field(default_factory=list)
+    ns_cols: list = field(default_factory=list)
+    shred: list = field(default_factory=list)
+
+    def narrow(self, condition: str) -> None:
+        """Keep only the files a DML ``condition`` can match: wrapped in a
+        SELECT, it goes through the conjunct extractor the read path
+        uses, so both pruning levels apply (partition transforms and file
+        statistics). DELETE WHERE day = X then scans one partition's
+        files, not the table. Sound by omission: an unrecognized
+        condition prunes nothing."""
+        from cloudfloe_spark.sources import iceberg_meta as im
+        from cloudfloe_spark.sources import partition_pruning as pp
+
+        root, meta_path, snap = self.root, self.meta_path, self.snap
+        conj = pp.extract_scan_conjuncts(
+            f"SELECT * FROM __dml__ WHERE {condition}", {"__dml__"}
+        ).get("__dml__")
+        if not conj:
+            return
+        try:
+            hist = im.schema_name_history(root, meta_path)
+        except im.IcebergMetadataError:
+            hist = None  # ambiguous history: prune nothing (sound)
+        if hist is None:
+            return
+        paths = self.paths
+        specs_by_id = im.partition_specs_by_id(root, meta_path)
+        if any(specs_by_id.values()):
+            pv = im.live_data_partitions(root, snap)
+            file_specs = im.live_data_spec_ids(root, snap)
+            fields_for = pp.spec_resolver(specs_by_id, file_specs)
+            paths = [
+                p for p in paths
+                if (fs := fields_for(p)) is None
+                or pp.file_survives(fs, pv.get(p), conj, hist)
+            ]
+        if paths:
+            stats = im.live_data_stats(root, snap)
+            col_types = im.schema_column_types(root, meta_path)
+            paths = [
+                p
+                for p in paths
+                if pp.file_survives_stats(stats.get(p), conj, col_types, hist)
+            ]
+        self.paths = paths
+
+    def table_columns(self, df) -> list:
+        """The table's own columns of a :func:`scan` frame: no
+        coordinates, physical copies or lineage read-backs."""
+        return [
+            c
+            for c in df.columns
+            if c not in (_FP, _POS)
+            and not c.startswith(_PHYS)
+            and not (self.lineage and c in LINEAGE_COLS)
+        ]
+
+
+def _branch_head(root: str, meta_path, ref: str, op: str) -> dict:
+    """The head snapshot of BRANCH ``ref`` — the target of a branch DML
+    (write-audit-publish on row-level changes: stage the DML on a branch,
+    audit through ``VERSION AS OF '<ref>'``, fast-forward publish)."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    meta = im.load_metadata(root, meta_path)
+    r = (meta.get("refs") or {}).get(ref)
+    if not isinstance(r, dict):
+        raise ValueError(
+            f"{op}: unknown ref {ref!r} "
+            f"(known: {sorted(meta.get('refs') or {})})"
+        )
+    if r.get("type") == "tag":
+        raise ValueError(
+            f"{op}: ref {ref!r} is a tag — tags are immutable; create a "
+            "branch to write to"
+        )
+    return im.resolve_snapshot(
+        root, version=int(r["snapshot-id"]), metadata_path=meta_path
+    )
+
+
+def pin(
+    root: str,
+    op: str,
+    *,
+    ref: "str | None" = None,
+    condition: "str | None" = None,
+    metadata_path=None,
+    snapshot: "dict | None" = None,
+    paths: "list | None" = None,
+) -> Pin:
+    """Pin ``op``'s read: the latest metadata version (or
+    ``metadata_path``), its current snapshot (the head of branch ``ref``,
+    or ``snapshot``), and the live data files (or ``paths``) narrowed by
+    ``condition``. Metadata-only driver work."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    meta_path = metadata_path or im.latest_metadata_path(root)
+    meta = im.load_metadata(root, meta_path)
+    if snapshot is not None:
+        snap = snapshot
+    elif ref is not None:
+        snap = _branch_head(root, meta_path, ref, op)
+    else:
+        snap = im.resolve_snapshot(root, metadata_path=meta_path)
+    live = im.live_data_paths(root, snap) if paths is None else list(paths)
+    p = Pin(
+        root, op, meta_path, snap, ref,
+        fv=int(meta.get("format-version") or 1),
+        lineage=meta.get("next-row-id") is not None,
+        live=live, paths=live,
+    )
+    if condition is not None:
+        p.narrow(condition)
+    p.variant_cols, p.ns_cols, p.shred = _dml_v3_cols(
+        root, meta_path, p.paths, op, allow_shredded=True
+    )
+    return p
+
+
+# --- scan: the matched rows on the engine surface ---------------------------
+
+#: coordinate columns `_mor_raw_scan` materializes for DML passes —
+#: the file path + row position every position delete names.
+_FP, _POS = "__cf_fp", "__cf_pos"
+
+
+def _mor_raw_scan(
+    spark: SparkSession,
+    root: str,
+    snap: dict,
+    paths: list,
+    *,
+    metadata_path=None,
+    extra_footer_cols: "list[str] | None" = None,
+    variant_as: "str | None" = None,
+    ns_as: "str | None" = None,
+):
+    """Per-file scan for DML with the snapshot's row-level deletes applied
+    — without this, a DML pass over a table that already carries delete
+    files would match rows that are logically gone and (for update/merge)
+    RESURRECT them as new copies.
+
+    Returns the table under its CURRENT column names plus two coordinate
+    columns ``__cf_fp`` / ``__cf_pos`` (from ``_metadata``, materialized
+    per file group BEFORE any union — the pseudo-column does not survive
+    a union of separate scans). Renamed tables are handled exactly as the
+    read path does: files grouped by the rename map their footer needs via
+    ``scan_groups`` field-id resolution, deletes applied by one
+    :class:`~cloudfloe_spark.sources.deletes.RowDeletes` against on-disk
+    names, then renamed — so a condition on current names matches rows in
+    pre-rename files too.
+
+    Live EQUALITY deletes are applied with the read path's full
+    sequence-aware machinery (r8, VERDICT r07 #5 — previously refused for
+    update/merge): a metadata-only erasure (``delete_by_key``) no longer
+    forces a compaction before the next update/merge. The rows an update
+    rewrites land in NEW data files at the commit's higher sequence
+    number, so the strictly-lower rule keeps them alive. Only equality
+    deletes whose field ids don't resolve still refuse (applying around
+    them would silently resurrect erased rows)."""
+    from pyspark.sql import functions as F
+
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    deletes = RowDeletes(spark, root, snap, metadata_path, paths)
+    groups = im.scan_groups(
+        root, paths, metadata_path, variant_as=variant_as, ns_as=ns_as
+    )
+    parts = []
+    for gpaths, renames, read_ddl, default_fills in groups:
+        reader = spark.read
+        if read_ddl is not None:
+            # extra_footer_cols (r11, row lineage): physical columns
+            # outside the table schema (the materialized ``_row_id`` of
+            # compacted files) — appended to the explicit DDL so files
+            # carrying them surface the values and files without read
+            # NULL (the caller coalesces with first_row_id + position)
+            for c in extra_footer_cols or []:
+                read_ddl = f"{read_ddl}, `{c}` BIGINT"
+            reader = reader.schema(read_ddl)
+        gdf = reader.parquet(*gpaths)
+        # v3 initial-default: a DML pass must see (and REWRITE) the value
+        # the rows logically carry, not NULL — otherwise an update/merge
+        # would materialize NULL into the new data files
+        for _fc, (_fv, _ft) in (default_fills or {}).items():
+            gdf = gdf.withColumn(_fc, F.lit(_fv).cast(_ft))
+        gdf = deletes.apply(gdf, gpaths, renames)
+        gdf = gdf.select(
+            F.col("_metadata.file_path").alias(_FP),
+            F.col("_metadata.row_index").alias(_POS),
+            "*",
+        )
+        if renames:
+            gdf = gdf.withColumnsRenamed(renames)
+        parts.append(gdf)
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+#: prefix for the preserved PHYSICAL form of a v3 variant / ns column on
+#: a DML scan — untouched rows pass these bytes through verbatim
+_PHYS = "__cf_phys_"
+
+
+def _dml_v3_cols(
+    root, meta_path, paths: list, op: str, *, allow_shredded: bool = False
+) -> "tuple[list[str], list[str], list]":
+    """v3 variant / ns-timestamp column resolution + guards for a DML
+    pass (r13, VERDICT r12 #1/#5): returns ``(variant_cols, ns_cols,
+    shred_groups)`` of the CURRENT schema so the caller can scan the
+    physical layouts (``variant_as="physical"``, ``ns_as="physical"``)
+    and decorate the engine surface for predicate evaluation.
+
+    SHREDDED variant files (r14, VERDICT r13 #1): consumers that
+    declared ``allow_shredded`` receive the shred groups — ``[(paths,
+    descriptors)]`` exactly as the read path resolves them — and route
+    those files through :func:`_dml_raw_scan`; a consumer that did not
+    declare a shredded read surface refuses precisely (normalize with
+    ``compact_iceberg_table`` first). Shredded files on a table with
+    column renames or v3 defaults work (r15, VERDICT r14 #1):
+    :func:`_shred_group_scan` resolves each group's on-disk names and
+    default fills itself. Files at the wrong ns physical precision
+    refuse exactly like the read path."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    meta = im.load_metadata(root, meta_path)
+    variant_cols = im.variant_columns(meta)
+    ns_cols = im.ns_timestamp_columns(meta)
+    if not variant_cols and not ns_cols:
+        return [], [], []
+    hist = im.schema_name_history(root, meta_path)
+    shred: list = []
+    if variant_cols and paths:
+        _plain, shred3, verr = im.variant_shred_groups(
+            paths, variant_cols, name_history=hist,
+            resolve_renames=True,
+        )
+        if verr:
+            raise ValueError(
+                f"{op}: variant read failed: "
+                + "; ".join(sorted(set(verr)))
+            )
+        if shred3 and not allow_shredded:
+            raise ValueError(
+                f"{op}: the table carries SHREDDED variant files — "
+                "this consumer did not declare a shredded read surface; "
+                "compact_iceberg_table normalizes the layout to the "
+                "unshredded form first"
+            )
+        # r15 (VERDICT r14 #1): renames/defaults over shredded files no
+        # longer refuse — _shred_group_scan resolves each group's
+        # on-disk names and default fills itself, so consumers keep the
+        # (paths, descs) shape
+        shred = [(sp, d) for sp, d, _ in shred3]
+    if ns_cols and paths:
+        nerr = im.ns_precision_errors(paths, ns_cols, name_history=hist)
+        if nerr:
+            raise ValueError(
+                f"{op}: timestamp_ns read failed: "
+                + "; ".join(sorted(set(nerr)))
+            )
+    return variant_cols, ns_cols, shred
+
+
+def _shred_group_scan(
+    spark, root, snap, meta_path, spaths: list, descs: dict, *,
+    physical: bool, variant_cols: list, extra_footer_cols=None,
+    hist=None, fills=None, apply_deletes=True,
+):
+    """One SHREDDED file group → a MOR-applied DataFrame aligned to the
+    unshredded DML scan: ``__cf_fp``/``__cf_pos`` coordinates + the
+    table's columns, variant columns either decoded straight to the
+    canonical-JSON surface (``physical=False`` — the MOR DELETE path,
+    ONE decode, no re-encode anywhere) or normalized to the UNSHREDDED
+    physical struct (``physical=True`` — the rewrite paths, the same
+    value-tree re-encode the normalization compaction applies, so the
+    standard passthrough/assign machinery works unchanged downstream).
+    ns columns stay raw BIGINT longs, like the plain physical scan.
+
+    ``apply_deletes=False`` (r15 late, the CDC carried-base consumer):
+    skip the MOR apply entirely — the changelog's retraction base must
+    see the RAW rows, because the in-range deletes are exactly what
+    defines the dead set it then emits."""
+    from pyspark.sql import functions as F
+
+    from cloudfloe_spark.functions.variant import (
+        decode_shredded_variant_columns,
+        decode_variant_columns,
+        shredded_to_unshredded_columns,
+    )
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    g = spark.read.parquet(*spaths)
+    # renames + v3 defaults over shredded groups (r15, VERDICT r14 #1):
+    # the group's files share one footer schema, so the on-disk→current
+    # map is uniform; default fills apply BEFORE deletes (equality
+    # deletes on a defaulted column compare the logical value), the
+    # rename after them — the plain-group order exactly. Callers
+    # looping over groups pass hist/fills once instead of paying a
+    # metadata reload per group.
+    if hist is None:
+        hist = im.schema_name_history(root, meta_path)
+    rmap = {
+        n: hist[n] for n in g.columns if n in hist and hist[n] != n
+    }
+    if fills is None:
+        fills = im.schema_default_fills(
+            im.load_metadata(root, meta_path)
+        )
+    present_cur = {rmap.get(c, c) for c in g.columns}
+    for _fc, (_fv, _ft) in fills.items():
+        if _fc not in present_cur:
+            g = g.withColumn(_fc, F.lit(_fv).cast(_ft))
+    if apply_deletes:
+        g = RowDeletes(spark, root, snap, meta_path, spaths).apply(
+            g, spaths, rmap
+        )
+    present_extra = [
+        c for c in (extra_footer_cols or []) if c in g.columns
+    ]
+    g = g.select(
+        F.col("_metadata.file_path").alias(_FP),
+        F.col("_metadata.row_index").alias(_POS),
+        "*",
+    )
+    if rmap:
+        g = g.withColumnsRenamed(rmap)
+    if physical:
+        g = shredded_to_unshredded_columns(g, descs)
+    else:
+        g = decode_shredded_variant_columns(g, descs)
+    plain_vc = [
+        c for c in variant_cols if c in g.columns and c not in descs
+    ]
+    if plain_vc and not physical:
+        g = decode_variant_columns(g, plain_vc)
+    read_pairs = im.schema_read_pairs(
+        root, meta_path,
+        variant_as="physical" if physical else "string",
+        ns_as="physical",
+    )
+    aligned = [F.col(_FP), F.col(_POS)]
+    for cn, ct in read_pairs:
+        if cn not in g.columns:
+            aligned.append(F.lit(None).cast(ct).alias(cn))
+        else:
+            aligned.append(F.col(cn).cast(ct).alias(cn))
+    for c in extra_footer_cols or []:
+        aligned.append(
+            F.col(c)
+            if c in present_extra
+            else F.lit(None).cast("bigint").alias(c)
+        )
+    return g.select(*aligned)
+
+
+def _decorate_dml_surface(
+    df, variant_cols: list, ns_cols: list, *, keep_physical: bool
+):
+    """Physical scan → the engine's query surface for DML predicate and
+    assignment evaluation: variant structs decode to canonical-JSON
+    STRINGs, ns longs truncate to µs TIMESTAMPs — exactly what the
+    batch scan exposes, so a DELETE predicate means the same thing in
+    both places. With ``keep_physical`` the physical forms stay aboard
+    as ``__cf_phys_<col>`` so rewrites pass untouched rows through
+    byte-verbatim (Catalyst prunes the decode UDF when the predicate
+    never references the column)."""
+    from pyspark.sql import functions as F
+
+    if keep_physical:
+        for c in list(variant_cols) + list(ns_cols):
+            if c in df.columns:
+                df = df.withColumn(_PHYS + c, F.col(c))
+    present_v = [c for c in variant_cols if c in df.columns]
+    if present_v:
+        from cloudfloe_spark.functions.variant import (
+            decode_variant_columns,
+        )
+
+        df = decode_variant_columns(df, present_v)
+    for c in ns_cols:
+        if c in df.columns:
+            df = df.withColumn(
+                c, F.expr(f"timestamp_micros(`{c}` div 1000)")
+            )
+    return df
+
+
+def physical_form(c: str, col, variant_cols, ns_cols):
+    """The inverse of the scan surface for a value written to column
+    ``c``: variant JSON text re-encodes to spec binary
+    (``json_variant_encode_udf``), µs timestamps become ns longs at
+    µs·1000 (the finest precision a Spark expression carries). Other
+    columns pass as given."""
+    from pyspark.sql import functions as F
+
+    if c in variant_cols:
+        from cloudfloe_spark.functions.variant import json_variant_encode_udf
+
+        return json_variant_encode_udf()(col.cast("string"))
+    if c in ns_cols:
+        return F.unix_micros(col.cast("timestamp")) * F.lit(1000).cast("bigint")
+    return col
+
+
+def scan(
+    spark, pin: Pin, paths: "list | None" = None, *,
+    extra_footer_cols=None, form: str = "rewrite",
+):
+    """The MOR-applied DML scan of ``paths`` (default: ``pin.paths``) —
+    ``__cf_fp``/``__cf_pos`` coordinates plus the table's columns under
+    CURRENT names — across MIXED variant layouts: plain files ride
+    :func:`_mor_raw_scan`, each shredded group :func:`_shred_group_scan`.
+    ``form`` picks what the columns carry:
+
+    - ``"rewrite"`` (update/merge/copy-on-write): the engine surface for
+      conditions and assignments, plus each v3 column's physical form as
+      ``__cf_phys_<col>`` so untouched rows pass through verbatim;
+      shredded groups normalize to the unshredded physical struct
+      in-flight (one decode→re-encode per scanned row of the shredded
+      files — bounded by the pruned candidate set, never the table);
+    - ``"match"`` (a MOR DELETE, the lineage read): the surface only —
+      shredded groups decode straight to canonical JSON, one decode and
+      zero re-encode, so a one-row delete on a shredded table never
+      rewrites its layout;
+    - ``"physical"`` (bin-pack, the lineage compaction): the physical
+      columns only, for a verbatim rewrite."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    paths = pin.paths if paths is None else paths
+    keep = set(paths)
+    shred = [
+        (sp, d)
+        for sp, d in (([p for p in sp if p in keep], d) for sp, d in pin.shred)
+        if sp
+    ]
+    shred_paths = {p for sp, _ in shred for p in sp}
+    plain = [p for p in paths if p not in shred_paths]
+    root, snap, meta_path = pin.root, pin.snap, pin.meta_path
+    variant_cols, ns_cols = pin.variant_cols, pin.ns_cols
+    rewrite = form == "rewrite"
+
+    def surface(df, decode_variant: bool):
+        if form == "physical":
+            return df
+        return _decorate_dml_surface(
+            df, variant_cols if decode_variant else [], ns_cols,
+            keep_physical=rewrite,
+        )
+
+    parts = []
+    if plain:
+        parts.append(surface(
+            _mor_raw_scan(
+                spark, root, snap, plain, metadata_path=meta_path,
+                extra_footer_cols=extra_footer_cols,
+                variant_as="physical" if variant_cols else None,
+                ns_as="physical" if ns_cols else None,
+            ),
+            True,
+        ))
+    if shred:
+        hist = im.schema_name_history(root, meta_path)
+        fills = im.schema_default_fills(im.load_metadata(root, meta_path))
+    for spaths, descs in shred:
+        g = _shred_group_scan(
+            spark, root, snap, meta_path, spaths, descs,
+            physical=form != "match", variant_cols=variant_cols,
+            extra_footer_cols=extra_footer_cols, hist=hist, fills=fills,
+        )
+        parts.append(surface(g, form != "match"))
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+# --- encode: matched coordinates → delete files ----------------------------
+
+
+def _collect_deletion_vectors(spark, matches) -> "dict[str, list[int]]":
+    """Per-file deletion vectors from a DML match set, built DISTRIBUTED
+    (r10, v3 write path): executors serialize each affected file's
+    positions into a roaring bitmap (``applyInPandas``, one group per
+    file), and the driver collects only the compressed BLOBS — bounded by
+    ~2 bytes/position before run compression, never raw position rows —
+    then decodes them into the commit's position lists. ``matches`` must
+    have columns ``file_path`` (the scan's ``_metadata.file_path``) and
+    ``pos``."""
+    from cloudfloe_spark.sources import puffin
+
+    def encode(pdf):
+        # SELF-CONTAINED closure (stdlib + pandas only): Arrow UDF
+        # workers do not resolve repo modules when the driver runs from
+        # another cwd (the addPyFile zip covers RDD workers, not these),
+        # so the portable-roaring WRITE side is inlined — byte-compatible
+        # with sources/puffin.serialize_positions, which the driver
+        # decodes with (and tests pin the round-trip).
+        import struct
+
+        import pandas as pd
+
+        def rb32(values):  # sorted u32 → 32-bit roaring (no-run cookie)
+            containers = {}
+            for v in values:
+                containers.setdefault(v >> 16, []).append(v & 0xFFFF)
+            keys = sorted(containers)
+            out = bytearray(struct.pack("<ii", 12346, len(keys)))
+            for k in keys:
+                out += struct.pack("<HH", k, len(containers[k]) - 1)
+            off = len(out) + 4 * len(keys)
+            body = bytearray()
+            offsets = bytearray()
+            for k in keys:
+                vals = containers[k]
+                offsets += struct.pack("<I", off + len(body))
+                if len(vals) <= 4096:
+                    body += struct.pack(f"<{len(vals)}H", *vals)
+                else:
+                    bits = bytearray(8192)
+                    for v in vals:
+                        bits[v >> 3] |= 1 << (v & 7)
+                    body += bits
+            return bytes(out + offsets + body)
+
+        positions = sorted({int(p) for p in pdf["pos"]})
+        buckets = {}
+        for p in positions:
+            buckets.setdefault(p >> 32, []).append(p & 0xFFFFFFFF)
+        blob = bytearray(struct.pack("<Q", len(buckets)))
+        for hi in sorted(buckets):
+            blob += struct.pack("<I", hi) + rb32(buckets[hi])
+        return pd.DataFrame(
+            {
+                "file_path": [pdf["file_path"].iloc[0]],
+                "blob": [bytes(blob)],
+            }
+        )
+
+    rows = (
+        matches.groupBy("file_path")
+        .applyInPandas(encode, schema="file_path string, blob binary")
+        .collect()
+    )
+    return {
+        r["file_path"]: puffin.deserialize_positions(bytes(r["blob"]))
+        for r in rows
+    }
+
+
+def parquet_files(out_dir: str) -> "list[tuple[str, int]]":
+    """``(path, record count)`` of every non-empty parquet file a Spark
+    write left in ``out_dir`` — the commit-ready listing, read from the
+    footers only."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(globmod.glob(os.path.join(out_dir, "*.parquet"))):
+        cnt = pq.ParquetFile(f).metadata.num_rows
+        if cnt:
+            out.append((f, cnt))
+    return out
+
+
+def write_position_deletes(
+    coords, n: int, root: str, prefix: str, timestamp_ms: int,
+    rows_per_file: int,
+) -> "list[tuple[str, int]]":
+    """Write ``n`` ``(file_path, pos)`` coordinates as sorted
+    position-delete parquet files under ``data/<prefix>-…`` —
+    ``repartitionByRange`` + ``sortWithinPartitions`` keep every delete
+    file sorted as the spec requires while the write stays distributed
+    (one shuffle sized by the match count, never by table size; files
+    sized by ``rows_per_file``)."""
+    from pyspark.sql import functions as F
+
+    out_dir = os.path.join(
+        root, "data", f"{prefix}-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
+    )
+    (
+        coords.repartitionByRange(
+            max(1, -(-n // rows_per_file)), F.col("file_path"), F.col("pos")
+        )
+        .sortWithinPartitions("file_path", "pos")
+        .write.mode("errorifexists")
+        .parquet(out_dir)
+    )
+    return parquet_files(out_dir)
+
+
+# --- commit: one snapshot under the op's isolation --------------------------
+
+#: condition DML: rebase only when nothing new landed since the read
+SERIALIZABLE = "serializable"
+#: changelog apply: concurrent appends coexist; retractions must stay valid
+SNAPSHOT = "snapshot"
+#: equality deletes: no scan to invalidate, always rebase
+APPEND = "append"
+
+
+def applied_changelog_ids(root: str, meta_path=None) -> set:
+    """The ``changelog-id`` of every snapshot in the table's metadata
+    (the latest version, or ``meta_path``)."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    return {
+        (s.get("summary") or {}).get("changelog-id")
+        for s in im.load_metadata(root, meta_path).get("snapshots", [])
+    }
+
+
+def commit(
+    pin: Pin,
+    *,
+    timestamp_ms: int,
+    isolation: str = SERIALIZABLE,
+    new_files=(),
+    removed=(),
+    delete_files=(),
+    equality_delete_files=(),
+    dvs: "dict | None" = None,
+    summary_extra: "dict | None" = None,
+    changelog_id: "str | None" = None,
+) -> int:
+    """Commit one row delta on ``pin``'s snapshot (the branch head for a
+    branch op) and return the new snapshot id. Deletion vectors commit
+    through ``commit_deletion_vector_snapshot``; a merge-on-read DELETE's
+    position-delete files through ``commit_delete_snapshot``; everything
+    else through ``commit_row_delta_snapshot``.
+
+    A conflicting commit rebases when ``isolation`` allows it (see the
+    retry policy above) and re-runs the op otherwise. ``changelog_id`` is
+    recorded in the summary, and the rebase refuses once a snapshot
+    carries it: the re-run then finds the id and skips, instead of
+    applying the same changelog twice."""
+    from cloudfloe_spark.sources import iceberg_fixture as fx
+
+    root = pin.root
+    if changelog_id is not None:
+        summary_extra = {**(summary_extra or {}), "changelog-id": changelog_id}
+    if dvs:
+        name, args = "commit_deletion_vector_snapshot", (root, dvs)
+        kw = dict(new_data_files=new_files, summary_extra=summary_extra)
+    elif pin.op == "delete_where" and not new_files and not removed:
+        name, args, kw = "commit_delete_snapshot", (root, delete_files), {}
+    else:
+        name, args = "commit_row_delta_snapshot", (root,)
+        kw = dict(
+            new_data_files=new_files,
+            delete_files=delete_files,
+            equality_delete_files=equality_delete_files,
+            removed_data_files=removed,
+            summary_extra=summary_extra,
+        )
+    deletes = bool(dvs or delete_files)
+    if isolation == APPEND:
+        rebase_ok = lambda: True  # noqa: E731
+    elif isolation == SNAPSHOT:
+        # a changelog replicates a FIXED delta: concurrent appends
+        # coexist, only a lost retraction (scanned file gone, or a
+        # foreign delete landing in between) forces the re-run
+        rebase_ok = lambda: _rebase_ok(  # noqa: E731
+            root, scanned_paths=pin.paths if deletes else [],
+            pinned_snap=pin.snap, forbid_new_deletes=deletes,
+        )
+    else:
+        # serializable: a concurrent append/delete re-runs the scan so
+        # the condition sees it
+        rebase_ok = lambda: _rebase_ok(  # noqa: E731
+            root, scanned_paths=pin.paths, pinned_snap=pin.snap,
+            ref=pin.ref, forbid_new_data=True,
+        )
+
+    def validate():
+        applied = changelog_id is not None and (
+            changelog_id in applied_changelog_ids(root)
+        )
+        return not applied and rebase_ok()
+
+    return _commit_with_rebase(
+        root, pin.op,
+        lambda mp: getattr(fx, name)(
+            *args, timestamp_ms=timestamp_ms, expected_metadata_path=mp,
+            parent_ref=pin.ref, **kw,
+        ),
+        pin.meta_path,
+        validate,
+    )
+
+
+class Applied(NamedTuple):
+    """What :func:`apply` committed."""
+
+    snapshot_id: "int | None"
+    #: deletion vectors committed (v3), else None
+    deletion_vectors: "int | None" = None
+    #: ``(path, count)`` of the position-delete files committed (below v3)
+    delete_files: "list | tuple" = ()
+
+    def dv(self) -> dict:
+        """The result-dict key a deletion-vector commit reports."""
+        if self.deletion_vectors is None:
+            return {}
+        return {"deletion_vectors": self.deletion_vectors}
+
+
+def apply(
+    spark, pin: Pin, coords=None, n: int = 0, *, timestamp_ms: int,
+    rows_per_delete_file: int, **commit_kw,
+) -> Applied:
+    """Encode the ``n`` matched ``(file_path, pos)`` coordinates in
+    ``coords`` and commit them with ``commit_kw`` (the op's new and
+    removed data files, isolation, summary) as one snapshot. On v3 they
+    become DELETION VECTORS — the spec forbids new position-delete files
+    there; executors roaring-build each file's positions and the driver
+    collects only the compressed blobs. Below v3 they become sorted
+    position-delete files."""
+    dvs, delete_files = None, []
+    if n and pin.fv >= 3:
+        dvs = _collect_deletion_vectors(spark, coords)
+    elif n:
+        delete_files = write_position_deletes(
+            coords, n, pin.root, "deletes", timestamp_ms,
+            rows_per_delete_file,
+        )
+    sid = commit(
+        pin, timestamp_ms=timestamp_ms, dvs=dvs, delete_files=delete_files,
+        **commit_kw,
+    )
+    return Applied(sid, None if dvs is None else len(dvs), delete_files)
+
+
+def rewrite_scope(spark, pin: Pin, file_paths, *, extra_footer_cols=None):
+    """The copy-on-write step DELETE/UPDATE and MERGE share: the pinned
+    files holding rows at ``file_paths`` (scan coordinates), their
+    manifest record total — output sizing without a count() action; None
+    when a file's count is unknown — and a rewrite :func:`scan` of just
+    those files (None when there are none)."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    keys = {im.data_file_suffix(p) for p in file_paths}
+    affected = [p for p in pin.paths if im.data_file_suffix(p) in keys]
+    stats = im.live_data_stats(pin.root, pin.snap)
+    recs = [(stats.get(p) or {}).get("records") for p in affected]
+    total = sum(recs) if all(r is not None for r in recs) else None
+    df = (
+        scan(spark, pin, affected, extra_footer_cols=extra_footer_cols)
+        if affected
+        else None
+    )
+    return affected, total, df

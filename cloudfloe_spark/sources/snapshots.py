@@ -135,7 +135,7 @@ def commit_metadata(root: str, update, *, expected_metadata_path=None):
     it in place into the next version, writing any new manifests on the
     way. When another writer published the next version first, a caller
     that pinned its base gets :class:`CommitConflictError`: its checks ran
-    against a state that is gone, and ``maintenance._commit_with_rebase``
+    against a state that is gone, and ``row_delta._commit_with_rebase``
     re-validates before retrying. An unpinned caller's ``update`` runs
     again on the new latest version, up to :data:`UNPINNED_ATTEMPTS`
     times."""

@@ -175,10 +175,8 @@ def append_stream_to_iceberg(
     # existing files, and ``target_layout="shredded"`` re-encodes the
     # batch itself so hot files keep the typed-pushdown layout.
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.maintenance import (
-        _dml_v3_cols,
-        _ns_tz_map,
-    )
+    from cloudfloe_spark.sources.maintenance import _ns_tz_map
+    from cloudfloe_spark.sources.row_delta import _dml_v3_cols
 
     # a created-but-empty table (metadata committed, no snapshot yet)
     # is a valid append target: no live paths, no per-file layout
@@ -279,28 +277,12 @@ def append_stream_to_iceberg(
         if variant_cols or ns_cols:
             from pyspark.sql import functions as F
 
-            from cloudfloe_spark.functions.variant import (
-                json_variant_encode_udf,
-            )
+            from cloudfloe_spark.sources.row_delta import physical_form
 
-            cols = []
-            for c in batch_df.columns:
-                if c in variant_cols:
-                    cols.append(
-                        json_variant_encode_udf()(
-                            F.col(c).cast("string")
-                        ).alias(c)
-                    )
-                elif c in ns_cols:
-                    cols.append(
-                        (
-                            F.unix_micros(F.col(c).cast("timestamp"))
-                            * F.lit(1000).cast("bigint")
-                        ).alias(c)
-                    )
-                else:
-                    cols.append(F.col(c))
-            batch_df = batch_df.select(*cols)
+            batch_df = batch_df.select(*[
+                physical_form(c, F.col(c), variant_cols, ns_cols).alias(c)
+                for c in batch_df.columns
+            ])
         files = _write_data_files(
             batch_df.sparkSession, root, None, batch_df, None, None,
             out_dir, mode="overwrite", ns_tz=ns_tz,

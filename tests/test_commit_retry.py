@@ -73,6 +73,7 @@ def _foreign_append(root, ids, ts):
 _REAL_ROW_DELTA = fx.commit_row_delta_snapshot
 _REAL_DELETE = fx.commit_delete_snapshot
 _REAL_REWRITE = fx.commit_rewrite_snapshot
+_REAL_DV = fx.commit_deletion_vector_snapshot
 
 
 def _interleave_once(monkeypatch, attr, real, foreign):
@@ -233,3 +234,103 @@ def test_retry_is_bounded(spark, table, monkeypatch):
     monkeypatch.setattr(fx, "commit_delete_snapshot", always_foreign)
     with pytest.raises(CommitConflictError, match="giving up"):
         delete_where(spark, root, "id <= 3", timestamp_ms=T1 + 1000)
+
+
+def test_changelog_replay_mid_commit_is_skipped(spark, table, monkeypatch):
+    """The SAME changelog apply (same ``changelog_id``) landing between an
+    insert-only apply's pin and its commit: nothing was scanned, so the
+    snapshot-isolation check alone would rebase and insert the rows a
+    second time. The rebase check refuses once the id is present, and the
+    re-run returns ``skipped``."""
+    root = table
+    changes = spark.createDataFrame(
+        [(7, "g", "insert")], "id LONG, v STRING, _change_type STRING"
+    )
+
+    def apply():
+        return apply_changelog(
+            spark, root, changes, ["id"], timestamp_ms=T1 + 1000,
+            changelog_id="src:1:2",
+        )
+
+    _interleave_once(
+        monkeypatch, "commit_row_delta_snapshot", _REAL_ROW_DELTA, apply
+    )
+    res = apply()
+    assert res == {
+        "retracted": 0, "inserted": 0, "snapshot_id": None, "skipped": True,
+    }
+    assert _rows(spark, root) == [(i,) for i in [1, 2, 3, 4, 5, 6, 7]]
+
+
+@pytest.fixture()
+def v3_table(table, spark):
+    from cloudfloe_spark.sources.maintenance import (
+        migrate_position_deletes_to_dvs,
+    )
+
+    # delete-free v2 → v3 is a metadata-only format bump
+    migrate_position_deletes_to_dvs(spark, table, timestamp_ms=T1 + 1)
+    return table
+
+
+@pytest.mark.parametrize("op", ["update_where", "merge_into"])
+def test_v3_dml_vs_append_rerun(spark, v3_table, monkeypatch, op):
+    """append ∥ v3 DML: a foreign append landing mid-commit of an UPDATE
+    or MERGE that commits deletion vectors re-runs the scan (serializable
+    isolation), so the appended rows are seen by the condition / join."""
+    from cloudfloe_spark.sources.maintenance import update_where
+
+    root = v3_table
+    calls = _interleave_once(
+        monkeypatch, "commit_deletion_vector_snapshot", _REAL_DV,
+        lambda: _foreign_append(root, [50, 51], T1 + 500),
+    )
+    if op == "update_where":
+        res = update_where(
+            spark, root, "id >= 5", {"v": "'Z'"}, timestamp_ms=T1 + 1000
+        )
+        assert res["matched"] == 4
+        want = [(5, "Z"), (6, "Z"), (50, "Z"), (51, "Z")]
+    else:
+        src = spark.createDataFrame(
+            [(50, "N"), (1, "A")], "id LONG, v STRING"
+        )
+        res = merge_into(
+            spark, root, src, ["id"], when_matched={"v": "s.v"},
+            timestamp_ms=T1 + 1000,
+        )
+        assert res["matched"] == 2 and res["inserted"] == 0
+        want = [(5, "e"), (6, "f"), (50, "N"), (51, "x")]
+    assert res["deletion_vectors"] >= 1
+    got = _rows(spark, root, cols="id, v")
+    assert [r for r in got if r[0] >= 5] == want
+    assert len(calls) >= 2
+
+
+def test_v3_changelog_retraction_vs_append_rebases(spark, v3_table, monkeypatch):
+    """append ∥ v3 changelog apply with retractions: snapshot isolation
+    lets the apply REBASE — the retry commits the very deletion vectors
+    the first attempt encoded (no re-run), and the foreign rows survive."""
+    root = v3_table
+    seen = []
+
+    def wrapper(root_, deletes, **kw):
+        seen.append(deletes)
+        if len(seen) == 1:
+            _foreign_append(root, [100], T1 + 500)
+        return _REAL_DV(root_, deletes, **kw)
+
+    monkeypatch.setattr(fx, "commit_deletion_vector_snapshot", wrapper)
+    changes = spark.createDataFrame(
+        [(2, "b", "delete"), (7, "g", "insert")],
+        "id LONG, v STRING, _change_type STRING",
+    )
+    res = apply_changelog(
+        spark, root, changes, ["id"], timestamp_ms=T1 + 1000
+    )
+    assert res["retracted"] == 1 and res["inserted"] == 1
+    assert res["deletion_vectors"] == 1
+    assert _rows(spark, root) == [(i,) for i in [1, 3, 4, 5, 6, 7, 100]]
+    # conflict + rebased retry of the SAME encoded delta
+    assert len(seen) == 2 and seen[0] is seen[1]
