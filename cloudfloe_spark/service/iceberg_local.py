@@ -58,6 +58,7 @@ import re
 
 from cloudfloe_spark.service.convert import CATALOG_NAME, _sub_outside_literals
 from cloudfloe_spark.service.errors import bad_request
+from cloudfloe_spark.session import local_frame
 from cloudfloe_spark.sources import fsio
 from cloudfloe_spark.sources import iceberg_meta as im
 from cloudfloe_spark.sources.deletes import (
@@ -193,9 +194,11 @@ def _view_name(kind: str, root: str, extra: object = None) -> str:
 #: Process-wide cache of resolved Iceberg views: content key → the view's
 #: ANALYZED logical plan. The service opens a new session per request, so
 #: the cache spans sessions.
-#: Building a view re-reads manifests, re-infers parquet schemas through
-#: ``sess.read`` (a Spark job each) and re-decodes deletion vectors; a hit
-#: skips all of it and re-homes the plan into the requesting session.
+#: Building a view re-reads manifests, re-analyzes its file scans and
+#: delete joins and re-decodes deletion vectors (driver-side work: data
+#: and position-delete scans read under a given schema, so they start no
+#: footer-inference job); a hit skips all of it and re-homes the plan into
+#: the requesting session.
 #: Keys pin everything that shapes the view's rows and schema — the
 #: resolved metadata file's identity (a new commit writes a new file), the
 #: snapshot, the surviving data files — plus the requesting session's
@@ -535,13 +538,10 @@ def _scan_frame(
             else:
                 subgroups = [(gpaths, None)]
             for spaths, pvals in subgroups:
-                reader = sess.read
-                if read_ddl is not None:
-                    # evolution-correct explicit schema (in this group's
-                    # on-disk names): columns added after a file was
-                    # written read as NULL; dropped columns are ignored.
-                    reader = reader.schema(read_ddl)
-                gdf = reader.parquet(*spaths)
+                # evolution-correct explicit schema (in this group's
+                # on-disk names): columns added after a file was written
+                # read as NULL; dropped columns are ignored.
+                gdf = sess.read.schema(read_ddl).parquet(*spaths)
                 # v3 initial-default (r11): columns this group's files
                 # predate read as NULL under the explicit DDL — overwrite
                 # with the default literal BEFORE deletes, so equality
@@ -694,7 +694,7 @@ def _scan_frame(
         )
         for _h, (_fn, _vc, _pp, _st) in (typed_paths or {}).items():
             ddl += f", `{_h}` {_vget_spark_type(_st)}"
-        df = sess.createDataFrame([], ddl)
+        df = local_frame(sess, [], ddl)
     if geo_prune:
         df = _geo_row_filter(df, geo_prune)
     return df
@@ -1054,8 +1054,7 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
 
         parts = []
         for gpaths, grenames, gddl, gfills in added_groups:
-            rd = sess.read.schema(gddl) if gddl else sess.read
-            d = rd.parquet(*gpaths)
+            d = sess.read.schema(gddl).parquet(*gpaths)
             for _fc, (_fv, _ft) in (gfills or {}).items():
                 d = d.withColumn(_fc, F.lit(_fv).cast(_ft))
             d = deletes.apply(d, gpaths, grenames)
@@ -1090,7 +1089,7 @@ def _changes_frame(sess, root: str, metadata_path, s_from: dict, s_to: dict):
             df = df.unionByName(p_)
         df = _surface_ns(df, ns_cols)
     else:  # no files appended in the range — zero rows, right columns
-        df = sess.createDataFrame([], schema_ddl)
+        df = local_frame(sess, [], schema_ddl)
     return df
 
 
@@ -1449,14 +1448,10 @@ def _cdc_frame(
     if added:
         ins_parts = []
         for gpaths, renames, read_ddl, default_fills in added_groups:
-            reader = sess.read
-            if read_ddl is not None:
-                if want_rid:
-                    # lineage tables read under explicit DDL; surface
-                    # the rewritten files' materialized _row_id column
-                    read_ddl = f"{read_ddl}, `_row_id` BIGINT"
-                reader = reader.schema(read_ddl)
-            g = reader.parquet(*gpaths)
+            if want_rid:
+                # surface the rewritten files' materialized _row_id
+                read_ddl = f"{read_ddl}, `_row_id` BIGINT"
+            g = sess.read.schema(read_ddl).parquet(*gpaths)
             for _fc, (_fv, _ft) in (default_fills or {}).items():
                 g = g.withColumn(_fc, F.lit(_fv).cast(_ft))
             # deletes apply BEFORE the rename, exactly as the read path;
@@ -1508,12 +1503,9 @@ def _cdc_frame(
     if carried_groups or carried_shred:
         base_parts = []
         for gpaths, renames, read_ddl, default_fills in carried_groups:
-            reader = sess.read
-            if read_ddl is not None:
-                if want_rid:
-                    read_ddl = f"{read_ddl}, `_row_id` BIGINT"
-                reader = reader.schema(read_ddl)
-            g = reader.parquet(*gpaths)
+            if want_rid:
+                read_ddl = f"{read_ddl}, `_row_id` BIGINT"
+            g = sess.read.schema(read_ddl).parquet(*gpaths)
             for _fc, (_fv, _ft) in (default_fills or {}).items():
                 g = g.withColumn(_fc, F.lit(_fv).cast(_ft))
             g = g.select(
@@ -1555,7 +1547,8 @@ def _cdc_frame(
             and not (want_rid and c == "_row_id")
         ]
         if eq_new or eq_old:
-            seq_df = sess.createDataFrame(
+            seq_df = local_frame(
+                sess,
                 [
                     (p.rsplit("/data/", 1)[-1], int(s))
                     for p, s in live_from.items()
@@ -1580,7 +1573,8 @@ def _cdc_frame(
                 )
             )
         if dv_new_positions:
-            dvd = sess.createDataFrame(
+            dvd = local_frame(
+                sess,
                 [
                     (suf, int(p))
                     for suf, ps in dv_new_positions.items()
@@ -1618,7 +1612,8 @@ def _cdc_frame(
             _mor_raw_scan,
         )
 
-        fmap = sess.createDataFrame(
+        fmap = local_frame(
+            sess,
             [(s, f) for s, f in first_ids.items() if f is not None],
             "__cdc_msfx STRING, __cdc_first BIGINT",
         )
@@ -1659,8 +1654,8 @@ def _cdc_frame(
                 .withColumn("_change_type", F.lit("delete"))
             )
         if not rid_parts:
-            return sess.createDataFrame(
-                [], schema_ddl + ", _change_type STRING"
+            return local_frame(
+                sess, [], schema_ddl + ", _change_type STRING"
             )
         df = rid_parts[0]
         for p in rid_parts[1:]:
@@ -1798,8 +1793,8 @@ def _cdc_frame(
         for p in parts[1:]:
             df = df.unionByName(p)
     else:  # nothing changed in the range — zero rows, right columns
-        df = sess.createDataFrame(
-            [], schema_ddl + ", _change_type STRING"
+        df = local_frame(
+            sess, [], schema_ddl + ", _change_type STRING"
         )
     if keys and parts:
         df = _pair_update_images(df, keys)
@@ -2139,7 +2134,8 @@ def _cdc_commits_view(
         for f in frames[1:]:
             df = df.unionByName(f)
     else:
-        df = sess.createDataFrame(
+        df = local_frame(
+            sess,
             [],
             schema_ddl
             + ", _change_type STRING, _commit_snapshot_id BIGINT, "
@@ -2165,8 +2161,8 @@ def _snapshots_view(sess, root: str) -> str:
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
     name = _view_name("snapshots", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "sequence_number BIGINT, snapshot_id BIGINT, "
         "timestamp_ms TIMESTAMP_NTZ, manifest_list STRING",
     ).createOrReplaceTempView(name)
@@ -2204,8 +2200,8 @@ def _metadata_view(sess, root: str) -> str:
         for e in entries
     ]
     name = _view_name("metadata", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "manifest_path STRING, manifest_content STRING, status STRING, "
         "content STRING, file_path STRING, file_format STRING, "
         "record_count BIGINT",
@@ -2246,8 +2242,8 @@ def _partitions_view(sess, root: str) -> str:
         )
     ]
     name = _view_name("partitions", root)
-    sess.createDataFrame(
-        rows, "partition STRING, file_count BIGINT, record_count BIGINT"
+    local_frame(
+        sess, rows, "partition STRING, file_count BIGINT, record_count BIGINT"
     ).createOrReplaceTempView(name)
     return name
 
@@ -2273,8 +2269,10 @@ def _refs_view(sess, root: str) -> str:
         if isinstance(r, dict)
     ]
     name = _view_name("refs", root)
-    sess.createDataFrame(
-        rows, "ref STRING, type STRING, snapshot_id STRING, is_current BOOLEAN"
+    local_frame(
+        sess,
+        rows,
+        "ref STRING, type STRING, snapshot_id STRING, is_current BOOLEAN",
     ).createOrReplaceTempView(name)
     return name
 
@@ -2311,8 +2309,8 @@ def _history_view(sess, root: str) -> str:
             )
         )
     name = _view_name("history", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "made_current_at TIMESTAMP_NTZ, snapshot_id STRING, "
         "parent_id STRING, is_current_ancestor BOOLEAN",
     ).createOrReplaceTempView(name)
@@ -2377,8 +2375,8 @@ def _column_stats_view(sess, root: str) -> str:
             for c in sorted(stats.get("ndv", {}))
         ]
     name = _view_name("colstats", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "column STRING, ndv BIGINT, null_count BIGINT, row_count BIGINT, "
         "snapshot_id STRING, is_current BOOLEAN, analyzed_at TIMESTAMP_NTZ",
     ).createOrReplaceTempView(name)
@@ -2457,7 +2455,7 @@ def _partition_stats_view(sess, root: str) -> str:
         ]
     )
     name = _view_name("pstats", root)
-    sess.createDataFrame(rows, ddl).createOrReplaceTempView(name)
+    local_frame(sess, rows, ddl).createOrReplaceTempView(name)
     return name
 
 
@@ -2699,8 +2697,8 @@ def _scan_plan_view(sess, root: str, predicate: str | None) -> str:
     except im.IcebergMetadataError as e:
         raise bad_request(f"Iceberg read failed: {e}") from None
     name = _view_name("scanplan", root, (predicate,))
-    sess.createDataFrame(
-        rows, "stage STRING, files BIGINT, bytes BIGINT, detail STRING"
+    local_frame(
+        sess, rows, "stage STRING, files BIGINT, bytes BIGINT, detail STRING"
     ).createOrReplaceTempView(name)
     return name
 
@@ -2743,8 +2741,8 @@ def _view_versions_view(sess, root: str) -> str:
             )
         )
     name = _view_name("viewversions", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "version_id INT, created_at TIMESTAMP_NTZ, operation STRING, "
         "sql STRING, is_current BOOLEAN",
     ).createOrReplaceTempView(name)
@@ -2827,8 +2825,8 @@ def _matview_status_view(sess, target_root: str) -> str:
             )
         )
     name = _view_name("mvstatus", target_root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "stale BOOLEAN, kind STRING, ref STRING, recorded STRING, "
         "current STRING, refreshed_at TIMESTAMP_NTZ, key_cols STRING",
     ).createOrReplaceTempView(name)
@@ -2869,8 +2867,8 @@ def _deletion_vectors_view(sess, root: str) -> str:
         for r in recs
     ]
     name = _view_name("dvs", root)
-    sess.createDataFrame(
-        rows,
+    local_frame(
+        sess, rows,
         "referenced_data_file STRING, cardinality BIGINT, "
         "puffin_path STRING, content_offset BIGINT, "
         "content_size_in_bytes BIGINT, sequence_number BIGINT",

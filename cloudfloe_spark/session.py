@@ -17,6 +17,7 @@ settings chosen for BOTH local testing (local[N]) and cluster scale:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -99,6 +100,36 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_schema(ddl: str):
+    """``ddl`` parsed to a StructType and its Arrow schema (parsing is a
+    JVM round trip; listing DDLs are a small fixed set)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    return schema, to_arrow_schema(schema)
+
+
+def local_frame(sess, rows, ddl: str):
+    """A DataFrame of the driver-side ``rows`` (tuples in ``ddl`` column
+    order), typed by ``ddl``.
+
+    The rows travel as one Arrow table typed from the DDL, so the frame
+    is a LocalRelation: planning and collecting it start no Spark job and
+    no Python worker, where ``createDataFrame(list)`` runs a job that
+    unpickles every row. Values keep their exact types, NULLs included."""
+    import pyarrow as pa
+
+    schema, arrow = _ddl_schema(ddl)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return sess.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

@@ -21,6 +21,7 @@ deleted rows.
 
 from __future__ import annotations
 
+from cloudfloe_spark.session import local_frame
 from cloudfloe_spark.sources import iceberg_meta as im
 
 #: The Iceberg spec's fixed position-delete schema (field ids 2147483546
@@ -48,6 +49,11 @@ def _suffix(path: str) -> str:
     within a table (uuid file names) and stable when the table moves, so
     delete files that record stale absolute URIs still match."""
     return path.rsplit("/data/", 1)[-1]
+
+
+def _sql_string(s: str) -> str:
+    """``s`` escaped for the body of a single-quoted Spark SQL literal."""
+    return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def _suffix_col(col):
@@ -133,8 +139,11 @@ class RowDeletes:
 
 
 def position_delete_frame(sess, delete_paths: "list[str]"):
-    """Distinct ``(__cf_del_file, __cf_del_pos)`` rows — data-file suffix
-    and row position — of a set of position-delete parquet files."""
+    """``(__cf_del_file, __cf_del_pos)`` rows — data-file suffix and row
+    position — of a set of position-delete parquet files. Not deduplicated:
+    every consumer is a LEFT ANTI or LEFT SEMI join, whose result a
+    repeated build-side key cannot change, so a ``.distinct()`` would only
+    add a shuffle."""
     from pyspark.sql import functions as F
 
     return (
@@ -144,7 +153,6 @@ def position_delete_frame(sess, delete_paths: "list[str]"):
             _suffix_col(F.col("file_path")).alias("__cf_del_file"),
             F.col("pos").alias("__cf_del_pos"),
         )
-        .distinct()
     )
 
 
@@ -241,14 +249,16 @@ def _apply_deletion_vectors(
         return data  # every DV touching this group is empty
     if sum(len(ps) for ps in by_suffix.values()) <= _DV_LITERAL_FILTER_MAX_POSITIONS:
         # Literal mask: keep rows whose (file, pos) is not deleted. Only
-        # suffixes present in this group contribute terms.
-        fcol = _suffix_col(F.col("_metadata.file_path"))
-        pcol = F.col("_metadata.row_index")
-        drop = None
-        for s, ps in sorted(rel.items()):
-            term = (fcol == F.lit(s)) & pcol.isin(ps)
-            drop = term if drop is None else (drop | term)
-        return data.filter(~drop)
+        # suffixes present in this group contribute terms. The mask is
+        # one SQL string: ``Column.isin`` would make a py4j call per
+        # position, the parser takes the whole list at once.
+        drop = " OR ".join(
+            f"(substring_index(_metadata.file_path, '/data/', -1) = "
+            f"'{_sql_string(s)}' AND _metadata.row_index IN "
+            f"({', '.join(map(str, ps))}))"
+            for s, ps in sorted(rel.items())
+        )
+        return data.filter(F.expr(f"NOT ({drop})"))
     if "frame" not in ctx:
         # One Arrow-backed frame for the whole scan, deduped driver-side
         # (no ``.distinct()`` exchange) and broadcast once.
@@ -276,7 +286,8 @@ def _apply_deletion_vectors(
 def _dv_frame_distributed(sess, dv_records: "list[dict]"):
     """``(__cf_del_file, __cf_del_pos)`` of every vector, decoded on the
     executors: one task per blob reference."""
-    refs = sess.createDataFrame(
+    refs = local_frame(
+        sess,
         [
             (
                 r["path"],
@@ -457,7 +468,8 @@ def _apply_equality_deletes(
 
     if "seq_frame" not in ctx:
         ctx["seq_frame"] = F.broadcast(
-            sess.createDataFrame(
+            local_frame(
+                sess,
                 [(_suffix(p), int(s)) for p, s in file_seqs.items()],
                 "__cf_seq_file STRING, __cf_data_seq BIGINT",
             )

@@ -1229,18 +1229,19 @@ def scan_groups(
     schema_id: Optional[int] = None,
     variant_as: "str | None" = None,
     ns_as: "str | None" = None,
-) -> list[tuple[list[str], dict[str, str], Optional[str], dict]]:
+) -> list[tuple[list[str], dict[str, str], str, dict]]:
     """Partition a snapshot's data files for a schema-evolution-correct
     read: ``(paths, rename_map, read_schema_ddl, default_fills)`` per
-    group.
+    group. Every group reads under an explicit DDL rendered from the
+    Iceberg schema, never a footer-inferred one: inference is a Spark job
+    per read, picks one file's schema for the whole group, and would leak
+    physical columns outside the table schema (the materialized
+    ``_row_id`` of a row-lineage table's compacted files).
 
-    - No evolution (single schema in the log): one group, no rename, no
-      explicit schema — the plain fast path, footers never touched.
-    - Adds/drops only (multi-schema log, no renames): one group read under
-      an EXPLICIT current-schema DDL, so columns added after a file was
-      written surface as NULL (a footer-inferred read would silently pick
-      one file's schema) and dropped columns are ignored. Footers still
-      never touched.
+    - No renames and no v3 defaults: one group, no rename, read under the
+      target schema's DDL — columns added after a file was written
+      surface as NULL and dropped columns are ignored. Footers never
+      touched.
     - Renames: files grouped by the old-name→current-name map their footer
       needs (field-id resolution via the schema log); each group reads
       under the current schema translated to ITS on-disk names, then
@@ -1253,26 +1254,11 @@ def scan_groups(
       carry defaults pay the per-file footer read.
     """
     meta = load_metadata(root, metadata_path)
-    schemas = meta.get("schemas") or []
     target_sid = (
         schema_id
         if schema_id is not None
         else meta.get("current-schema-id", 0)
     )
-    evolved = len(schemas) > 1 or target_sid not in (0, None)
-    # row-lineage tables (r11) ALWAYS read under an explicit DDL: their
-    # rewritten (compacted) files carry a materialized ``_row_id``
-    # parquet column that a footer-inferred read would leak into the
-    # table's schema
-    lineage = meta.get("next-row-id") is not None
-    # variant tables (r12) also read under an explicit DDL: the reader
-    # needs the PHYSICAL (metadata, value) struct form, never a
-    # footer-inferred schema
-    has_variant = bool(variant_columns(meta, target_sid))
-    # ns-timestamp tables (r12) too: the physical BIGINT surface only
-    # exists under an explicit DDL (an inferred read may pick a µs
-    # file's TIMESTAMP and fork the union's schema)
-    has_ns = bool(ns_timestamp_columns(meta, target_sid))
     hist = schema_name_history(root, metadata_path, schema_id=target_sid)
     fills = (
         schema_default_fills(meta, target_sid)
@@ -1280,13 +1266,9 @@ def scan_groups(
         else {}
     )
     if not hist and not fills:
-        ddl = (
-            current_schema_ddl(
-                root, metadata_path, schema_id=target_sid,
-                variant_as=variant_as, ns_as=ns_as,
-            )
-            if (evolved or lineage or has_variant or has_ns)
-            else None
+        ddl = current_schema_ddl(
+            root, metadata_path, schema_id=target_sid,
+            variant_as=variant_as, ns_as=ns_as,
         )
         return [(list(paths), {}, ddl, {})]
 

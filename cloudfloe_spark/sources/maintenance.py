@@ -2982,8 +2982,7 @@ def compute_geo_bounds(
         root, paths, metadata_path=meta_path,
         variant_as="physical", ns_as="physical",
     ):
-        rd = spark.read.schema(gddl) if gddl else spark.read
-        g = rd.parquet(*gpaths)
+        g = spark.read.schema(gddl).parquet(*gpaths)
         if rmap:
             g = g.withColumnsRenamed(rmap)
         part = g.select(
@@ -3317,8 +3316,7 @@ def _scan_file_partials(
             root, paths, metadata_path=meta_path,
             variant_as="physical", ns_as="physical",
         ):
-            rd = sess.read.schema(gddl) if gddl else sess.read
-            g = rd.parquet(*gpaths)
+            g = sess.read.schema(gddl).parquet(*gpaths)
             if rmap:
                 g = g.withColumnsRenamed(rmap)
             for _fc, (_fv, _ft) in gfill.items():

@@ -378,17 +378,14 @@ def _mor_raw_scan(
     )
     parts = []
     for gpaths, renames, read_ddl, default_fills in groups:
-        reader = spark.read
-        if read_ddl is not None:
-            # extra_footer_cols (r11, row lineage): physical columns
-            # outside the table schema (the materialized ``_row_id`` of
-            # compacted files) — appended to the explicit DDL so files
-            # carrying them surface the values and files without read
-            # NULL (the caller coalesces with first_row_id + position)
-            for c in extra_footer_cols or []:
-                read_ddl = f"{read_ddl}, `{c}` BIGINT"
-            reader = reader.schema(read_ddl)
-        gdf = reader.parquet(*gpaths)
+        # extra_footer_cols (r11, row lineage): physical columns outside
+        # the table schema (the materialized ``_row_id`` of compacted
+        # files) — appended to the explicit DDL so files carrying them
+        # surface the values and files without read NULL (the caller
+        # coalesces with first_row_id + position)
+        for c in extra_footer_cols or []:
+            read_ddl = f"{read_ddl}, `{c}` BIGINT"
+        gdf = spark.read.schema(read_ddl).parquet(*gpaths)
         # v3 initial-default: a DML pass must see (and REWRITE) the value
         # the rows logically carry, not NULL — otherwise an update/merge
         # would materialize NULL into the new data files

@@ -96,10 +96,15 @@ def test_append_vs_append_rebases(spark, table, monkeypatch):
     """append ∥ append: an insert-only changelog apply whose commit races
     a foreign append simply re-points — both commits land, no re-scan."""
     root = table
-    calls = _interleave_once(
-        monkeypatch, "commit_row_delta_snapshot", _REAL_ROW_DELTA,
-        lambda: _foreign_append(root, [100], T1 + 500),
-    )
+    seen = []
+
+    def wrapper(root_, **kw):
+        seen.append(kw.get("new_data_files"))
+        if len(seen) == 1:
+            _foreign_append(root, [100], T1 + 500)
+        return _REAL_ROW_DELTA(root_, **kw)
+
+    monkeypatch.setattr(fx, "commit_row_delta_snapshot", wrapper)
     changes = spark.createDataFrame(
         [(7, "g", "insert")], "id LONG, v STRING, _change_type STRING"
     )
@@ -109,8 +114,9 @@ def test_append_vs_append_rebases(spark, table, monkeypatch):
     assert res["inserted"] == 1 and res["snapshot_id"] is not None
     # the foreign append's row AND ours both present
     assert _rows(spark, root) == [(i,) for i in [1, 2, 3, 4, 5, 6, 7, 100]]
-    # rebase, not re-run: the commit wrapper ran twice (conflict + retry)
-    assert len(calls) == 2
+    # rebase, not re-run: the retry commits the very files the first
+    # attempt wrote (a re-run would write and pass new ones)
+    assert len(seen) == 2 and seen[0] is seen[1]
 
 
 def test_append_vs_dml_rerun_is_serializable(spark, table, monkeypatch):

@@ -2980,11 +2980,27 @@ def test_plan_cache_shared_by_conjuncts_that_prune_alike(
     assert (plan_cache.hits, len(plan_cache)) == (1, 2)
 
 
-def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cache):
-    """Position-delete files read under the spec's fixed schema, so
-    applying them starts no footer-inference job."""
+def _spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted under a
+    fresh job group."""
     import uuid
 
+    sc = spark.sparkContext
+    group = f"cf-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cache):
+    """Data files read under the Iceberg schema and position-delete files
+    under the spec's fixed schema, so resolving a scan starts no
+    footer-inference job, with or without deletes."""
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
 
     root = str(tmp_path / "tpd")
@@ -2993,27 +3009,39 @@ def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cac
         [pa.table({"id": [1, 2]}), pa.table({"id": [3]})], timestamp_ms=T1
     )
     sess = spark.newSession()
-    sc = spark.sparkContext
     sql = f"SELECT id FROM iceberg_scan('{root}')"
 
     def resolve_jobs():
-        group = f"cf-test-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = resolve_iceberg_reads(sess, sql)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        return _spark_jobs(spark, lambda: resolve_iceberg_reads(sess, sql))
 
     _out, plain = resolve_jobs()
     target = im.live_data_paths(root, im.resolve_snapshot(root))[0]
     t.position_delete_snapshot([(target, 0)], timestamp_ms=T2)
     out, with_deletes = resolve_jobs()
     assert plan_cache.misses == 2
-    assert with_deletes <= plain
+    assert (plain, with_deletes) == (0, 0)
     assert sorted(r[0] for r in sess.sql(out).collect()) == [2, 3]
+
+
+def test_listing_frames_start_no_spark_jobs(spark, two_snapshot_table):
+    """Metadata listings are driver-built LocalRelations: resolving and
+    collecting one starts no Spark job, empty listings included."""
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+
+    root = two_snapshot_table[0]
+    sess = spark.newSession()
+    for fn, has_rows in (
+        ("iceberg_snapshots", True),
+        ("iceberg_metadata", True),
+        ("iceberg_deletion_vectors", False),  # a v2 table has none
+    ):
+        rows, jobs = _spark_jobs(
+            spark,
+            lambda: sess.sql(
+                resolve_iceberg_reads(sess, f"SELECT * FROM {fn}('{root}')")
+            ).collect(),
+        )
+        assert (jobs, bool(rows)) == (0, has_rows), fn
 
 
 def test_plan_cache_under_concurrent_requests(spark, two_snapshot_table, plan_cache):

@@ -812,3 +812,29 @@ def test_copurchase_edges_single_order_key_shuffle(spark, sf_dir):
     assert re.search(r"hashpartitioning\(ok#\d+L, \d+\)", plan), plan
     two_key = re.search(r"hashpartitioning\(ok#\d+L,\s*pk#", plan)
     assert two_key is None, plan
+
+
+def test_position_delete_side_is_not_deduplicated(spark, tmp_path):
+    """The delete side of a position-delete scan feeds only a LEFT ANTI
+    join, which repeated keys cannot change: no aggregate and no hash
+    shuffle to deduplicate it."""
+    import pyarrow as pa
+
+    from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
+    from cloudfloe_spark.sources import iceberg_meta as im
+    from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
+
+    root = str(tmp_path / "t")
+    t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
+    t.append_snapshot([pa.table({"id": [1, 2, 3]})], timestamp_ms=1)
+    target = im.live_data_paths(root, im.resolve_snapshot(root))[0]
+    t.position_delete_snapshot([(target, 0), (target, 2)], timestamp_ms=2)
+    sess = spark.newSession()
+    df = sess.sql(
+        resolve_iceberg_reads(sess, f"SELECT id FROM iceberg_scan('{root}')")
+    )
+    assert [r.id for r in df.collect()] == [2]
+    plan = executed_plan(df)
+    assert "LeftAnti" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan

@@ -586,6 +586,57 @@ def test_dv_decode_distributes_past_threshold(spark, v3_table, monkeypatch):
     assert got == [(0,), (2,), (4,), (7,), (8,)]
 
 
+def test_dv_literal_mask_builds_without_per_position_literals(
+    spark, tmp_path, monkeypatch
+):
+    """A driver-decoded DV set under the literal-filter cap applies as one
+    SQL mask string: a few hundred deleted positions read correctly with
+    ``Column.isin`` (a py4j literal per position) made to raise."""
+    from pyspark.sql import functions as F
+
+    from cloudfloe_spark.service import iceberg_local as il
+    from cloudfloe_spark.sources import fsio
+
+    root = str(tmp_path / "t")
+    t = LocalIcebergTable(root, pa.schema([("id", pa.int64())]))
+    t.append_snapshot(
+        [
+            pa.table({"id": list(range(0, 500))}),
+            pa.table({"id": list(range(500, 1000))}),
+        ],
+        timestamp_ms=T1,
+    )
+    paths = im.live_data_paths(root, im.resolve_snapshot(root))
+    first = next(p for p in paths if _first_id(p) == 0)
+    second = next(p for p in paths if p != first)
+    commit_deletion_vector_snapshot(
+        root,
+        {first: list(range(0, 500, 2)), second: list(range(100, 250))},
+        timestamp_ms=T1 + 1000,
+    )
+    monkeypatch.setattr(il, "_PLAN_CACHE", fsio.LRUCache(il._PLAN_CACHE_MAX))
+
+    def no_isin(self, *cols):
+        raise AssertionError("Column.isin called")
+
+    # the session's concrete Column class (classic PySpark overrides isin)
+    monkeypatch.setattr(type(F.col("id")), "isin", no_isin)
+    got = [
+        r[0]
+        for r in _rows(spark, f"SELECT id FROM iceberg_scan('{root}') ORDER BY id")
+    ]
+    want = list(range(1, 500, 2)) + list(range(500, 600)) + list(
+        range(750, 1000)
+    )
+    assert got == want
+
+
+def _first_id(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path, columns=["id"]).column(0)[0].as_py()
+
+
 def test_dml_scan_decodes_each_vector_once(spark, tmp_path, monkeypatch):
     """A DML scan over files in two rename groups decodes each deletion
     vector once, like the read path — not once per file group."""
