@@ -246,6 +246,29 @@ def _meta_signature(metadata_path) -> tuple:
         return (p, None)
 
 
+def _pin(root: str, version, ts_text, metadata_path=None) -> tuple:
+    """``(metadata path, snapshot, live data file paths)`` of one scan's
+    time-travel clause (``version``: a snapshot id or a quoted ref name;
+    ``ts_text``: a timestamp), resolved against ``metadata_path`` or the
+    table's current metadata file. Raises IcebergMetadataError."""
+    if metadata_path is None:
+        # Resolve the current metadata file ONCE and pin every lookup to
+        # it: one directory listing per query (remote listings cost a
+        # round-trip each), and no chance of a concurrent commit changing
+        # the answer mid-resolution.
+        metadata_path = im.latest_metadata_path(root)
+    if isinstance(version, str) and version.startswith("'"):
+        # VERSION AS OF '<ref>' — tag/branch name (Iceberg refs map)
+        version = im.resolve_ref(root, version[1:-1], metadata_path=metadata_path)
+    snap = im.resolve_snapshot(
+        root,
+        version=int(version) if version else None,
+        timestamp_ms=_parse_ts_ms(ts_text) if ts_text else None,
+        metadata_path=metadata_path,
+    )
+    return metadata_path, snap, im.live_data_paths(root, snap)
+
+
 def _snapshot_view(
     sess,
     root: str,
@@ -265,24 +288,7 @@ def _snapshot_view(
     subcolumn (zero Python); other groups compute the same value from
     the decoded JSON surface JVM-side."""
     try:
-        if metadata_path is None:
-            # Resolve the current metadata file ONCE and pin every lookup
-            # below to it: one directory listing per query (remote
-            # listings cost a round-trip each), and no chance of a
-            # concurrent commit changing the answer mid-resolution.
-            metadata_path = im.latest_metadata_path(root)
-        if isinstance(version, str) and version.startswith("'"):
-            # VERSION AS OF '<ref>' — tag/branch name (Iceberg refs map)
-            version = im.resolve_ref(
-                root, version[1:-1], metadata_path=metadata_path
-            )
-        snap = im.resolve_snapshot(
-            root,
-            version=int(version) if version else None,
-            timestamp_ms=_parse_ts_ms(ts_text) if ts_text else None,
-            metadata_path=metadata_path,
-        )
-        paths = im.live_data_paths(root, snap)
+        metadata_path, snap, paths = _pin(root, version, ts_text, metadata_path)
         # Transform-aware manifest pruning (inclusive projection): WHERE
         # conjuncts on partition SOURCE columns eliminate files whose
         # partition tuple — identity, bucket[N], truncate[W], or
@@ -403,6 +409,77 @@ def _snapshot_view(
     )
 
 
+def _read_layout(sess, root, snap, metadata_path, paths, snap_sid) -> tuple:
+    """What a read of ``paths`` needs besides the files, after refusing
+    what it cannot read (400 or IcebergMetadataError, never a silent
+    wrong read): ``(deletes, variant columns, plain paths, shredded
+    groups, their default fills, ns columns)``. The scan and the metadata
+    count both call it, so both refuse the same tables."""
+    # v3: reject the features the reader cannot honor
+    bad_v3 = im.unsupported_v3_features(root, metadata_path)
+    if bad_v3:
+        raise bad_request(
+            "Iceberg v3 feature(s) this engine does not support: "
+            + "; ".join(sorted(set(bad_v3)))
+        )
+    deletes = RowDeletes(
+        sess, root, snap, metadata_path, paths, schema_id=snap_sid
+    )
+    # Schema evolution: the scan groups files by the rename map their
+    # footer needs (field-id resolution via the schema log — a renamed
+    # column's old data files keep the old parquet name; reading by
+    # name alone would null the column out). One group with an empty
+    # map is the no-rename fast path (single read, footers untouched).
+    # v3 variant (r12, VERDICT r11 #1): the scan reads each file's
+    # physical variant layout and decodes it to the engine's
+    # canonical-JSON STRING surface after deletes + renames.
+    # UNSHREDDED files read the (metadata, value) pair; SHREDDED
+    # files (typed_value subcolumns) are grouped by footer shape
+    # and REASSEMBLED per the shredding spec (typed wins, residual
+    # merges, both-null = missing); shapes this reader cannot
+    # render 400 naming the file and leaf.
+    meta = im.load_metadata(root, metadata_path)
+    variant_cols = im.variant_columns(meta, snap_sid)
+    shred_groups: list = []
+    plain_paths = paths
+    v_fills: dict = {}
+    if variant_cols and paths:
+        vhist = im.schema_name_history(root, metadata_path, schema_id=snap_sid)
+        plain_paths, shred_groups, verr = im.variant_shred_groups(
+            paths, variant_cols, name_history=vhist, resolve_renames=True,
+        )
+        if verr:
+            raise bad_request(
+                "Iceberg v3 variant read failed: "
+                + "; ".join(sorted(set(verr)))
+            )
+        if shred_groups:
+            # r15 (VERDICT r14 #1): shredded groups resolve column
+            # RENAMES per file (descriptor leaves matched against
+            # write-time names; rename after deletes, like plain groups)
+            # and apply v3 DEFAULT FILLS post-decode.
+            v_fills = im.schema_default_fills(meta, snap_sid)
+    # v3 timestamp_ns (r12, VERDICT r11 #4): read as raw nanosecond
+    # longs (physical BIGINT under nanosAsLong), truncate to µs
+    # TIMESTAMP after deletes + renames — DuckDB's own ns→µs cast
+    # rule and the engine's events-table rule, unified. Files at the
+    # wrong physical precision (pre-promotion µs) 400 precisely.
+    ns_cols = im.ns_timestamp_columns(meta, snap_sid)
+    if ns_cols and paths:
+        nerr = im.ns_precision_errors(
+            paths, ns_cols,
+            name_history=im.schema_name_history(
+                root, metadata_path, schema_id=snap_sid
+            ),
+        )
+        if nerr:
+            raise bad_request(
+                "Iceberg v3 timestamp_ns read failed: "
+                + "; ".join(sorted(set(nerr)))
+            )
+    return deletes, variant_cols, plain_paths, shred_groups, v_fills, ns_cols
+
+
 def _scan_frame(
     sess,
     root: str,
@@ -417,14 +494,6 @@ def _scan_frame(
     schema evolution, v3 variant and ns columns, partition stamping and
     the geo row window, over exactly ``paths``."""
     try:
-        # v3: reject the features the reader cannot honor (clear 400,
-        # never a silent wrong read)
-        bad_v3 = im.unsupported_v3_features(root, metadata_path)
-        if bad_v3:
-            raise bad_request(
-                "Iceberg v3 feature(s) this engine does not support: "
-                + "; ".join(sorted(set(bad_v3)))
-            )
         # TIME TRAVEL resolves under the SNAPSHOT's schema when the
         # metadata records one (spec field `schema-id` per snapshot) —
         # a pre-rename snapshot shows pre-rename column names. The
@@ -433,50 +502,9 @@ def _scan_frame(
         # name — Iceberg scans are current-schema; only time travel is
         # write-time-schema).
         snap_sid = snap.get("schema-id") if time_travel else None
-        deletes = RowDeletes(
-            sess, root, snap, metadata_path, paths, schema_id=snap_sid
+        deletes, variant_cols, plain_paths, shred_groups, v_fills, ns_cols = (
+            _read_layout(sess, root, snap, metadata_path, paths, snap_sid)
         )
-        # Schema evolution: group files by the rename map their footer
-        # needs (field-id resolution via the schema log — a renamed
-        # column's old data files keep the old parquet name; reading by
-        # name alone would null the column out). One group with an empty
-        # map is the no-rename fast path (single read, footers untouched).
-        # v3 variant (r12, VERDICT r11 #1): the scan reads each file's
-        # physical variant layout and decodes it to the engine's
-        # canonical-JSON STRING surface after deletes + renames.
-        # UNSHREDDED files read the (metadata, value) pair; SHREDDED
-        # files (typed_value subcolumns) are grouped by footer shape
-        # and REASSEMBLED per the shredding spec (typed wins, residual
-        # merges, both-null = missing); shapes this reader cannot
-        # render 400 naming the file and leaf.
-        variant_cols = im.variant_columns(
-            im.load_metadata(root, metadata_path), snap_sid
-        )
-        shred_groups: list = []
-        plain_paths = paths
-        v_fills: dict = {}
-        if variant_cols and paths:
-            vhist = im.schema_name_history(
-                root, metadata_path, schema_id=snap_sid
-            )
-            plain_paths, shred_groups, verr = im.variant_shred_groups(
-                paths, variant_cols, name_history=vhist,
-                resolve_renames=True,
-            )
-            if verr:
-                raise bad_request(
-                    "Iceberg v3 variant read failed: "
-                    + "; ".join(sorted(set(verr)))
-                )
-            if shred_groups:
-                # r15 (VERDICT r14 #1): shredded groups now resolve
-                # column RENAMES per file (descriptor leaves matched
-                # against write-time names; rename after deletes, like
-                # plain groups) and apply v3 DEFAULT FILLS post-decode
-                # — the last substantive v3 read refusal is gone.
-                v_fills = im.schema_default_fills(
-                    im.load_metadata(root, metadata_path), snap_sid
-                )
         groups = (
             im.scan_groups(
                 root, plain_paths, metadata_path, schema_id=snap_sid,
@@ -485,26 +513,6 @@ def _scan_frame(
             if plain_paths
             else []
         )
-        # v3 timestamp_ns (r12, VERDICT r11 #4): read as raw nanosecond
-        # longs (physical BIGINT under nanosAsLong), truncate to µs
-        # TIMESTAMP after deletes + renames — DuckDB's own ns→µs cast
-        # rule and the engine's events-table rule, unified. Files at the
-        # wrong physical precision (pre-promotion µs) 400 precisely.
-        ns_cols = im.ns_timestamp_columns(
-            im.load_metadata(root, metadata_path), snap_sid
-        )
-        if ns_cols and paths:
-            nerr = im.ns_precision_errors(
-                paths, ns_cols,
-                name_history=im.schema_name_history(
-                    root, metadata_path, schema_id=snap_sid
-                ),
-            )
-            if nerr:
-                raise bad_request(
-                    "Iceberg v3 timestamp_ns read failed: "
-                    + "; ".join(sorted(set(nerr)))
-                )
         # Partition pruning, Catalyst-style: identity-partition values are
         # stamped per file group as typed literals, so a WHERE on the
         # partition column constant-folds non-matching groups to empty
@@ -3036,6 +3044,18 @@ def resolve_iceberg_reads(sess, sql: str) -> str:
             extract_scan_conjuncts,
         )
 
+        counted = _bare_count(out, pending)
+        if counted is not None:
+            name, column, limit = counted
+            n = _metadata_count(sess, *pending[name])
+            if n is not None:
+                view = _view_name("count", pending[name][0], column)
+                local_frame(
+                    sess, [(n,)], f"`{column}` BIGINT"
+                ).createOrReplaceTempView(view)
+                return f"SELECT * FROM {view}" + (
+                    "" if limit is None else f" LIMIT {limit}"
+                )
         conj = extract_scan_conjuncts(out, set(pending))
         typed, out = _factor_typed_extractions(sess, out, pending)
         for name, (root, ver, ts) in pending.items():
@@ -3049,6 +3069,137 @@ def resolve_iceberg_reads(sess, sql: str) -> str:
                 typed_paths=typed.get(name),
             )
     return out
+
+
+#: the select item of a bare count, matched at the position DuckDB's AST
+#: gives it (DuckDB also reads ``count()`` as a star count; Spark refuses it)
+_COUNT_STAR_RE = re.compile(r"count\s*\(\s*\*\s*\)", re.IGNORECASE)
+_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_CHECKED = object()
+#: the keys of a SELECT node and, for those a bare count leaves empty,
+#: their empty values; a key outside this map is a shape not allowed
+_COUNT_NODE = {
+    "type": "SELECT_NODE",
+    "modifiers": _CHECKED,  # at most one plain LIMIT
+    "cte_map": {"map": []},
+    "select_list": _CHECKED,  # the one COUNT(*)
+    "from_table": _CHECKED,  # the one scan view
+    "where_clause": None,
+    "group_expressions": [],
+    "group_sets": [],
+    "aggregate_handling": "STANDARD_HANDLING",
+    "having": None,
+    "sample": None,
+    "qualify": None,
+}
+_COUNT_ITEM = {
+    "class": "FUNCTION",
+    "type": "FUNCTION",
+    "function_name": "count_star",
+    "schema": "",
+    "catalog": "",
+    "children": [],
+    "filter": None,
+    "order_bys": {"type": "ORDER_MODIFIER", "orders": []},
+    "distinct": False,
+    "is_operator": False,
+    "export_state": False,
+}
+_COUNT_FROM = {
+    "type": "BASE_TABLE",
+    "sample": None,
+    "schema_name": "",
+    "catalog_name": "",
+    "column_name_alias": [],
+}
+
+
+def _bare_count(sql: str, pending: dict) -> "tuple[str, str, int | None] | None":
+    """``(scan view, output column, LIMIT or None)`` when the view-
+    substituted ``sql`` is exactly ``SELECT COUNT(*) [AS a] FROM <scan
+    view> [alias] [LIMIT n]``, else None. An allowlist over DuckDB's AST:
+    any WHERE, GROUP BY, HAVING, DISTINCT, QUALIFY, window, sample, join,
+    CTE, subquery, second relation or other select item is not a bare
+    count. The column is named as Spark names it: the alias, or
+    ``count(1)``."""
+    from cloudfloe_spark.sources.partition_pruning import statement_ast
+
+    # a double-quoted identifier parses in DuckDB but not in Spark
+    if len(pending) != 1 or '"' in sql:
+        return None
+    stmts = (statement_ast(sql) or {}).get("statements") or []
+    node = stmts[0].get("node") if len(stmts) == 1 else None
+    if not isinstance(node, dict) or set(node) != set(_COUNT_NODE):
+        return None
+    if any(v is not _CHECKED and node[k] != v for k, v in _COUNT_NODE.items()):
+        return None
+    items, ft = node["select_list"], node["from_table"]
+    if len(items) != 1 or not isinstance(ft, dict):
+        return None
+    item = items[0]
+    if any(item.get(k) != v for k, v in _COUNT_ITEM.items()):
+        return None
+    if any(ft.get(k) != v for k, v in _COUNT_FROM.items()):
+        return None
+    if ft.get("table_name") not in pending:
+        return None
+    alias = item.get("alias") or ""
+    if alias and not _IDENT_RE.fullmatch(alias):
+        return None
+    loc = item.get("query_location")
+    if not isinstance(loc, int):
+        return None
+    at = len(sql.encode()[:loc].decode("utf-8", "ignore"))  # a byte offset
+    if not _COUNT_STAR_RE.match(sql, at):
+        return None
+    limit = None
+    mods = node["modifiers"]
+    if mods:
+        m = mods[0]
+        lim = m.get("limit") or {}
+        value = (lim.get("value") or {}).get("value")
+        if (
+            len(mods) != 1
+            or set(m) != {"type", "limit", "offset"}
+            or m["type"] != "LIMIT_MODIFIER"
+            or m["offset"] is not None
+            or lim.get("class") != "CONSTANT"
+            or type(value) is not int
+            or not 0 <= value < 2**31
+        ):
+            return None
+        limit = value
+    return ft["table_name"], alias or "count(1)", limit
+
+
+def _metadata_count(sess, root: str, version, ts_text) -> "int | None":
+    """Rows of one unpruned scan, from metadata: the live data files'
+    manifest ``record_count`` minus the distinct deleted positions that
+    fall inside those files. The snapshot pins, and the reads it refuses,
+    are exactly those of :func:`_snapshot_view`. Data files are never
+    opened. None when the deletes cannot be enumerated on the driver
+    (:meth:`RowDeletes.deleted_positions`); the scan answers then."""
+    import numpy as np
+
+    try:
+        metadata_path, snap, paths = _pin(root, version, ts_text)
+        snap_sid = snap.get("schema-id") if (version or ts_text) else None
+        deletes = _read_layout(
+            sess, root, snap, metadata_path, paths, snap_sid
+        )[0]
+        dels = deletes.deleted_positions()
+        if dels is None:
+            return None
+        stats = im.live_data_stats(root, snap)
+    except im.IcebergMetadataError as e:
+        raise bad_request(f"Iceberg read failed: {e}") from None
+    rows = {p: stats[p]["records"] for p in paths}
+    if None in rows.values():
+        return None
+    return sum(rows.values()) - sum(
+        int(np.count_nonzero((ps >= 0) & (ps < rows[p])))
+        for p, ps in dels.items()
+    )
 
 
 #: variant_get / try_variant_get over parse_json(<col>) with a literal

@@ -35,13 +35,17 @@ _POSITION_DELETE_DDL = "file_path STRING, pos BIGINT"
 #: so 8 MB ≈ ≥4M positions)
 _DV_DRIVER_DECODE_MAX_BYTES = 8 * 1024 * 1024
 
-#: below this many driver-decoded positions the MOR mask is inlined as a
-#: literal scan filter (file == suffix AND pos IN (...)) instead of a
-#: broadcast anti-join — no delete-side scan, no broadcast exchange, no
-#: join node. InSet evaluation is O(1)/row; past the threshold the plan
-#: string and driver literal handling stop being worth it and the shared
-#: broadcast anti-join takes over.
-_DV_LITERAL_FILTER_MAX_POSITIONS = 10_000
+#: a file group whose vectors touch ONE of its files, with at most this
+#: many deleted positions, drops them with a literal scan filter (file ==
+#: suffix AND pos NOT IN (...)) instead of the broadcast anti-join: no
+#: broadcast exchange, no join node. Measured on a 24-file sf0.1
+#: lineitem (GROUP BY read, 4 cores, warm median of 9): one file with 1
+#: to 1,000 positions reads 15-20% faster through the filter; one file
+#: with 9,000 positions, two files (a tie), four files (10-28% slower)
+#: and 24 files (3x slower, and up to 10x on the first, compiling run)
+#: favour the anti-join — each more touched file is another OR term
+#: that re-evaluates the file-path expression on every row.
+_DV_LITERAL_FILTER_MAX_POSITIONS = 1_000
 
 
 def _suffix(path: str) -> str:
@@ -93,6 +97,7 @@ class RowDeletes:
                 "compaction (compact_iceberg_table) first"
             )
         self._sess = sess
+        self._root, self._snap = root, snap
         self._ctx: dict = {}
         if positions is None:
             positions = im.position_delete_paths(root, snap)
@@ -102,11 +107,11 @@ class RowDeletes:
             if positions and paths
             else []
         )
-        scanned = {_suffix(p) for p in paths}
+        self._scanned = {_suffix(p): p for p in paths}
         self.vectors = [
             r
             for r in im.deletion_vector_records(root, snap)
-            if _suffix(r["referenced_data_file"]) in scanned
+            if _suffix(r["referenced_data_file"]) in self._scanned
         ]
         self.equality = eq_all if equality is None else equality
         if self.equality:
@@ -136,6 +141,53 @@ class RowDeletes:
                 self._file_seqs, renames, self._name_history, self._ctx,
             )
         return df
+
+    def deleted_positions(self) -> "dict | None":
+        """``{scanned data file: sorted unique deleted positions}``, read
+        on the driver: position-delete parquet with pyarrow, deletion
+        vectors through the same decode as :meth:`apply`. Positions are
+        not range-checked against the files' row counts. None when the
+        deletes cannot be enumerated on the driver: equality deletes match
+        by value, not position, and delete files past
+        ``_DV_DRIVER_DECODE_MAX_BYTES`` are too large to gather here."""
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from cloudfloe_spark.sources import fsio
+
+        if self.equality:
+            return None
+        sizes = {
+            r["path"]: r["size"]
+            for r in im.position_delete_records(self._root, self._snap)
+        }
+        nbytes = sum(int(r["length"]) for r in self.vectors) + sum(
+            sizes.get(p) or float("inf") for p in self.positions
+        )
+        if nbytes > _DV_DRIVER_DECODE_MAX_BYTES:
+            return None
+        parts: dict = {}
+        for s, ps in _dv_decode_driver(self.vectors).items():
+            parts.setdefault(s, []).append(np.asarray(ps, dtype=np.int64))
+        for p in self.positions:
+            t = pq.read_table(
+                fsio.arrow_source(p), columns=["file_path", "pos"]
+            )
+            # a NULL key matches no row in the anti-join either
+            t = t.filter(
+                pc.and_(pc.is_valid(t["file_path"]), pc.is_valid(t["pos"]))
+            )
+            files = t["file_path"].combine_chunks().dictionary_encode()
+            codes = files.indices.to_numpy()
+            pos = t["pos"].to_numpy()
+            for i, f in enumerate(files.dictionary.to_pylist()):
+                if (s := _suffix(f)) in self._scanned:
+                    parts.setdefault(s, []).append(pos[codes == i])
+        return {
+            self._scanned[s]: np.unique(np.concatenate(a))
+            for s, a in parts.items()
+        }
 
 
 def position_delete_frame(sess, delete_paths: "list[str]"):
@@ -224,8 +276,8 @@ def _apply_deletion_vectors(
     one data file's Puffin blob, so a group holding none of the
     referenced files needs no delete machinery at all. Small delete sets
     decode DRIVER-side once (``ctx`` carries the decoded state across
-    file groups); tiny ones apply as a literal scan filter, the rest
-    through ONE shared broadcast anti-join frame. Past
+    file groups); a few positions of one file apply as a literal scan
+    filter, the rest through ONE shared broadcast anti-join frame. Past
     ``_DV_DRIVER_DECODE_MAX_BYTES`` of combined blob bytes the decode
     runs ON THE EXECUTORS — one task per vector reads its own blob from
     shared storage and emits that file's positions, so the deleted-row
@@ -247,18 +299,19 @@ def _apply_deletion_vectors(
     rel = {s: ps for s, ps in by_suffix.items() if s in hit}
     if not rel:
         return data  # every DV touching this group is empty
-    if sum(len(ps) for ps in by_suffix.values()) <= _DV_LITERAL_FILTER_MAX_POSITIONS:
-        # Literal mask: keep rows whose (file, pos) is not deleted. Only
-        # suffixes present in this group contribute terms. The mask is
-        # one SQL string: ``Column.isin`` would make a py4j call per
-        # position, the parser takes the whole list at once.
-        drop = " OR ".join(
-            f"(substring_index(_metadata.file_path, '/data/', -1) = "
-            f"'{_sql_string(s)}' AND _metadata.row_index IN "
-            f"({', '.join(map(str, ps))}))"
-            for s, ps in sorted(rel.items())
-        )
-        return data.filter(F.expr(f"NOT ({drop})"))
+    if len(rel) == 1:
+        ((s, ps),) = rel.items()
+        if len(ps) <= _DV_LITERAL_FILTER_MAX_POSITIONS:
+            # Literal mask: keep rows whose (file, pos) is not deleted.
+            # One SQL string: ``Column.isin`` would make a py4j call per
+            # position, the parser takes the whole list at once.
+            return data.filter(
+                F.expr(
+                    f"NOT (substring_index(_metadata.file_path, '/data/', -1)"
+                    f" = '{_sql_string(s)}' AND _metadata.row_index IN "
+                    f"({', '.join(map(str, ps))}))"
+                )
+            )
     if "frame" not in ctx:
         # One Arrow-backed frame for the whole scan, deduped driver-side
         # (no ``.distinct()`` exchange) and broadcast once.

@@ -794,9 +794,9 @@ def file_sequence_numbers(root: str, snapshot: dict) -> "dict[str, int]":
 
 
 def position_delete_records(root: str, snapshot: dict) -> list[dict]:
-    """Live position-delete files WITH their commit sequence numbers:
-    ``{"path", "seq"}`` — the ordering a changelog read needs to tell
-    in-range deletes from pre-range ones."""
+    """Live position-delete files WITH their commit sequence numbers and
+    sizes: ``{"path", "seq", "size"}`` — the ordering a changelog read
+    needs to tell in-range deletes from pre-range ones."""
     root_local = _norm_root(root)
     out = []
     for e in manifest_entries(root, snapshot):
@@ -807,6 +807,7 @@ def position_delete_records(root: str, snapshot: dict) -> list[dict]:
             {
                 "path": _relocate(f["file_path"], root_local),
                 "seq": e["sequence_number"],
+                "size": f.get("file_size_in_bytes"),
             }
         )
     return sorted(out, key=lambda d: (d["seq"], d["path"]))

@@ -36,6 +36,7 @@ before any parquet footer is opened.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import re
 import struct
@@ -470,6 +471,30 @@ def _join_leaves(node: Any) -> list[dict]:
     return out
 
 
+@functools.lru_cache(maxsize=64)
+def statement_ast(sql: str) -> Optional[dict]:
+    """DuckDB's ``json_serialize_sql`` AST of ``sql``, or None when it does
+    not parse. Memoized: the service asks once to match a statement's
+    shape and once to extract its conjuncts. Callers share the returned
+    dict and must not mutate it."""
+    try:
+        import duckdb
+
+        lit = sql.replace("'", "''")
+        # a cursor per call: the module-level default connection is not
+        # thread-safe, and service requests resolve concurrently
+        with duckdb.cursor() as cur:
+            raw = cur.execute(
+                f"SELECT json_serialize_sql('{lit}')"
+            ).fetchone()[0]
+        ast = json.loads(raw)
+    except Exception:
+        return None
+    if not isinstance(ast, dict) or ast.get("error"):
+        return None
+    return ast
+
+
 def extract_scan_conjuncts(
     sql: str, view_names: set[str]
 ) -> dict[str, list[tuple]]:
@@ -483,20 +508,8 @@ def extract_scan_conjuncts(
     IS NULL conjuncts are dropped (they are satisfiable by the null-
     extended rows an outer join fabricates — see _conjuncts_from_where).
     Any parse failure returns {} (every scan reads unpruned)."""
-    try:
-        import duckdb
-
-        lit = sql.replace("'", "''")
-        # a cursor per call: the module-level default connection is not
-        # thread-safe, and service requests resolve concurrently
-        with duckdb.cursor() as cur:
-            raw = cur.execute(
-                f"SELECT json_serialize_sql('{lit}')"
-            ).fetchone()[0]
-        ast = json.loads(raw)
-    except Exception:
-        return {}
-    if not isinstance(ast, dict) or ast.get("error"):
+    ast = statement_ast(sql)
+    if ast is None:
         return {}
 
     refs: dict[str, int] = {}

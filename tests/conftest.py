@@ -43,3 +43,37 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``count(fn)`` → ``(fn(), number of Spark jobs fn started)``,
+    counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"cf-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture()
+def plan_cache(monkeypatch):
+    """An empty Iceberg plan cache for one test, so hits and misses count
+    only that test's resolves and no earlier test's plan answers a read."""
+    from cloudfloe_spark.service import iceberg_local as il
+    from cloudfloe_spark.sources import fsio
+
+    cache = fsio.LRUCache(il._PLAN_CACHE_MAX)
+    monkeypatch.setattr(il, "_PLAN_CACHE", cache)
+    return cache

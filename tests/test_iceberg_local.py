@@ -2859,18 +2859,6 @@ def test_analyze_typed_columns_exact_ndv(spark, tmp_path):
 # --- process-wide plan cache ----------------------------------------------------
 
 
-@pytest.fixture()
-def plan_cache(monkeypatch):
-    """An empty plan cache for one test, so hits and misses count only
-    that test's resolves."""
-    from cloudfloe_spark.service import iceberg_local as il
-    from cloudfloe_spark.sources import fsio
-
-    cache = fsio.LRUCache(il._PLAN_CACHE_MAX)
-    monkeypatch.setattr(il, "_PLAN_CACHE", cache)
-    return cache
-
-
 def test_plan_cache_hits_unchanged_table_across_requests(
     spark, two_snapshot_table, plan_cache
 ):
@@ -2980,24 +2968,9 @@ def test_plan_cache_shared_by_conjuncts_that_prune_alike(
     assert (plan_cache.hits, len(plan_cache)) == (1, 2)
 
 
-def _spark_jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn started)``, counted under a
-    fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"cf-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cache):
+def test_position_deletes_add_no_spark_jobs_to_resolve(
+    spark, tmp_path, plan_cache, spark_jobs
+):
     """Data files read under the Iceberg schema and position-delete files
     under the spec's fixed schema, so resolving a scan starts no
     footer-inference job, with or without deletes."""
@@ -3012,7 +2985,7 @@ def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cac
     sql = f"SELECT id FROM iceberg_scan('{root}')"
 
     def resolve_jobs():
-        return _spark_jobs(spark, lambda: resolve_iceberg_reads(sess, sql))
+        return spark_jobs(lambda: resolve_iceberg_reads(sess, sql))
 
     _out, plain = resolve_jobs()
     target = im.live_data_paths(root, im.resolve_snapshot(root))[0]
@@ -3023,7 +2996,7 @@ def test_position_deletes_add_no_spark_jobs_to_resolve(spark, tmp_path, plan_cac
     assert sorted(r[0] for r in sess.sql(out).collect()) == [2, 3]
 
 
-def test_listing_frames_start_no_spark_jobs(spark, two_snapshot_table):
+def test_listing_frames_start_no_spark_jobs(spark, two_snapshot_table, spark_jobs):
     """Metadata listings are driver-built LocalRelations: resolving and
     collecting one starts no Spark job, empty listings included."""
     from cloudfloe_spark.service.iceberg_local import resolve_iceberg_reads
@@ -3035,8 +3008,7 @@ def test_listing_frames_start_no_spark_jobs(spark, two_snapshot_table):
         ("iceberg_metadata", True),
         ("iceberg_deletion_vectors", False),  # a v2 table has none
     ):
-        rows, jobs = _spark_jobs(
-            spark,
+        rows, jobs = spark_jobs(
             lambda: sess.sql(
                 resolve_iceberg_reads(sess, f"SELECT * FROM {fn}('{root}')")
             ).collect(),
